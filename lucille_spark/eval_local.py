@@ -434,6 +434,8 @@ def top_k(
     (score == k-th largest) break by smallest doc_id, selected with
     a second partition on the ids, so no input ordering is assumed."""
     n = ids.size
+    if k <= 0:
+        return ids[:0], scores[:0]
     if n == 0:
         return ids, scores
     if k >= n or n <= 4096:

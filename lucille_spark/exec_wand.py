@@ -7,12 +7,20 @@ Architecture (doc-partitioned, SURVEY.md §3.4):
       predicates, see _term_filter)──  [parquet predicate pushdown +
       row-group pruning: segments are sorted by term string within
       each shard partition]
-    ──groupBy(shard).applyInPandas(kernel)──  each shard decodes its
-      blocks (numpy varbyte), builds a ShardData and runs the SAME
+    ──groupBy(shard).applyInPandas(kernel)──  each shard turns its
+      rows into one BlockTable (numpy columns sorted by term, with
+      per-term row runs), decodes the blocks it needs in one
+      concatenated varbyte pass, builds a ShardData and runs the SAME
       evaluator as the oracle (eval_local.evaluate); emits its local
       top-k only
     ──orderBy(score desc, doc_id).limit(k)──  global merge of
       num_shards * k rows -> TakeOrderedAndProject (no full shuffle).
+
+The kernel touches pandas only at its entry (frame -> BlockTable) and
+exit (top-k -> frame): term runs, block overlap and decoding are numpy
+array operations, so a request's cost is the decode, not per-call
+DataFrame plumbing. LocalSearcher passes a pre-sorted BlockTable
+directly and skips the entry conversion too.
 
 Block-max pruning (BASELINE.json:6 "block-max WAND pruning"): for
 flat disjunctions/conjunctions of scored terms the kernel skips
@@ -31,12 +39,13 @@ build time — a vectorized MaxScore/BMW hybrid:
 For trees that are not flat term booleans the kernel decodes the
 (already term-filtered) blocks exhaustively — still numpy-vectorized
 and shard-local. Pruned and exhaustive paths are asserted equal in
-tests (tests/test_engine_wand.py).
+tests (tests/test_engine_wand.py, tests/test_property_pruning.py).
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
+from itertools import chain
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -96,6 +105,30 @@ def _local_deleted(deleted, dl_pdf) -> Optional[np.ndarray]:
     mask = dl_pdf["_del"].fillna(False).to_numpy(dtype=bool)
     arr = np.sort(dl_pdf.loc[mask, "doc_id"].to_numpy(dtype=np.int64))
     return arr if arr.size else None
+
+
+def _shard_universe(avgdl, dl_pdf, meta_cols, dead):
+    """-> (ShardData holding the live doc universe and meta columns
+    of the doclens slice `dl_pdf`, dl_pdf in doc_id order). The
+    slice is sorted only when its ids are not ascending already."""
+    sd = ShardData(avgdl=avgdl)
+    if dl_pdf is None or not len(dl_pdf):
+        return sd, dl_pdf
+    ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
+    if (ids[1:] < ids[:-1]).any():
+        dl_pdf = dl_pdf.sort_values("doc_id")
+        ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
+    sd.all_ids = ids
+    sd.all_dls = dl_pdf["doc_len"].to_numpy(dtype=np.int64)
+    for c in meta_cols:
+        if c in dl_pdf.columns:
+            sd.meta[c] = dl_pdf[c].to_numpy(dtype=object)
+    if dead is not None and ids.size:
+        live = ~_in_sorted(ids, dead)
+        sd.all_ids, sd.all_dls = ids[live], sd.all_dls[live]
+        for c in list(sd.meta):
+            sd.meta[c] = sd.meta[c][live]
+    return sd, dl_pdf
 
 
 class WandExecutor:
@@ -390,23 +423,10 @@ def _make_batch_kernel(
         if len(seg_pdf) == 0 and dl_pdf is None:
             return empty
         dead = _local_deleted(deleted, dl_pdf)
-        sd = ShardData(avgdl=avgdl)
-        if dl_pdf is not None and len(dl_pdf):
-            dl_pdf = dl_pdf.sort_values("doc_id")
-            sd.all_ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
-            sd.all_dls = dl_pdf["doc_len"].to_numpy(dtype=np.int64)
-            for c in meta_cols:
-                if c in dl_pdf.columns:
-                    sd.meta[c] = dl_pdf[c].to_numpy(dtype=object)
-            if dead is not None and sd.all_ids.size:
-                live = ~_in_sorted(sd.all_ids, dead)
-                sd.all_ids = sd.all_ids[live]
-                sd.all_dls = sd.all_dls[live]
-                for c in list(sd.meta):
-                    sd.meta[c] = sd.meta[c][live]
-        sd.postings.update(
-            build_postings_bulk(seg_pdf, pos_terms, decode, dead)
-        )
+        sd, _ = _shard_universe(avgdl, dl_pdf, meta_cols, dead)
+        sd.postings.update(decode_postings(
+            BlockTable.from_frame(seg_pdf), pos_terms, decode, dead
+        ))
         frames = []
         for qid, node in nodes.items():
             ids, scores = evaluate(node, sd)
@@ -478,33 +498,72 @@ def _term_filter(node: P.PNode, all_terms: List[str]):
 # ------------------------------------------------------------ kernel
 
 
-def _decode_block(
-    row, decode=varbyte_decode
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray, Optional[list]]:
-    gaps = decode(row.ids_delta).astype(np.int64)
-    ids = row.doc_id_base + np.cumsum(gaps)
-    tfs = decode(row.tfs).astype(np.int64)
-    dls = decode(row.dls).astype(np.int64)
-    poss = None
-    if row.pos_counts is not None:
-        counts = decode(row.pos_counts).astype(np.int64)
-        deltas = decode(row.positions).astype(np.int64)
-        if counts.size == 0:
-            poss = []
-        else:
-            # segmented cumsum in ONE pass: per-doc absolute
-            # positions = global cumsum minus the carry at each
-            # doc's segment start (a python loop of tiny np.cumsum
-            # calls here dominated predecode at 640k docs)
-            bounds = np.cumsum(counts)
-            cs = np.cumsum(deltas)
-            cs0 = np.concatenate((np.zeros(1, dtype=np.int64), cs))
-            carry = cs0[np.concatenate(
-                (np.zeros(1, dtype=np.int64), bounds[:-1])
-            )]
-            abs_pos = cs - np.repeat(carry, counts)
-            poss = np.split(abs_pos, bounds[:-1])
-    return ids, tfs, dls, poss
+class BlockTable:
+    """One kernel call's posting blocks as numpy columns, rows sorted
+    by (term, doc_id_base, block_id). Term `terms[i]` owns rows
+    `bounds[i]:bounds[i+1]` of every column, and `terms` is sorted, so
+    a query term or a term interval resolves with np.searchsorted
+    instead of a pandas mask, sort or groupby."""
+
+    INTS = ("doc_id_base", "doc_id_max", "n_docs", "max_tf")
+    BUFS = ("ids_delta", "tfs", "dls", "pos_counts", "positions")
+
+    def __init__(self, terms: np.ndarray, bounds: np.ndarray, cols: dict):
+        self.terms, self.bounds, self.cols = terms, bounds, cols
+
+    @classmethod
+    def from_frame(cls, pdf: pd.DataFrame) -> "BlockTable":
+        codes, terms = pd.factorize(
+            pdf["term"].to_numpy(dtype=object), sort=True
+        )
+        order = np.lexsort((
+            pdf["block_id"].to_numpy(), pdf["doc_id_base"].to_numpy(), codes,
+        ))
+        cols = {c: pdf[c].to_numpy(dtype=np.int64)[order] for c in cls.INTS}
+        for c in cls.BUFS:
+            cols[c] = pdf[c].to_numpy(dtype=object)[order]
+        cols["has_pos"] = pdf["pos_counts"].notna().to_numpy()[order]
+        bounds = np.searchsorted(codes[order], np.arange(terms.size + 1))
+        return cls(terms.astype(object), bounds, cols)
+
+    def __len__(self) -> int:
+        return int(self.bounds[-1])
+
+    def run(self, term: str) -> Optional[np.ndarray]:
+        """Row indexes of `term`'s blocks, or None when it is absent."""
+        i = int(np.searchsorted(self.terms, term))
+        if i < self.terms.size and self.terms[i] == term:
+            return np.arange(self.bounds[i], self.bounds[i + 1])
+        return None
+
+    def select(self, exact, intervals) -> "BlockTable":
+        """Sub-table of the terms in `exact` or inside any inclusive
+        (lo, hi) string interval (None = open end) — the bounds
+        pushdown.file_prune_bounds gives the parquet scan."""
+        t, n = self.terms, self.terms.size
+        if any(lo is None and hi is None for lo, hi in intervals):
+            return self
+        keep = np.zeros(n + 1, dtype=bool)
+        if exact:
+            q = np.array(sorted(exact), dtype=object)
+            i = np.searchsorted(t, q)
+            hit = i < n
+            hit[hit] = t[i[hit]] == q[hit]
+            keep[i[hit]] = True
+        for lo, hi in intervals:
+            a = 0 if lo is None else np.searchsorted(t, lo, "left")
+            b = n if hi is None else np.searchsorted(t, hi, "right")
+            keep[a:b] = True
+        tix = np.flatnonzero(keep[:n])
+        lens = np.diff(self.bounds)[tix]
+        bounds = np.zeros(tix.size + 1, dtype=np.int64)
+        np.cumsum(lens, out=bounds[1:])
+        rows = np.repeat(self.bounds[tix] - bounds[:-1], lens) + np.arange(
+            bounds[-1]
+        )
+        return BlockTable(
+            t[tix], bounds, {c: v[rows] for c, v in self.cols.items()}
+        )
 
 
 def _in_sorted(vals: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
@@ -515,52 +574,6 @@ def _in_sorted(vals: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     idx = np.searchsorted(sorted_arr, vals)
     idx[idx == sorted_arr.size] = 0
     return sorted_arr[idx] == vals
-
-
-def _build_posting(
-    rows: pd.DataFrame,
-    want_positions: bool,
-    decode=varbyte_decode,
-    deleted: Optional[np.ndarray] = None,
-) -> Posting:
-    ids_l, tfs_l, dls_l, pos_l = [], [], [], []
-    has_pos = True
-    for row in rows.itertuples():
-        ids, tfs, dls, poss = _decode_block(row, decode)
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-        dls_l.append(dls)
-        if poss is None:
-            has_pos = False
-        else:
-            pos_l.extend(poss)
-    ids = np.concatenate(ids_l)
-    tfs = np.concatenate(tfs_l)
-    dls = np.concatenate(dls_l)
-    keep_pos = has_pos and want_positions
-    if ids.size > 1 and (np.diff(ids) <= 0).any():
-        # runs from different build partitions may interleave doc
-        # ranges; evaluation requires ascending unique ids
-        order = np.argsort(ids, kind="mergesort")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-        if keep_pos:
-            pos_l = [pos_l[i] for i in order]
-    if deleted is not None and ids.size:
-        # tombstones drop out at decode time, BEFORE any scoring or
-        # pruning threshold — block upper bounds stored at build may
-        # still reflect a deleted doc's tf, which only makes them
-        # looser (still valid upper bounds), so pruning stays sound
-        live = ~_in_sorted(ids, deleted)
-        if not live.all():
-            if keep_pos:
-                pos_l = [p for p, m in zip(pos_l, live) if m]
-            ids, tfs, dls = ids[live], tfs[live], dls[live]
-    return Posting(
-        ids=ids,
-        tfs=tfs,
-        dls=dls,
-        positions=pos_l if keep_pos else None,
-    )
 
 
 def _csr_take(
@@ -582,138 +595,115 @@ def _csr_take(
     return flat[idx], nb
 
 
-def build_postings_bulk(
-    seg_pdf: pd.DataFrame,
+def _decode_values(decode, cols) -> np.ndarray:
+    """Decode a list of buffer columns into ONE int64 value stream.
+    Varbyte is self-delimiting, so the concatenation of every buffer
+    decodes exactly like separate decodes: one call for all blocks
+    and columns replaces a per-block loop of three or five calls.
+    Bitpack blocks carry headers and are not concatenation-safe, so
+    they decode one at a time."""
+    if decode is varbyte_decode:
+        buf = b"".join(chain.from_iterable(cols))
+        return varbyte_decode(buf).astype(np.int64)
+    parts = [decode(b) for col in cols for b in col]
+    return np.concatenate(parts).astype(np.int64)
+
+
+def _segmented_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Cumulative sum of `vals` restarting at every segment of
+    `counts` values (per-block doc-id gaps, per-doc position
+    deltas), in one pass."""
+    cs = np.cumsum(vals)
+    cs0 = np.concatenate(([0], cs))
+    return cs - np.repeat(cs0[np.cumsum(counts) - counts], counts)
+
+
+def decode_postings(
+    bt: BlockTable,
     pos_terms,  # bool (all/none) | set of terms wanting positions
     decode=varbyte_decode,
     deleted: Optional[np.ndarray] = None,
+    rows: Optional[np.ndarray] = None,
 ) -> "Dict[str, Posting]":
-    """Decode EVERY term's posting blocks in one vectorized pass.
+    """Decode blocks `rows` of `bt` (ascending row indexes; default
+    all) into one Posting per term, in one vectorized pass.
 
-    Varbyte is self-delimiting, so the concatenation of N block
-    buffers decodes exactly like N separate decodes — one
-    np.frombuffer + one vectorized decode for ALL blocks replaces
-    the per-block Python loop (the loop dominated LocalSearcher
-    predecode at 640k docs: ~750k blocks x per-call overhead).
-    Per-block value counts come from counting terminal bytes (high
-    bit clear) per block byte-range; per-block doc-id bases and
-    per-doc position deltas are restored with segmented cumsums.
-    Positions land in CSR shape (Posting.pos_flat/pos_bounds): one
-    array object per term instead of one tiny array per doc.
-
-    Non-varbyte codecs (bitpack blocks carry headers and are not
-    concatenation-safe) fall back to the per-term loop."""
-    out: Dict[str, Posting] = {}
-    if len(seg_pdf) == 0:
-        return out
-    if decode is not varbyte_decode:
-        for term, rows in seg_pdf.groupby("term", sort=True):
-            want = (
-                pos_terms
-                if isinstance(pos_terms, bool)
-                else str(term) in pos_terms
-            )
-            rows = rows.sort_values(["doc_id_base", "block_id"])
-            out[str(term)] = _build_posting(rows, want, decode, deleted)
-        return out
+    Per-block value counts are the block's n_docs; per-block doc-id
+    bases and per-doc position deltas are restored with segmented
+    cumsums. A term carries positions when they are wanted and every
+    one of its selected blocks stores them, decided per term: a block
+    without positions never strips them from another term. Positions
+    land in CSR shape (Posting.pos_flat/pos_bounds): one array object
+    per decode instead of one tiny array per doc."""
+    if rows is None:
+        rows = np.arange(len(bt))
+    if rows.size == 0:
+        return {}
+    c = bt.cols
+    tix = np.searchsorted(bt.bounds, rows, side="right") - 1
+    tb = np.concatenate((
+        [0], np.flatnonzero(tix[1:] != tix[:-1]) + 1, [rows.size]
+    ))
+    terms = bt.terms[tix[tb[:-1]]]
     if isinstance(pos_terms, bool):
-        parts = [(seg_pdf, pos_terms)]
+        want = np.full(terms.size, pos_terms)
     else:
-        m = seg_pdf["term"].astype(str).isin(pos_terms)
-        parts = [(seg_pdf[m], True), (seg_pdf[~m], False)]
-    for part, want in parts:
-        if len(part):
-            _bulk_varbyte_into(part, want, deleted, out)
+        want = np.array([t in pos_terms for t in terms], dtype=bool)
+    tpos = want & np.logical_and.reduceat(c["has_pos"][rows], tb[:-1])
+    rpos = np.repeat(tpos, np.diff(tb))
+    n = c["n_docs"][rows]
+    prows = rows[rpos]
+    N, Np = int(n.sum()), int(n[rpos].sum())
+    cols = [c["ids_delta"][rows], c["tfs"][rows], c["dls"][rows]]
+    if Np:
+        cols += [c["pos_counts"][prows], c["positions"][prows]]
+    vals = _decode_values(decode, cols)
+    ids = _segmented_cumsum(vals[:N], n) + np.repeat(
+        c["doc_id_base"][rows], n
+    )
+    # copies: postings (resident ones under predecode) must not keep
+    # the whole decoded buffer alive through views
+    tfs, dls = vals[N : 2 * N].copy(), vals[2 * N : 3 * N].copy()
+    pos_flat = pb = None
+    if Np:
+        pc = np.zeros(N, dtype=np.int64)
+        pc[np.repeat(rpos, n)] = vals[3 * N : 3 * N + Np]
+        pb = np.zeros(N + 1, dtype=np.int64)
+        np.cumsum(pc, out=pb[1:])
+        pos_flat = _segmented_cumsum(vals[3 * N + Np :], pc)
+    if vals.size != 3 * N + Np + (0 if pb is None else int(pb[-1])):
+        raise ValueError("posting blocks disagree with their n_docs")
+    vb = np.zeros(rows.size + 1, dtype=np.int64)
+    np.cumsum(n, out=vb[1:])
+    vb = vb[tb]  # per-term value ranges
+    if deleted is not None:
+        # tombstones drop out at decode time, BEFORE any scoring or
+        # pruning threshold — block upper bounds stored at build may
+        # still reflect a deleted doc's tf, which only makes them
+        # looser (still valid upper bounds), so pruning stays sound
+        live = ~_in_sorted(ids, deleted)
+        if not live.all():
+            keep = np.flatnonzero(live)
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+            if pb is not None:
+                pos_flat, pb = _csr_take(pos_flat, pb, keep)
+            vb = np.searchsorted(keep, vb)
+    out: Dict[str, Posting] = {}
+    for i, t in enumerate(terms):
+        a, b = vb[i], vb[i + 1]
+        p = Posting(ids=ids[a:b], tfs=tfs[a:b], dls=dls[a:b])
+        t_pb = pb[a : b + 1] if tpos[i] else None
+        if p.ids.size > 1 and (p.ids[1:] <= p.ids[:-1]).any():
+            # runs from different build partitions may interleave doc
+            # ranges; evaluation requires ascending unique ids
+            o = np.argsort(p.ids, kind="mergesort")
+            p.ids, p.tfs, p.dls = p.ids[o], p.tfs[o], p.dls[o]
+            if t_pb is not None:
+                p.pos_flat, p.pos_bounds = _csr_take(pos_flat, t_pb, o)
+        elif t_pb is not None:
+            p.pos_flat, p.pos_bounds = pos_flat, t_pb
+        out[str(t)] = p
     return out
-
-
-def _bulk_varbyte_into(
-    df: pd.DataFrame,
-    want_positions: bool,
-    deleted: Optional[np.ndarray],
-    out: "Dict[str, Posting]",
-) -> None:
-    df = df.sort_values(
-        ["term", "doc_id_base", "block_id"], kind="mergesort"
-    )
-    terms = df["term"].to_numpy(dtype=object)
-    bases = df["doc_id_base"].to_numpy(dtype=np.int64)
-
-    def _join(col: str):
-        bufs = df[col].to_numpy()
-        nb = len(bufs)
-        lens = np.fromiter(
-            (len(x) for x in bufs), dtype=np.int64, count=nb
-        )
-        offs = np.zeros(nb + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        return b"".join(bufs), offs
-
-    joined, offs = _join("ids_delta")
-    b8 = np.frombuffer(joined, dtype=np.uint8)
-    ends = np.flatnonzero((b8 & np.uint8(0x80)) == 0)
-    counts = np.diff(np.searchsorted(ends, offs))  # values per block
-    gaps = varbyte_decode(joined).astype(np.int64)
-    vstarts = np.zeros(counts.size + 1, dtype=np.int64)
-    np.cumsum(counts, out=vstarts[1:])
-    cs = np.cumsum(gaps)
-    cs0 = np.concatenate((np.zeros(1, dtype=np.int64), cs))
-    carry = cs0[vstarts[:-1]]
-    ids_all = np.repeat(bases, counts) + cs - np.repeat(carry, counts)
-    tfs_all = varbyte_decode(_join("tfs")[0]).astype(np.int64)
-    dls_all = varbyte_decode(_join("dls")[0]).astype(np.int64)
-
-    pos_flat = None
-    pb = None
-    if want_positions and df["pos_counts"].notna().all():
-        pcounts = varbyte_decode(_join("pos_counts")[0]).astype(np.int64)
-        pdeltas = varbyte_decode(_join("positions")[0]).astype(np.int64)
-        pb = np.zeros(pcounts.size + 1, dtype=np.int64)
-        np.cumsum(pcounts, out=pb[1:])
-        pcs = np.cumsum(pdeltas)
-        pcs0 = np.concatenate((np.zeros(1, dtype=np.int64), pcs))
-        carry2 = pcs0[pb[:-1]]
-        pos_flat = pcs - np.repeat(carry2, pcounts)
-
-    # per-term block ranges -> per-term posting ranges
-    tchange = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-    bb = np.concatenate(
-        (
-            np.zeros(1, dtype=np.int64),
-            tchange,
-            np.array([terms.size], dtype=np.int64),
-        )
-    )
-    for i in range(bb.size - 1):
-        blo, bhi = int(bb[i]), int(bb[i + 1])
-        a, b = int(vstarts[blo]), int(vstarts[bhi])
-        t_ids = ids_all[a:b]
-        t_tfs = tfs_all[a:b]
-        t_dls = dls_all[a:b]
-        t_pf = pos_flat
-        t_pb = pb[a : b + 1] if pb is not None else None
-        if t_ids.size > 1 and (np.diff(t_ids) <= 0).any():
-            # runs from different build partitions may interleave
-            order = np.argsort(t_ids, kind="mergesort")
-            t_ids, t_tfs, t_dls = t_ids[order], t_tfs[order], t_dls[order]
-            if t_pf is not None:
-                t_pf, t_pb = _csr_take(t_pf, t_pb, order)
-        if deleted is not None and t_ids.size:
-            live = ~_in_sorted(t_ids, deleted)
-            if not live.all():
-                keep = np.flatnonzero(live)
-                t_ids, t_tfs, t_dls = (
-                    t_ids[keep], t_tfs[keep], t_dls[keep],
-                )
-                if t_pf is not None:
-                    t_pf, t_pb = _csr_take(t_pf, t_pb, keep)
-        out[str(terms[blo])] = Posting(
-            ids=t_ids,
-            tfs=t_tfs,
-            dls=t_dls,
-            pos_flat=t_pf,
-            pos_bounds=t_pb,
-        )
 
 
 def _weighted_term(c: P.PNode, factor: float = 1.0):
@@ -790,26 +780,14 @@ def _make_kernel(
             out[c] = pd.Series([], dtype=object)
         return out
 
-    def eval_segments(seg_pdf: pd.DataFrame, dl_pdf=None) -> pd.DataFrame:
-        if len(seg_pdf) == 0 and dl_pdf is None:
+    def eval_segments(seg, dl_pdf=None) -> pd.DataFrame:
+        """`seg`: the shard's segment rows, as the applyInPandas
+        frame or an already sorted BlockTable (LocalSearcher)."""
+        if len(seg) == 0 and dl_pdf is None:
             return _empty_out()
+        bt = seg if isinstance(seg, BlockTable) else BlockTable.from_frame(seg)
         dead = _local_deleted(deleted, dl_pdf)
-        sd = ShardData(avgdl=avgdl)
-        if dl_pdf is not None and len(dl_pdf):
-            dl_pdf = dl_pdf.sort_values("doc_id")
-            sd.all_ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
-            sd.all_dls = dl_pdf["doc_len"].to_numpy(dtype=np.int64)
-            for c in meta_cols:
-                if c in dl_pdf.columns:
-                    sd.meta[c] = dl_pdf[c].to_numpy(dtype=object)
-            if dead is not None and sd.all_ids.size:
-                live = ~_in_sorted(sd.all_ids, dead)
-                sd.all_ids = sd.all_ids[live]
-                sd.all_dls = sd.all_dls[live]
-                for c in list(sd.meta):
-                    sd.meta[c] = sd.meta[c][live]
-
-        groups = dict(tuple(seg_pdf.groupby("term", sort=True)))
+        sd, dl_pdf = _shard_universe(avgdl, dl_pdf, meta_cols, dead)
 
         # profiling: ship this worker's block counters to the driver
         # (the module counters are worker-local; accumulators are the
@@ -817,10 +795,8 @@ def _make_kernel(
         if stats_acc is not None:
             _snap = dict(_PRUNE_STATS)
 
-        if flat is not None and len(groups) > 1:
-            ids, scores = _eval_flat_pruned(
-                flat, groups, sd, k, decode, dead
-            )
+        if flat is not None and bt.terms.size > 1:
+            ids, scores = _eval_flat_pruned(flat, bt, sd, k, decode, dead)
             if stats_acc is not None:
                 stats_acc[0].add(
                     _PRUNE_STATS["total_blocks"] - _snap["total_blocks"]
@@ -831,22 +807,21 @@ def _make_kernel(
                 )
         else:
             if stats_acc is not None:
-                nb = sum(len(r) for r in groups.values())
-                stats_acc[0].add(nb)
-                stats_acc[1].add(nb)  # exhaustive path decodes all
+                stats_acc[0].add(len(bt))
+                stats_acc[1].add(len(bt))  # exhaustive path decodes all
             # one vectorized decode for every term's blocks (a term
             # may arrive as several disjoint doc-range runs from
-            # different build partitions; the bulk builder restores
+            # different build partitions; the decoder restores
             # ascending ids per term)
             sd.postings.update(
-                build_postings_bulk(seg_pdf, bool(want_pos), decode, dead)
+                decode_postings(bt, bool(want_pos), decode, dead)
             )
             ids, scores = evaluate(node, sd)
         ids, scores = top_k(ids, scores, k)
         out = pd.DataFrame({"doc_id": ids, "score": scores})
         if meta_out:
             if dl_pdf is not None and len(dl_pdf) and len(out):
-                # dl_pdf is doc_id-sorted above; positional lookup of
+                # dl_pdf is doc_id-sorted; positional lookup of
                 # the local top-k ids (every id came from this slice)
                 dl_ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
                 pos = np.searchsorted(dl_ids, ids)
@@ -868,7 +843,7 @@ def _make_kernel(
 
 def _eval_flat_pruned(
     flat,
-    groups,
+    bt: BlockTable,
     sd: ShardData,
     k: int,
     decode=varbyte_decode,
@@ -885,12 +860,13 @@ def _eval_flat_pruned(
     def _adl(t: str) -> float:
         # per-field norms: a field term carries its field's avgdl
         return terms[t].avgdl or sd.avgdl
-    # per-term block tables present in this shard
+    # per-term block row runs present in this shard, in sorted term
+    # order: ties in the decode orders below break alphabetically
     avail = {}
-    for term, rows in groups.items():
-        term = str(term)
-        if term in terms:
-            avail[term] = rows.sort_values(["doc_id_base", "block_id"])
+    for term in sorted(terms):
+        rows = bt.run(term)
+        if rows is not None:
+            avail[term] = rows
     if kind == "and" and len(avail) < len(pterms):
         return np.empty(0, np.int64), np.empty(0, np.float64)
     if not avail:
@@ -903,25 +879,34 @@ def _eval_flat_pruned(
         return term_score_np(pt.sim, tfs, dls, pt.idf, _adl(t), pt.tw)
 
     stats = _PRUNE_STATS
-    stats["total_blocks"] += sum(len(r) for r in avail.values())
+    stats["total_blocks"] += sum(r.size for r in avail.values())
+
+    def _decode(t: str, rows: np.ndarray) -> Posting:
+        stats["decoded_blocks"] += rows.size
+        return decode_postings(bt, False, decode, deleted, rows)[t]
+
+    def _overlapping(rows: np.ndarray, cand_ids: np.ndarray) -> np.ndarray:
+        """The rows whose exact [doc_id_base, doc_id_max] range holds
+        at least one candidate id (iff searchsorted moves)."""
+        lo = np.searchsorted(cand_ids, bt.cols["doc_id_base"][rows], "left")
+        hi = np.searchsorted(cand_ids, bt.cols["doc_id_max"][rows], "right")
+        return rows[hi > lo]
 
     if kind == "and":
         # decode rarest term (fewest postings) fully
-        order = sorted(avail, key=lambda t: int(avail[t]["n_docs"].sum()))
+        n_docs = bt.cols["n_docs"]
+        order = sorted(avail, key=lambda t: int(n_docs[avail[t]].sum()))
         first = order[0]
-        p = _build_posting(avail[first], False, decode, deleted)
-        stats["decoded_blocks"] += len(avail[first])
+        p = _decode(first, avail[first])
         cand_ids = p.ids
         score = _score(first, p.tfs, p.dls)
         for t in order[1:]:
-            rows = avail[t]
             if cand_ids.size == 0:
                 return np.empty(0, np.int64), np.empty(0, np.float64)
-            sel = _blocks_overlapping(rows, cand_ids)
-            stats["decoded_blocks"] += int(sel.sum())
-            if not sel.any():
+            sel = _overlapping(avail[t], cand_ids)
+            if not sel.size:
                 return np.empty(0, np.int64), np.empty(0, np.float64)
-            pt = _build_posting(rows[sel], False, decode, deleted)
+            pt = _decode(t, sel)
             common, ia, ib = np.intersect1d(
                 cand_ids, pt.ids, assume_unique=True, return_indices=True
             )
@@ -941,7 +926,7 @@ def _eval_flat_pruned(
     ubs = {
         t: term_upper_bound(
             terms[t].sim,
-            int(avail[t]["max_tf"].max()),
+            int(bt.cols["max_tf"][avail[t]].max()),
             terms[t].idf,
             terms[t].tw,
         )
@@ -959,23 +944,19 @@ def _eval_flat_pruned(
             ]
         if threshold > remaining:
             for t2 in order[i:]:
-                rows = avail[t2]
                 if acc_ids.size == 0:
                     break
-                sel = _blocks_overlapping(rows, acc_ids)
-                stats["decoded_blocks"] += int(sel.sum())
-                if not sel.any():
+                sel = _overlapping(avail[t2], acc_ids)
+                if not sel.size:
                     continue
-                pt = _build_posting(rows[sel], False, decode, deleted)
+                pt = _decode(t2, sel)
                 common, ia, ib = np.intersect1d(
                     acc_ids, pt.ids, assume_unique=True, return_indices=True
                 )
                 if common.size:
                     acc_sc[ia] += _score(t2, pt.tfs[ib], pt.dls[ib])
             return acc_ids, acc_sc
-        rows = avail[t]
-        stats["decoded_blocks"] += len(rows)
-        pt = _build_posting(rows, False, decode, deleted)
+        pt = _decode(t, avail[t])
         sc = _score(t, pt.tfs, pt.dls)
         acc_ids, acc_sc = _merge_acc(acc_ids, acc_sc, pt.ids, sc)
         remaining -= ubs[t]
@@ -992,17 +973,6 @@ def _merge_acc(ids_a, sc_a, ids_b, sc_b):
     pb = np.searchsorted(all_ids, ids_b)
     out[pb] += sc_b
     return all_ids, out
-
-
-def _blocks_overlapping(rows: pd.DataFrame, cand_ids: np.ndarray) -> np.ndarray:
-    """Boolean mask of blocks whose exact [doc_id_base, doc_id_max]
-    range contains at least one candidate id."""
-    base = rows["doc_id_base"].to_numpy(dtype=np.int64)
-    hi = rows["doc_id_max"].to_numpy(dtype=np.int64)
-    # a candidate exists in [base, hi] iff searchsorted moves
-    lo_pos = np.searchsorted(cand_ids, base, side="left")
-    hi_pos = np.searchsorted(cand_ids, hi, side="right")
-    return hi_pos > lo_pos
 
 
 _PRUNE_STATS = {"total_blocks": 0, "decoded_blocks": 0}

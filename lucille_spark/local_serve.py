@@ -7,12 +7,15 @@ fixed Spark job overhead at interactive corpus sizes (BENCH:
 fits in one process — a shard, a tenant partition, a time slice —
 the right shape is Lucene's: an in-process reader. `LocalSearcher`
 loads the segment and doclens tables ONCE (the only Spark jobs it
-ever runs), then answers queries in single-digit milliseconds by
-running the SAME pandas kernel the distributed WAND executor ships
-to workers (`exec_wand._make_kernel`) — one code path, so embedded
-results are bit-identical to cluster results by construction, and
-every kernel feature rides along (block-max pruning, positions,
-tombstones, meta filters, per-field similarity).
+ever runs), then answers queries in about a millisecond by running
+the SAME shard kernel the distributed WAND executor ships to workers
+(`exec_wand._make_kernel`) — one code path, so embedded results are
+bit-identical to cluster results by construction, and every kernel
+feature rides along (block-max pruning, positions, tombstones, meta
+filters, per-field similarity). Without predecode the segment table
+is held as one term-sorted `exec_wand.BlockTable`: a request slices
+its terms' row runs with np.searchsorted and hands them to the
+kernel, which decodes them on numpy columns.
 
 At 100 TB this is not a replacement for the shard-parallel path:
 it is the per-executor sidecar / edge-cache shape — pin a hot
@@ -65,7 +68,7 @@ class LocalSearcher:
         self.prune = prune
         self.avgdl = float(self.ix.stats["avg_dl"])
         self.meta_cols = list(self.ix.stats.get("meta_cols", []))
-        from lucille_spark.exec_wand import DECODERS
+        from lucille_spark.exec_wand import DECODERS, BlockTable
 
         self.decode = DECODERS[self.ix.stats.get("codec", "varbyte")]
         # ---- the one-time loads (the ONLY Spark jobs) ----
@@ -84,34 +87,25 @@ class LocalSearcher:
             if predecode
             else None
         )
+        # per-query decode: the blocks as term-sorted numpy columns
+        self._blocks = None if predecode else BlockTable.from_frame(self.seg_pdf)
 
     def _predecode(self, full: bool = False):
-        import numpy as np
+        from lucille_spark.exec_wand import (
+            BlockTable, _shard_universe, decode_postings,
+        )
 
-        from lucille_spark.eval_local import ShardData
-        from lucille_spark.exec_wand import build_postings_bulk, _in_sorted
-
-        sd = ShardData(avgdl=self.avgdl)
-        dl = self.dl_pdf
-        sd.all_ids = dl["doc_id"].to_numpy(dtype=np.int64)
-        sd.all_dls = dl["doc_len"].to_numpy(dtype=np.int64)
-        for c in dl.columns:
-            if c not in ("doc_id", "doc_len"):
-                sd.meta[c] = dl[c].to_numpy(dtype=object)
-        if self.deleted is not None and sd.all_ids.size:
-            live = ~_in_sorted(sd.all_ids, self.deleted)
-            sd.all_ids = sd.all_ids[live]
-            sd.all_dls = sd.all_dls[live]
-            for c in list(sd.meta):
-                sd.meta[c] = sd.meta[c][live]
+        meta = [c for c in self.dl_pdf.columns if c not in ("doc_id", "doc_len")]
+        sd, _ = _shard_universe(self.avgdl, self.dl_pdf, meta, self.deleted)
         # one vectorized decode of every block (varbyte concatenation
         # is decode-exact); positions land CSR — at 640k docs this
         # replaced a 128 s per-block Python loop with ~15 s of
         # whole-array numpy (lazy positions; ~35 s "full") and cut
         # resident positions from millions of tiny arrays to one
         # array + bounds per term
-        sd.postings = build_postings_bulk(
-            self.seg_pdf, bool(full), self.decode, self.deleted
+        sd.postings = decode_postings(
+            BlockTable.from_frame(self.seg_pdf), bool(full), self.decode,
+            self.deleted,
         )
         if not full:
             sd.pos_loader = self._load_positions
@@ -121,13 +115,11 @@ class LocalSearcher:
         """ShardData.pos_loader hook: decode ONE term's positions on
         first phrase use and swap the enriched Posting in (memoized
         by being stored back into sd.postings)."""
-        from lucille_spark.exec_wand import build_postings_bulk
+        from lucille_spark.exec_wand import BlockTable, decode_postings
 
         rows = self.seg_pdf[self.seg_pdf["term"] == term]
-        if not len(rows):
-            return None
-        p = build_postings_bulk(
-            rows, True, self.decode, self.deleted
+        p = decode_postings(
+            BlockTable.from_frame(rows), True, self.decode, self.deleted
         ).get(str(term))
         if p is None:
             return None
@@ -229,37 +221,15 @@ class LocalSearcher:
             self.decode,
             self.deleted,
         )
-        # slice the in-memory segment table with the SAME bounds the
-        # distributed path pushes to parquet (exact terms + string
-        # intervals from expansion predicates — conservative, so the
-        # kernel always sees every posting it may touch)
+        # slice the block table with the SAME bounds the distributed
+        # path pushes to parquet (exact terms + string intervals from
+        # expansion predicates — conservative, so the kernel always
+        # sees every posting it may touch); the kernel's top-k is
+        # already in (score desc, doc_id asc) order
         from lucille_spark.pushdown import file_prune_bounds
 
-        segs = self.seg_pdf
-        exact, intervals = file_prune_bounds(node)
-        if not any(
-            lo is None and hi is None for lo, hi in intervals
-        ):
-            mask = segs["term"].isin(set(exact))
-            for lo, hi in intervals:
-                m = pd.Series(True, index=segs.index)
-                if lo is not None:
-                    m &= segs["term"] >= lo
-                if hi is not None:
-                    m &= segs["term"] <= hi
-                mask |= m
-            segs = segs[mask]
-        if need_uni:
-            out = kernel(segs, self.dl_pdf)
-        else:
-            out = kernel(segs)
-        return (
-            out.sort_values(
-                ["score", "doc_id"], ascending=[False, True]
-            )
-            .head(int(k))
-            .reset_index(drop=True)
-        )
+        segs = self._blocks.select(*file_prune_bounds(node))
+        return kernel(segs, self.dl_pdf) if need_uni else kernel(segs)
 
     def search_many(
         self, queries, k: int = 10, synonyms=None

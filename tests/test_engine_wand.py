@@ -1,8 +1,6 @@
 """WAND/segment executor: rank identity vs oracle on the reference
 query set, and pruned == exhaustive (block-max soundness)."""
 
-import numpy as np
-import pandas as pd
 import pytest
 
 from tests.queryset import REFERENCE_QUERIES
@@ -36,11 +34,13 @@ def test_pruned_equals_exhaustive_direct(unit_index):
     from lucille_spark import plans as P
     from lucille_spark.eval_local import evaluate, top_k
     from lucille_spark.exec_wand import (
+        BlockTable,
         _eval_flat_pruned,
         _flat_terms,
         get_prune_stats,
         reset_prune_stats,
     )
+    from tests.blocks import segment_rows
 
     ix, oracle, stats = unit_index
     sd = oracle.sd
@@ -49,47 +49,14 @@ def test_pruned_equals_exhaustive_direct(unit_index):
         node = oracle.plan(qs)
         flat = _flat_terms(node)
         assert flat is not None, qs
-        # fake per-term block tables from the oracle postings with
-        # block size 16 so pruning has blocks to skip
-        groups = {}
-        for t in sorted({pt.term for pt in flat[1]}):
-            p = sd.postings[t]
-            rows = []
-            for b, lo in enumerate(range(0, p.ids.size, 16)):
-                hi = min(lo + 16, p.ids.size)
-                rows.append(
-                    {
-                        "block_id": b,
-                        "doc_id_base": int(p.ids[lo]),
-                        "doc_id_max": int(p.ids[hi - 1]),
-                        "n_docs": hi - lo,
-                        "_ids": p.ids[lo:hi],
-                        "_tfs": p.tfs[lo:hi],
-                        "_dls": p.dls[lo:hi],
-                        "max_tf": int(p.tfs[lo:hi].max()),
-                    }
-                )
-            groups[t] = pd.DataFrame(rows)
+        # real varbyte blocks cut from the oracle postings with block
+        # size 16 so pruning has blocks to skip
+        terms = sorted({pt.term for pt in flat[1]})
+        bt = BlockTable.from_frame(
+            segment_rows({t: sd.postings[t] for t in terms}, 16)
+        )
         reset_prune_stats()
-        import lucille_spark.exec_wand as W
-
-        # monkeypatch _build_posting to read the fake raw blocks
-        orig = W._build_posting
-
-        def fake_build(rows, want_positions, *_decode):
-            from lucille_spark.eval_local import Posting
-
-            return Posting(
-                ids=np.concatenate([r for r in rows["_ids"]]),
-                tfs=np.concatenate([r for r in rows["_tfs"]]),
-                dls=np.concatenate([r for r in rows["_dls"]]),
-            )
-
-        W._build_posting = fake_build
-        try:
-            ids_p, sc_p = _eval_flat_pruned(flat, groups, sd, 5)
-        finally:
-            W._build_posting = orig
+        ids_p, sc_p = _eval_flat_pruned(flat, bt, sd, 5)
         ids_e, sc_e = evaluate(node, sd)
         top_p = _ranked(zip(*top_k(ids_p, sc_p, 5)))
         top_e = _ranked(zip(*top_k(ids_e, sc_e, 5)))

@@ -3,13 +3,13 @@ evaluation on RANDOM posting sets and random flat boolean queries
 (hypothesis; pure numpy — no Spark session needed)."""
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lucille_spark import plans as P
 from lucille_spark.eval_local import Posting, ShardData, evaluate, top_k
 from lucille_spark.scoring import idf as _idf
+from tests.blocks import segment_rows
 
 
 def _mk_corpus(rng_seed: int, n_docs: int, n_terms: int):
@@ -27,25 +27,6 @@ def _mk_corpus(rng_seed: int, n_docs: int, n_terms: int):
         )
     sd = ShardData(avgdl=float(dls.mean()), postings=postings)
     return sd, n_docs
-
-
-def _blockify(p: Posting, idf_t: float, block: int) -> pd.DataFrame:
-    rows = []
-    for b, lo in enumerate(range(0, p.ids.size, block)):
-        hi = min(lo + block, p.ids.size)
-        rows.append(
-            {
-                "block_id": b,
-                "doc_id_base": int(p.ids[lo]),
-                "doc_id_max": int(p.ids[hi - 1]),
-                "n_docs": hi - lo,
-                "_ids": p.ids[lo:hi],
-                "_tfs": p.tfs[lo:hi],
-                "_dls": p.dls[lo:hi],
-                "max_tf": int(p.tfs[lo:hi].max()),
-            }
-        )
-    return pd.DataFrame(rows)
 
 
 @given(
@@ -71,25 +52,9 @@ def test_pruned_equals_exhaustive_random(seed, n_docs, n_terms, is_and, k, block
         node = P.PBool((), tuple(pterms), (), 1)
         flat = ("or", pterms)
 
-    groups = {
-        t: _blockify(p, pt.idf, block)
-        for (t, p), pt in zip(sd.postings.items(), pterms)
-    }
-
-    orig = W._build_posting
-
-    def fake_build(rows, want_positions, *_decode):
-        return Posting(
-            ids=np.concatenate(list(rows["_ids"])),
-            tfs=np.concatenate(list(rows["_tfs"])),
-            dls=np.concatenate(list(rows["_dls"])),
-        )
-
-    W._build_posting = fake_build
-    try:
-        ids_p, sc_p = W._eval_flat_pruned(flat, groups, sd, k)
-    finally:
-        W._build_posting = orig
+    # real varbyte blocks: the property covers the decoder too
+    bt = W.BlockTable.from_frame(segment_rows(sd.postings, block))
+    ids_p, sc_p = W._eval_flat_pruned(flat, bt, sd, k)
     ids_e, sc_e = evaluate(node, sd)
 
     tp = list(zip(*[a.tolist() for a in top_k(ids_p, sc_p, k)]))
