@@ -12,9 +12,12 @@ One evaluator, two data paths -> the distributed engine cannot
 semantically drift from the oracle; only block decoding and the
 shard/merge plumbing differ (and those are property-tested).
 
-All arrays are numpy (ids int64 sorted ascending, scores float64);
-no per-row Python loops except over *query* terms / child nodes
-(tiny). Scoring per lucille_spark.scoring.
+All arrays are numpy (ids int64 sorted ascending, scores float64).
+Every step is a whole-array pass that loops in Python only over
+*query* terms / child nodes (tiny); the exceptions are sloppy phrases
+(slop > 0, one ``_ordered_within`` call per candidate doc) and regex
+metadata filters (one ``fullmatch`` per doc). Scoring per
+lucille_spark.scoring.
 """
 
 from __future__ import annotations
@@ -36,10 +39,10 @@ class Posting:
     dls: np.ndarray            # int64 aligned (doc length)
     positions: Optional[list] = None  # list of int64 arrays, aligned
     # CSR alternative to `positions` (one flat array + row bounds):
-    # doc i's positions are pos_flat[pos_bounds[i]:pos_bounds[i+1]].
-    # Predecoded resident postings use this shape — one array object
-    # instead of millions of tiny per-doc arrays (memory + decode
-    # speed); transient per-query postings keep the list shape.
+    # doc i's positions are pos_flat[pos_bounds[i]:pos_bounds[i+1]],
+    # ascending. Every decoded posting (exec_wand.decode_postings)
+    # has this shape; postings built from raw docs (the oracle,
+    # percolate) carry the list shape, which `csr()` converts once.
     pos_flat: Optional[np.ndarray] = None
     pos_bounds: Optional[np.ndarray] = None
     # single-entry memo for the term score array: resident postings
@@ -57,6 +60,20 @@ class Posting:
             b = self.pos_bounds
             return self.pos_flat[b[i]:b[i + 1]]
         return self.positions[i]
+
+    def csr(self) -> Tuple[np.ndarray, np.ndarray]:
+        """-> (pos_flat, pos_bounds); a list-shaped posting is
+        converted on first use and keeps the CSR arrays."""
+        if self.pos_flat is None:
+            b = np.zeros(len(self.positions) + 1, dtype=np.int64)
+            np.cumsum([x.size for x in self.positions], out=b[1:])
+            self.pos_flat = (
+                np.concatenate(self.positions).astype(np.int64, copy=False)
+                if self.positions
+                else np.empty(0, dtype=np.int64)
+            )
+            self.pos_bounds = b
+        return self.pos_flat, self.pos_bounds
 
 
 @dataclass
@@ -177,6 +194,12 @@ def _eval_bool(node: P.PBool, sd: ShardData) -> Tuple[np.ndarray, np.ndarray]:
     should = [evaluate(c, sd) for c in node.should]
 
     if must:
+        dense = _dense_conjunction(node, must, should)
+        if dense is not None:
+            ids, scores = dense
+            if ids.size == 0:
+                return _EMPTY
+            return _apply_must_not(node, sd, ids, scores)
         ids = must[0][0]
         for m_ids, _ in must[1:]:
             ids = np.intersect1d(ids, m_ids, assume_unique=True)
@@ -226,6 +249,39 @@ def _eval_bool(node: P.PBool, sd: ShardData) -> Tuple[np.ndarray, np.ndarray]:
             scores[mask] += c_sc[pos]
 
     return _apply_must_not(node, sd, ids, scores)
+
+
+def _dense_conjunction(node: P.PBool, must, should):
+    """Scatter-add over the span the must children share: per doc the
+    child scores add in child order (must, then should), exactly as
+    the sort-based gather in `_eval_bool` does, so the floats are
+    bitwise identical. A lone must child is returned as is. ->
+    (ids, scores), or None when the span is too sparse for a dense
+    accumulator."""
+    if len(must) == 1 and not should:
+        return must[0]
+    if any(c_ids.size == 0 for c_ids, _ in must):
+        return _EMPTY
+    lo = max(int(c_ids[0]) for c_ids, _ in must)
+    hi = min(int(c_ids[-1]) for c_ids, _ in must)
+    if lo > hi:
+        return _EMPTY
+    if not _span_ok(lo, hi, sum(c_ids.size for c_ids, _ in must)):
+        return None
+    # one hit counter: a must hit weighs more than all should hits
+    # together, so cnt >= need means every must child matched and at
+    # least min_should should children did
+    w = len(should) + 1
+    need = len(must) * w + (node.min_should if should else 0)
+    acc = np.zeros(hi - lo + 1, dtype=np.float64)
+    cnt = np.zeros(hi - lo + 1, dtype=np.int32)
+    for i, (c_ids, c_sc) in enumerate(must + should):
+        a, b = np.searchsorted(c_ids, (lo, hi + 1))
+        off = c_ids[a:b] - lo
+        acc[off] += c_sc[a:b]
+        cnt[off] += w if i < len(must) else 1
+    m = np.flatnonzero(cnt >= need)
+    return m + lo, acc[m]
 
 
 def _apply_must_not(
@@ -308,48 +364,82 @@ def _eval_phrase(node: P.PPhrase, sd: ShardData) -> Tuple[np.ndarray, np.ndarray
         return _EMPTY
     # align positions per doc
     idx = [np.searchsorted(p.ids, ids) for p in ps]
-    m = len(ps)
-    span = m + node.slop  # max allowed window length is m-1+slop+1
-    out_ids: List[int] = []
-    out_tf: List[int] = []
-    out_dl: List[int] = []
-    for row, doc in enumerate(ids):
-        pos_lists = [ps[k].pos(idx[k][row]) for k in range(m)]
-        if node.slop == 0:
-            starts = pos_lists[0]
-            for k in range(1, m):
-                starts = starts[
-                    _member_unsorted(starts + k, pos_lists[k])
-                ]
-                if starts.size == 0:
-                    break
-            tf = int(starts.size)
-        else:
-            tf = 1 if _ordered_within(pos_lists, m - 1 + node.slop) else 0
-        if tf > 0:
-            out_ids.append(int(doc))
-            out_tf.append(tf)
-            out_dl.append(int(ps[0].dls[idx[0][row]]))
-    if not out_ids:
+    if node.slop == 0:
+        tf = _exact_phrase_tf(node.terms, ps, idx)
+    else:
+        m = len(ps)
+        tf = np.array(
+            [
+                _ordered_within(
+                    [p.pos(ix[row]) for p, ix in zip(ps, idx)],
+                    m - 1 + node.slop,
+                )
+                for row in range(ids.size)
+            ],
+            dtype=np.int64,
+        )
+    hit = np.flatnonzero(tf)
+    if hit.size == 0:
         return _EMPTY
-    oid = np.array(out_ids, dtype=np.int64)
     sc = term_score_np(
         node.sim,
-        np.array(out_tf, dtype=np.int64),
-        np.array(out_dl, dtype=np.int64),
+        tf[hit],
+        ps[0].dls[idx[0][hit]].astype(np.int64, copy=False),
         node.idf,
         sd.avgdl if node.avgdl is None else node.avgdl,
         node.tw,
     )
-    return oid, sc
+    return ids[hit], sc
 
 
-def _member_unsorted(vals: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
-    if sorted_arr.size == 0:
-        return np.zeros(vals.size, dtype=bool)
-    pos = np.searchsorted(sorted_arr, vals)
-    pos[pos == sorted_arr.size] = sorted_arr.size - 1
-    return sorted_arr[pos] == vals
+def _exact_phrase_tf(
+    terms, ps: List[Posting], idx: List[np.ndarray]
+) -> np.ndarray:
+    """Exact (slop 0) phrase frequency of each candidate doc row, in
+    one pass over CSR positions. Each position gets the key
+    ``row * span + pos``, ascending per term (positions ascend within
+    a doc). The term with the fewest positions anchors: an anchor at
+    key ``k`` (term a) starts a match iff every term j has the key
+    ``k - a + j``, tested with np.searchsorted. tf per row is the
+    count of surviving anchors, i.e. of phrase start positions."""
+    m = len(ps)
+    pos: Dict[str, np.ndarray] = {}
+    keys: Dict[str, np.ndarray] = {}
+    for t, p, ix in zip(terms, ps, idx):
+        if t in pos:
+            continue
+        flat, bounds = p.csr()
+        starts = bounds[ix]
+        counts = bounds[ix + 1] - starts
+        ends = np.cumsum(counts)
+        # flat index of each selected position: its rank in the
+        # selection, shifted by its row's offset into `flat`
+        at = np.arange(ends[-1], dtype=np.int64)
+        at += np.repeat(starts - (ends - counts), counts)
+        pos[t] = flat[at].astype(np.int64, copy=False)
+        keys[t] = np.repeat(np.arange(ix.size, dtype=np.int64), counts)
+    if any(v.size == 0 for v in pos.values()):
+        return np.zeros(idx[0].size, dtype=np.int64)
+    # a probe moves a position by at most m-1 either way, so with
+    # span > max pos + m-1 an upward probe stays in its row, and a
+    # downward one that crosses into the previous row lands above
+    # every real position there
+    span = max(int(v.max()) for v in pos.values()) + m
+    for t, k in keys.items():
+        k *= span
+        k += pos[t]
+    a = min(range(m), key=lambda j: keys[terms[j]].size)
+    anchor = keys[terms[a]]
+    for j in sorted(range(m), key=lambda j: keys[terms[j]].size):
+        if j == a:
+            continue
+        target = keys[terms[j]]
+        probe = anchor + (j - a)
+        loc = np.minimum(np.searchsorted(target, probe), target.size - 1)
+        anchor = anchor[target[loc] == probe]
+        if anchor.size == 0:
+            break
+    return np.bincount(anchor // span, minlength=idx[0].size)
 
 
 def _ordered_within(pos_lists: List[np.ndarray], max_gap: int) -> bool:
@@ -427,27 +517,25 @@ def _eval_meta(node: P.PMetaFilter, sd: ShardData) -> Tuple[np.ndarray, np.ndarr
 def top_k(
     ids: np.ndarray, scores: np.ndarray, k: int
 ) -> Tuple[np.ndarray, np.ndarray]:
-    """(score desc, doc_id asc) top-k. For k << n this is O(n)
-    selection (np.partition on the score) + a lexsort of only the
-    selected candidates — a full lexsort of a 500k-doc match set
-    costs ~60 ms, the selection ~5 ms, same result. Boundary ties
-    (score == k-th largest) break by smallest doc_id, selected with
-    a second partition on the ids, so no input ordering is assumed."""
+    """(score desc, doc_id asc) top-k of an `evaluate` result, whose
+    ids are strictly ascending — every caller passes one — so a stable
+    sort by descending score is already that order. For k < n this is
+    O(n) plus a sort of < k rows: np.partition finds the k-th largest
+    score; the rows above it are kept and sorted; the boundary ties
+    (score == k-th) follow as the first such rows in input order,
+    i.e. the smallest ids. Returns fresh arrays (k > 0)."""
     n = ids.size
     if k <= 0:
         return ids[:0], scores[:0]
-    if n == 0:
-        return ids, scores
-    if k >= n or n <= 4096:
-        order = np.lexsort((ids, -scores))[:k]
-        return ids[order], scores[order]
-    kth = np.partition(scores, n - k)[n - k]  # k-th largest score
-    gt = np.flatnonzero(scores > kth)
-    need = k - gt.size  # >= 1: at most k-1 scores exceed the k-th
-    eq = np.flatnonzero(scores == kth)
-    if eq.size > need:
-        eq = eq[np.argpartition(ids[eq], need - 1)[:need]]
-    idx = np.concatenate((gt, eq))
-    order = np.lexsort((ids[idx], -scores[idx]))[:k]
-    idx = idx[order]
-    return ids[idx], scores[idx]
+    # ndarray methods, not the np.* wrappers: this runs once per
+    # request, where the wrappers' dispatch is a visible share
+    if k >= n:
+        top = (-scores).argsort(kind="stable")
+    else:
+        kth = np.partition(scores, n - k)[n - k]  # k-th largest score
+        gt = (scores > kth).nonzero()[0]
+        eq = (scores == kth).nonzero()[0][: k - gt.size]
+        top = np.concatenate(
+            (gt[(-scores[gt]).argsort(kind="stable")], eq)
+        )
+    return ids[top], scores[top]

@@ -818,7 +818,7 @@ def _make_kernel(
             )
             ids, scores = evaluate(node, sd)
         ids, scores = top_k(ids, scores, k)
-        out = pd.DataFrame({"doc_id": ids, "score": scores})
+        out = pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
         if meta_out:
             if dl_pdf is not None and len(dl_pdf) and len(out):
                 # dl_pdf is doc_id-sorted; positional lookup of

@@ -91,6 +91,7 @@ class DriverDictionary(P.TermDictionary):
         # the whole dictionary (trigram-index idea, Cox 2012)
         self._gram_sorted = None
         self._gram_rows = None
+        self._lens = None  # per-term lengths, on the first fuzzy query
 
     def _gram_index(self):
         """Lazy (sorted gram keys, term-row ids) pair — a CSR-style
@@ -239,11 +240,15 @@ class DriverDictionary(P.TermDictionary):
     def expand_fuzzy(
         self, term: str, max_edits: int, transpositions: bool = False
     ) -> List[str]:
-        lens = np.char.str_len(self.terms.astype(str))
-        cand = self.terms[np.abs(lens - len(term)) <= max_edits]
+        if self._lens is None:
+            self._lens = np.char.str_len(self.terms.astype(str))
+        near = np.abs(self._lens - len(term)) <= max_edits
+        cand = self.terms[near]
         if cand.size == 0:
             return []
-        mask = _lev_batch(cand, term, max_edits, transpositions)
+        mask = _lev_batch(
+            cand, term, max_edits, transpositions, self._lens[near]
+        )
         return cand[mask].tolist()
 
 
@@ -264,16 +269,25 @@ def _lev_batch(
     term: str,
     max_edits: int,
     transpositions: bool = False,
+    clens: "np.ndarray | None" = None,
 ) -> np.ndarray:
-    """Vectorized Levenshtein over a candidate array: one DP table of
-    shape (n_cand, maxlen+1) advanced a cell-column at a time — the
-    Python loop is O(len(term) * maxlen) regardless of candidate
-    count. With `transpositions` the recurrence adds the OSA
-    (optimal string alignment) case — an adjacent swap costs 1, the
-    same distance Lucene's FuzzyQuery uses by default.
+    """Vectorized Levenshtein over a candidate array: rows of a DP
+    table of shape (n_cand, maxlen+1) advanced a cell-column at a
+    time, only inside Ukkonen's band |i - j| <= max_edits (row i =
+    term prefix length, column j = candidate prefix length) — the
+    Python loop is O(len(term) * max_edits) regardless of candidate
+    count or length. A cell outside the band has distance
+    > max_edits; the band edge reads it as max_edits + 1, which
+    keeps every in-band cell exact up to that cap, so the final
+    `<= max_edits` test is exact (the OSA case included). With
+    `transpositions` the recurrence adds the OSA (optimal string
+    alignment) case — an adjacent swap costs 1, the same distance
+    Lucene's FuzzyQuery uses by default. `clens`: the candidates'
+    lengths, when the caller has them.
     -> boolean mask of cands within max_edits."""
     n = cands.size
-    clens = np.char.str_len(cands.astype(str))
+    if clens is None:
+        clens = np.char.str_len(cands.astype(str))
     maxlen = int(clens.max())
     # codepoint matrix via the fixed-width-unicode view (no Python
     # loop over candidates); numpy pads with codepoint 0, a sentinel
@@ -287,18 +301,27 @@ def _lev_batch(
     tcodes = np.frombuffer(term.encode("utf-32-le"), dtype=np.uint32).astype(
         np.int64
     )
+    e, cap = max_edits, max_edits + 1
     prev = np.broadcast_to(
-        np.arange(maxlen + 1, dtype=np.int64), (n, maxlen + 1)
+        np.minimum(np.arange(maxlen + 1, dtype=np.int64), cap),
+        (n, maxlen + 1),
     ).copy()
-    prev2 = None  # row i-2, for the OSA transposition case
+    cur = np.empty_like(prev)
+    prev2 = np.empty_like(prev)  # row i-2, for the OSA transposition case
     for i, tc in enumerate(tcodes, 1):
-        cur = np.empty_like(prev)
-        cur[:, 0] = i
-        sub = (mat != tc).astype(np.int64)
-        for j in range(maxlen):
+        if i - e > maxlen:
+            break  # empty band: every candidate is too short
+        # the two out-of-band cells the band reads: this row's column
+        # i-e-1 (left of the band) and, for row i+1, column i+e+1
+        cur[:, 0] = min(i, cap)
+        if i - e - 1 >= 0:
+            cur[:, i - e - 1] = cap
+        if i + e + 1 <= maxlen:
+            cur[:, i + e + 1] = cap
+        for j in range(max(i - e, 1) - 1, min(i + e, maxlen)):
             best = np.minimum(
                 np.minimum(prev[:, j + 1] + 1, cur[:, j] + 1),
-                prev[:, j] + sub[:, j],
+                prev[:, j] + (mat[:, j] != tc),
             )
             if transpositions and i >= 2 and j >= 1:
                 # term[i-2:i] swapped equals cand[j-1:j+1]
@@ -309,9 +332,10 @@ def _lev_batch(
                     swap, np.minimum(best, prev2[:, j - 1] + 1), best
                 )
             cur[:, j + 1] = best
-        prev2, prev = prev, cur
+        prev2, prev, cur = prev, cur, prev2
+    within = np.abs(clens - tcodes.size) <= e
     dist = prev[np.arange(n), clens]
-    return dist <= max_edits
+    return within & (dist <= e)
 
 
 class PushdownDictionary(P.TermDictionary):

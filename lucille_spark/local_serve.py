@@ -207,7 +207,7 @@ class LocalSearcher:
 
             ids, scores = evaluate(node, self._sd)
             ids, scores = top_k(ids, scores, int(k))
-            return pd.DataFrame({"doc_id": ids, "score": scores})
+            return pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
         need_uni = P.needs_universe(node) or (
             self.deleted is not None
         )

@@ -81,3 +81,21 @@ def test_fuzz_rank_identity_wand(unit_index, q):
     rows = WandExecutor(ix, prune=True).search(q, k=10).collect()
     got = _ranked([(r["doc_id"], r["score"]) for r in rows])
     assert got == expected, q
+
+
+def test_fuzz_evaluate_ids_strictly_ascending(spark, unit_index):
+    """`top_k` takes the boundary ties in input order, so every
+    evaluated result it sees must list strictly ascending (hence
+    unique) doc ids: on the oracle's postings and on the resident
+    postings of the embedded searcher."""
+    from lucille_spark.eval_local import evaluate
+    from lucille_spark.local_serve import LocalSearcher
+
+    ix, oracle, _ = unit_index
+    local = LocalSearcher(spark, ix.dir, predecode=True)
+    for q in _queries(_SEED, 30) + _queries(_SEED + 16, 12):
+        for plan, sd in ((oracle.plan(q), oracle.sd),
+                         (local.ix.plan(q), local._sd)):
+            ids, scores = evaluate(plan, sd)
+            assert ids.dtype.kind == "i" and ids.size == scores.size, q
+            assert (ids[1:] > ids[:-1]).all(), q
