@@ -1,33 +1,63 @@
-"""Pure-DataFrame query executor over `postings_flat`.
+"""Declarative query executor over `postings_flat`, served through
+one Spark SQL statement per query.
 
-Every physical node maps to declarative DataFrame ops — Catalyst
-sees the whole plan, so term filters push down to the parquet scan
+`sqlgen` renders the whole physical tree (plus doc boosts, the delete
+anti-join, the (score desc, doc_id asc) top-k and the optional meta
+join) as a single SELECT over temp views of the index tables, and
+`spark.sql` builds the plan in one JVM call. Catalyst sees the whole
+plan, so term filters push down to the parquet scan
 (`PushedFilters: [EqualTo(term, ...)]`, row-group pruning via the
-(term, doc_id) sort order), boolean combination is joins/aggregates
-with partial aggregation, and the final top-k compiles to
+(term, doc_id) sort order), boolean combination is a union plus one
+aggregate with partial aggregation, and the final top-k compiles to
 `TakeOrderedAndProject` (distributed top-k, no global sort).
 
-This path is the Catalyst-native twin of the WAND executor
-(exec_wand.py): same physical tree, same scores; tests assert both
-are rank-identical to the brute-force oracle. It is also the path
-mirrored by the DuckDB oracle SQL in __spark_entry__.py.
+Any index object with `spark`, `stats`, `flat`, `doclens`,
+`deleted_df` and `plan()` is served: a `SparkIndex` and the
+`streaming.MultiIndex` union behind alias, rollover and PIT views
+alike. The WAND executor (exec_wand.py) runs the same physical tree
+per shard; tests assert both are rank-identical to the brute-force
+oracle, and this path is the one mirrored by the DuckDB oracle SQL in
+__spark_entry__.py.
 
-BM25 arithmetic stays entirely in JVM whole-stage codegen (Column
-expressions, no UDFs anywhere in this module).
+The Column helpers below (`_score_col`, `_bm25_col`, `_boost_case`)
+are the same formulas as sqlgen's SQL renderings, for callers that
+compose Column expressions (search_features, exec_wand). No UDFs
+anywhere in this module.
 """
 
 from __future__ import annotations
 
+import itertools
+import logging
 from collections import OrderedDict
-from typing import List, Optional
+from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lucille_spark import plans as P
+from lucille_spark import sqlgen
 from lucille_spark.index.reader import SparkIndex
-from lucille_spark.pushdown import expand_bounds, expand_condition
+from lucille_spark.pushdown import file_prune_bounds
 from lucille_spark.scoring import B, K1, MU
+
+#: process-wide temp-view name sequence; next() on a count is atomic
+_VIEW_NAMES = itertools.count(1)
+
+
+def _view(df: DataFrame, tag: str) -> str:
+    """Temp-view name for `df`, registering it on first use. The name
+    is memoized on the DataFrame object, so the per-file-set pruned
+    frames from SparkIndex's LRU re-use their view (registration is
+    one py4j call). Two threads racing on one frame may both register
+    it; each name is unique and reads the same rows, so either is
+    correct."""
+    name = getattr(df, "_lucille_view", None)
+    if name is None:
+        name = f"lucille_{tag}_{next(_VIEW_NAMES)}"
+        df.createOrReplaceTempView(name)
+        df._lucille_view = name
+    return name
 
 
 def _bm25_col(tf: Column, dl: Column, idf_val: float, avgdl) -> Column:
@@ -92,25 +122,25 @@ class DataFrameExecutor:
     def warmup(self) -> None:
         """Pay the PROCESS-level one-time costs at startup instead of
         on the first user query: whole-stage-codegen compilation for
-        the scan/filter/aggregate/TakeOrdered shapes, the parquet
-        file-index listing, and broadcast machinery. Standard serving
-        practice (warm pools); per-QUERY cold cost (plan construction
-        + that query's scan) is unaffected and still measured by the
-        bench's first_query legs. No-op on any failure — warmup must
-        never break opening an index."""
+        the scan/filter/aggregate/TakeOrdered shapes and the phrase
+        higher-order functions, the parquet file-index listing, and
+        broadcast machinery. Standard serving practice (warm pools);
+        per-QUERY cold cost (plan construction + that query's scan)
+        is unaffected and still measured by the bench's first_query
+        legs. Plan nodes skip the string-keyed plan cache, so warmup
+        leaves it untouched. Never raises — warmup must not break
+        opening an index; a failure is logged."""
         try:
             ts = self.ix.sample_terms(2)
             if not ts:
                 return
             t1, t2 = ts[0], ts[-1]
-            # bool + fused terms scan + aggregate + TakeOrdered
-            self._column_search(
-                self.ix.plan(f"{t1} AND {t2}"), 1, False, None
-            ).collect()
-            # SQL-lane parse/analyze + phrase (positions + HOFs)
-            self.search(f'"{t1} {t2}"', k=1).collect()
+            for q in (f"{t1} AND {t2}", f'"{t1} {t2}"'):
+                self.search(self.ix.plan(q), k=1).collect()
         except Exception:
-            pass
+            logging.getLogger(__name__).warning(
+                "DataFrameExecutor warmup failed", exc_info=True
+            )
 
     def search(
         self,
@@ -127,16 +157,17 @@ class DataFrameExecutor:
         of (lo, hi, factor) doc-id ranges whose scores multiply by
         `factor` BEFORE the top-k cut — the ES `indices_boost`
         primitive (alias parts occupy disjoint id ranges); applied
-        as one CASE column, no extra pass.
+        as one CASE column, no extra pass. Tombstoned docs
+        (index.maintenance.delete_docs) are excluded by a broadcast
+        anti-join; scores/stats stay as built until purge.
 
-        Repeated string queries hit a bounded plan cache: building a
-        boolean plan costs hundreds of py4j round trips (~0.2-0.35 s
-        driver-side — roughly the execution time of the job itself),
-        and the built DataFrame is immutable, so re-collecting it is
-        exactly re-running the query (Lucene QueryCache idea, one
-        level up). Keyed on (query, k, with_meta) plus the index's
-        plan_version, which refresh_deletes() bumps — a cached plan
-        never serves a stale tombstone set."""
+        Repeated string queries hit a bounded plan cache: the built
+        DataFrame is immutable, so re-collecting it is exactly
+        re-running the query and skips parse, plan and SQL analysis
+        (Lucene QueryCache idea, one level up). Keyed on (query, k,
+        with_meta) plus the index's plan_version, which
+        refresh_deletes() bumps — a cached plan never serves a stale
+        tombstone set."""
         cache_key = None
         if isinstance(query, str) and synonyms is None and not doc_boosts:
             cache_key = (
@@ -147,84 +178,34 @@ class DataFrameExecutor:
             if hit is not None:
                 self._plan_cache.move_to_end(cache_key)
                 return hit
-        node = self.ix.plan(query, synonyms=synonyms)
-        df = self._try_sql(node, k, with_meta, doc_boosts)
-        if df is None:
-            df = self._column_search(node, k, with_meta, doc_boosts)
+        ix = self.ix
+        node = ix.plan(query, synonyms=synonyms)
+        flat_view, doclens_view = self._views(node)
+        dd = getattr(ix, "deleted_df", None)
+        meta_cols = None
+        if with_meta:
+            meta_cols = [
+                c for c in ix.doclens.columns
+                if c not in ("doc_id", "shard", "doc_len")
+            ]
+        df = ix.spark.sql(sqlgen.compile_search(
+            node, flat_view, doclens_view, self.avgdl, k,
+            _view(dd, "deletes") if dd is not None else None,
+            doc_boosts, meta_cols,
+        ))
         if cache_key is not None:
             self._plan_cache[cache_key] = df
             if len(self._plan_cache) > self.PLAN_CACHE_MAX:
                 self._plan_cache.popitem(last=False)
         return df
 
-    def _try_sql(self, node, k, with_meta, doc_boosts):
-        """Cold-path fast lane: render the WHOLE plan as one SQL
-        string and call spark.sql once (sqlgen.py) — identical
-        logical plan and bit-identical scores to _column_search, but
-        O(1) py4j round trips instead of one per operator (~660 for
-        a nested boolean query, ~300-400 ms of driver latency).
-        Returns None when a node has no SQL rendering (custom
-        physical trees) — the Column path is the fallback and the
-        semantic reference."""
-        from lucille_spark import sqlgen
-        from lucille_spark.pushdown import file_prune_bounds
-
-        ix = self.ix
-        if not hasattr(ix, "view_of"):
-            return None  # index-like test double without view support
-        try:
-            exact, intervals = file_prune_bounds(node)
-            flat_view = ix.view_of(self._flat(exact, intervals), "flat")
-            doclens_view = ix.view_of(ix.doclens, "doclens")
-            dd = getattr(ix, "deleted_df", None)
-            deletes_view = (
-                ix.view_of(dd, "deletes") if dd is not None else None
-            )
-            meta_cols = None
-            if with_meta:
-                meta_cols = [
-                    c for c in ix.doclens.columns
-                    if c not in ("doc_id", "shard", "doc_len")
-                ]
-            sql = sqlgen.compile_search(
-                node, flat_view, doclens_view, self.avgdl, k,
-                deletes_view, doc_boosts, meta_cols,
-            )
-            return ix.spark.sql(sql)
-        except sqlgen.SqlUnsupported:
-            return None
-
-    def _column_search(self, node, k, with_meta, doc_boosts):
-        """Column-object plan construction (the original path; the
-        SQL lane mirrors THIS expression for expression)."""
-        df = self.evaluate(node)
-        if doc_boosts:
-            df = df.withColumn(
-                "score", F.col("score") * _boost_case(doc_boosts)
-            )
-        # tombstoned docs (index.maintenance.delete_docs) are excluded
-        # from results; scores/stats stay as built until purge. The
-        # delete set is small by contract -> broadcast anti-join, no
-        # shuffle of the match set.
-        dd = getattr(self.ix, "deleted_df", None)
-        if dd is not None:
-            df = df.join(F.broadcast(dd), "doc_id", "left_anti")
-        df = df.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k is not None:
-            df = df.limit(k)
-        if with_meta:
-            meta = self.ix.doclens.drop("shard", "doc_len")
-            # broadcast the K-ROW result side, stream doclens (a left
-            # join would make the corpus the build side at scale);
-            # every result id exists in doclens, so inner == left.
-            # k=None (unbounded match set) keeps the un-hinted join
-            # and lets AQE pick the strategy from actual sizes.
-            res = F.broadcast(df) if k is not None else df
-            df = meta.join(res, "doc_id").select(
-                "doc_id", "score",
-                *[c for c in meta.columns if c != "doc_id"],
-            ).orderBy(F.desc("score"), F.asc("doc_id"))
-        return df
+    def evaluate(self, node: P.PNode) -> DataFrame:
+        """-> DataFrame(doc_id long, score double), one row per match,
+        unordered and with tombstoned docs still present (callers such
+        as search_features.match_count apply their own delete join)."""
+        return self.ix.spark.sql(
+            sqlgen.SqlCompiler(*self._views(node), self.avgdl).node(node)
+        )
 
     def search_many(
         self, queries, k: int = 10, ks=None, similarities=None
@@ -237,13 +218,12 @@ class DataFrameExecutor:
         `ks` / `similarities` override k / the ranking formula per
         query id. -> (query_id, doc_id, score).
 
-        Scale note: this path builds N per-query plans driver-side.
-        Since the SQL lane (sqlgen.py) each plan is ~2 py4j calls,
-        but the union tagging still costs O(batch) driver calls and
-        the JVM analyzes N subtrees — WandExecutor.search_many (ONE
-        union predicate + one kernel pass, O(expansions) plan cost)
-        remains the batch path at scale; this twin exists for
-        rank-identity checks and small batches."""
+        Scale note: each per-query plan is one spark.sql call, but the
+        union tagging still costs O(batch) driver calls and the JVM
+        analyzes N subtrees — WandExecutor.search_many (ONE union
+        predicate + one kernel pass, O(expansions) plan cost) remains
+        the batch path at scale; this one serves rank-identity checks
+        and small batches."""
         if not isinstance(queries, dict):
             queries = {f"q{i}": q for i, q in enumerate(queries)}
         sims = similarities or {}
@@ -264,335 +244,15 @@ class DataFrameExecutor:
             out = one if out is None else out.unionAll(one)
         return out
 
-    # ----------------------------------------------------- evaluation
-    def evaluate(self, node: P.PNode) -> DataFrame:
-        """-> DataFrame(doc_id long, score double), one row per match."""
+    # ---------------------------------------------------------- views
+    def _views(self, node: P.PNode) -> Tuple[str, str]:
+        """(flat, doclens) temp-view names for `node`: the postings
+        view is file-pruned to the files whose term range can hold
+        one of the node's terms, when the index has a per-file term
+        manifest (`flat_for`); otherwise it is the full table."""
         ix = self.ix
-        if isinstance(node, P.PMatchNone):
-            return self._empty()
-        if isinstance(node, P.PMatchAll):
-            return ix.doclens.select(
-                "doc_id", F.lit(1.0).alias("score")
-            )
-        if isinstance(node, P.PTerm):
-            rows = self._flat([node.term]).filter(
-                F.col("term") == node.term
-            )
-            return rows.select(
-                "doc_id",
-                _score_col(
-                    node.sim, F.col("tf"), F.col("doc_len"), node.idf,
-                    node.avgdl or self.avgdl, node.tw,
-                ).alias("score"),
-            )
-        if isinstance(node, P.PExpand):
-            # pushdown-friendly predicate on the term column: exact
-            # IN-list for small expansions (parquet In filter), else
-            # the source primitive as StartsWith/range bound + JVM
-            # residual — plan size stays O(1) in dictionary size.
-            e, iv = expand_bounds(node)
-            return (
-                self._flat(e, iv)
-                .filter(expand_condition(node))
-                .select("doc_id")
-                .distinct()
-                .select("doc_id", F.lit(1.0).alias("score"))
-            )
-        if isinstance(node, P.PPhrase):
-            return self._phrase(node)
-        if isinstance(node, P.PSynonym):
-            return self._synonym(node)
-        if isinstance(node, P.PMetaFilter):
-            return self._meta(node)
-        if isinstance(node, P.PNot):
-            child = self.evaluate(node.child)
-            return (
-                ix.doclens.select("doc_id")
-                .join(child.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.lit(1.0).alias("score"))
-            )
-        if isinstance(node, P.PBoost):
-            return self.evaluate(node.child).withColumn(
-                "score", F.col("score") * F.lit(node.factor)
-            )
-        if isinstance(node, P.PBool):
-            return self._bool(node)
-        if isinstance(node, P.PDisMax):
-            return self._dismax(node)
-        raise TypeError(type(node).__name__)
-
-    # DisjunctionMax: union the child match sets under a clause tag,
-    # ONE aggregation computes max + tie*(sum-max) per doc (partial
-    # agg map-side — same shuffle shape as _bool).
-    def _dismax(self, node: P.PDisMax) -> DataFrame:
-        parts = [self.evaluate(c) for c in node.children]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionAll(p)
-        agg = u.groupBy("doc_id").agg(
-            F.max("score").alias("mx"), F.sum("score").alias("sm")
-        )
-        return agg.select(
-            "doc_id",
-            (
-                F.col("mx")
-                + F.lit(float(node.tie)) * (F.col("sm") - F.col("mx"))
-            ).alias("score"),
-        )
-
-    def _empty(self) -> DataFrame:
-        return self.ix.spark.createDataFrame(
-            [], "doc_id long, score double"
-        )
-
-    def _flat(self, exact, intervals=()) -> DataFrame:
-        """File-pruned postings scan when the index has a per-file
-        term range manifest (falls back to the full table)."""
-        src = getattr(self.ix, "flat_for", None)
-        if src is None:
-            return self.ix.flat
-        return src(exact, intervals)
-
-    # boolean: ALL PTerm clauses fold into ONE flat scan (per-term
-    # idf/multiplicity/must-count constants come from tiny map
-    # literals), unioned with recursively-evaluated complex clauses,
-    # then a single aggregation (partial agg map-side) — one scan +
-    # one shuffle regardless of term-clause count.
-    def _bool(self, node: P.PBool) -> DataFrame:
-        term_must = [c for c in node.must if isinstance(c, P.PTerm)]
-        term_should = [c for c in node.should if isinstance(c, P.PTerm)]
-        rest_must = [c for c in node.must if not isinstance(c, P.PTerm)]
-        rest_should = [
-            c for c in node.should if not isinstance(c, P.PTerm)
-        ]
-
-        parts: List[DataFrame] = []
-        # the fused single-scan path assumes one scoring formula for
-        # its shared shape expression; mixed per-field similarities
-        # fall back to per-clause evaluation (still one scan each)
-        sims = {t.sim for t in term_must + term_should}
-        if len(term_must) + len(term_should) >= 2 and len(sims) == 1:
-            parts.append(self._terms_scan(term_must, term_should))
-        else:
-            rest_must = list(node.must)
-            rest_should = list(node.should)
-        for c in rest_must:
-            parts.append(
-                self.evaluate(c).select(
-                    "doc_id", "score",
-                    F.lit(1).alias("m_cnt"), F.lit(0).alias("s_cnt"),
-                )
-            )
-        for c in rest_should:
-            parts.append(
-                self.evaluate(c).select(
-                    "doc_id", "score",
-                    F.lit(0).alias("m_cnt"), F.lit(1).alias("s_cnt"),
-                )
-            )
-        if not parts:
-            return self._empty()
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionAll(p)
-        agg = u.groupBy("doc_id").agg(
-            F.sum("score").alias("score"),
-            F.sum("m_cnt").alias("n_must"),
-            F.sum("s_cnt").alias("n_should"),
-        )
-        cond = F.lit(True)
-        if node.must:
-            cond = cond & (F.col("n_must") == len(node.must))
-        min_should = node.min_should if node.must else max(node.min_should, 1)
-        if node.should and min_should > 0:
-            cond = cond & (F.col("n_should") >= min_should)
-        out = agg.filter(cond).select("doc_id", "score")
-        for mn in node.must_not:
-            out = out.join(
-                self.evaluate(mn).select("doc_id"), "doc_id", "left_anti"
-            )
-        return out
-
-    def _terms_scan(
-        self, term_must: List[P.PTerm], term_should: List[P.PTerm]
-    ) -> DataFrame:
-        """One scan covering every PTerm clause. Per distinct term:
-        score weight = idf * clause multiplicity (BM25 is linear in
-        idf, so a clause repeated n times scores n times), m_cnt =
-        number of MUST clauses with the term (the aggregate compares
-        against len(must), so multiplicity counts), s_cnt likewise for
-        SHOULD."""
-        idf = {}
-        adl: dict = {}
-        twm: dict = {}
-        m_cnt: dict = {}
-        s_cnt: dict = {}
-        for t in term_must:
-            idf[t.term] = t.idf
-            adl[t.term] = t.avgdl or self.avgdl
-            twm[t.term] = t.tw
-            m_cnt[t.term] = m_cnt.get(t.term, 0) + 1
-        for t in term_should:
-            idf[t.term] = t.idf
-            adl[t.term] = t.avgdl or self.avgdl
-            twm[t.term] = t.tw
-            s_cnt[t.term] = s_cnt.get(t.term, 0) + 1
-        # all PTerms of one plan share the planner's similarity
-        sim = (term_must + term_should)[0].sim
-
-        def _map(d: dict, cast: str):
-            if not d:
-                return F.lit(None).cast(cast)
-            # two array literals + map_from_arrays = 3 py4j calls,
-            # vs create_map over 2n F.lit columns (2n+1 calls) —
-            # driver-side plan construction is the cold-query cost
-            ks = list(d)
-            vs = [d[k] for k in ks]
-            return F.map_from_arrays(F.lit(ks), F.lit(vs))[
-                F.col("term")
-            ].cast(cast)
-
-        w = {
-            t: idf[t] * (m_cnt.get(t, 0) + s_cnt.get(t, 0)) for t in idf
-        }
-        terms = sorted(idf)
-        rows = self._flat(terms).filter(F.col("term").isin(terms))
-        return rows.select(
-            "doc_id",
-            _score_col(
-                sim, F.col("tf"), F.col("doc_len"), 1.0,
-                F.coalesce(_map(adl, "double"), F.lit(self.avgdl)),
-                F.coalesce(_map(twm, "double"), F.lit(0.0)),
-            ).alias("_b"),
-            F.col("term"),
-        ).select(
-            "doc_id",
-            (F.col("_b") * _map(w, "double")).alias("score"),
-            F.coalesce(_map(m_cnt, "int"), F.lit(0)).alias("m_cnt"),
-            F.coalesce(_map(s_cnt, "int"), F.lit(0)).alias("s_cnt"),
-        )
-
-    # phrase/proximity: ONE scan of the phrase terms' postings + ONE
-    # groupBy(doc_id) building a term->positions map per doc (vs the
-    # naive per-term scans + join chain: N scans and N-1 shuffles).
-    # Positional arrays stay as Spark arrays; the adjacency /
-    # ordered-window checks are higher-order functions (whole-stage
-    # codegen'd) — no Python at all.
-    # SynonymQuery: ONE postings scan over the member terms, tf
-    # summed per doc in a single aggregation, scored once with the
-    # blended idf (partial agg map-side — same shuffle shape as a
-    # 2-term boolean but emits one pseudo-term score).
-    def _synonym(self, node: P.PSynonym) -> DataFrame:
-        terms = sorted(set(node.terms))
-        flat = self._flat(terms).filter(F.col("term").isin(terms))
-        g = flat.groupBy("doc_id").agg(
-            F.sum("tf").alias("tf_s"), F.max("doc_len").alias("doc_len")
-        )
-        return g.select(
-            "doc_id",
-            _score_col(
-                node.sim, F.col("tf_s"), F.col("doc_len"), node.idf,
-                node.avgdl or self.avgdl, node.tw,
-            ).alias("score"),
-        )
-
-    def _phrase(self, node: P.PPhrase) -> DataFrame:
-        m = len(node.terms)
-        distinct = sorted(set(node.terms))
-        flat = self._flat(distinct).filter(F.col("term").isin(distinct))
-        g = (
-            flat.groupBy("doc_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("term", "positions"))
-                ).alias("pm"),
-                F.max("doc_len").alias("doc_len"),
-                F.count("*").alias("_nt"),
-            )
-            .filter(F.col("_nt") == len(distinct))  # doc has ALL terms
-        )
-        j = g.select(
-            "doc_id",
-            "doc_len",
-            *[
-                F.col("pm")[t].alias(f"pos{i}")
-                for i, t in enumerate(node.terms)
-            ],
-        )
-        if node.slop == 0:
-            # starts = pos0 ∩ (pos1-1) ∩ (pos2-2) ...
-            # NB: transform's lambda must be single-arg — a second
-            # parameter would be bound to the ARRAY INDEX by Spark.
-            def _shifted(col_name: str, off: int):
-                return F.transform(F.col(col_name), lambda p: p - F.lit(off))
-
-            starts = F.col("pos0")
-            for i in range(1, m):
-                starts = F.array_intersect(starts, _shifted(f"pos{i}", i))
-            j = j.withColumn("tf_p", F.size(starts)).filter(F.col("tf_p") > 0)
-        else:
-            max_gap = m - 1 + node.slop
-
-            def chain(level: int, prev: Column, bound: Column) -> Column:
-                if level == m:
-                    return F.lit(True)
-                return F.exists(
-                    F.col(f"pos{level}"),
-                    lambda q: (q > prev) & (q <= bound) & chain(level + 1, q, bound),
-                )
-
-            matched = F.exists(
-                F.col("pos0"), lambda p1: chain(1, p1, p1 + F.lit(max_gap))
-            )
-            j = j.filter(matched).withColumn("tf_p", F.lit(1))
-        return j.select(
-            "doc_id",
-            _score_col(
-                node.sim, F.col("tf_p"), F.col("doc_len"), node.idf,
-                node.avgdl or self.avgdl, node.tw,
-            ).alias("score"),
-        )
-
-    def _meta(self, node: P.PMetaFilter) -> DataFrame:
-        col = F.lower(F.col(node.field).cast("string"))
-        if node.kind in ("num_eq", "num_range"):
-            # numeric meta semantics (Lucene points): compare the
-            # column as a number — doclens stores meta as string, the
-            # cast is exact for values written from numeric sources
-            ncol = F.col(node.field).cast("double")
-            if node.kind == "num_eq":
-                cond = ncol == float(node.value[0])
-            else:
-                lo, hi = node.value
-                lo_inc, hi_inc = node.inclusive
-                cond = ncol.isNotNull()
-                if lo is not None:
-                    cond = cond & (
-                        (ncol >= float(lo)) if lo_inc else (ncol > float(lo))
-                    )
-                if hi is not None:
-                    cond = cond & (
-                        (ncol <= float(hi)) if hi_inc else (ncol < float(hi))
-                    )
-            return self.ix.doclens.filter(cond).select(
-                "doc_id", F.lit(1.0).alias("score")
-            )
-        if node.kind == "eq":
-            cond = col == node.value[0]
-        elif node.kind == "prefix":
-            cond = col.startswith(node.value[0])
-        elif node.kind == "regex":
-            cond = col.rlike(f"^(?:{node.value[0]})$")
-        elif node.kind == "range":
-            lo, hi = node.value
-            lo_inc, hi_inc = node.inclusive
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & ((col >= lo) if lo_inc else (col > lo))
-            if hi is not None:
-                cond = cond & ((col <= hi) if hi_inc else (col < hi))
-        else:
-            raise ValueError(node.kind)
-        return self.ix.doclens.filter(cond).select(
-            "doc_id", F.lit(1.0).alias("score")
-        )
+        flat = ix.flat
+        src = getattr(ix, "flat_for", None)
+        if src is not None:
+            flat = src(*file_prune_bounds(node))
+        return _view(flat, "flat"), _view(ix.doclens, "doclens")

@@ -44,6 +44,7 @@ tests (tests/test_engine_wand.py, tests/test_property_pruning.py).
 
 from __future__ import annotations
 
+import logging
 from collections import OrderedDict
 from itertools import chain
 from typing import Dict, List, Optional, Tuple
@@ -142,11 +143,12 @@ class WandExecutor:
         self._plan_cache: "OrderedDict" = OrderedDict()
 
     def warmup(self) -> None:
-        """Pay process one-time costs at startup (twin of
+        """Pay process one-time costs at startup (counterpart of
         exec_df.DataFrameExecutor.warmup): the first applyInPandas
         job spawns the reusable Python worker pool and compiles the
         cogroup/groupBy-apply machinery — ~2 s measured on the first
-        user query if not pre-paid here. No-op on failure."""
+        user query if not pre-paid here. Never raises; a failure is
+        logged."""
         try:
             ts = self.ix.sample_terms(2)
             if not ts:
@@ -162,7 +164,9 @@ class WandExecutor:
                 self.ix.plan(f"{t1} AND NOT {t2}"), k=1
             ).collect()
         except Exception:
-            pass
+            logging.getLogger(__name__).warning(
+                "WandExecutor warmup failed", exc_info=True
+            )
 
     def search(
         self, query, k: int = 10, with_meta: bool = False,

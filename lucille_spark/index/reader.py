@@ -689,21 +689,6 @@ class SparkIndex:
             self.flat, "flat", self._flat_path, exact, intervals
         )
 
-    _VIEW_SEQ = [0]  # process-wide unique temp-view names
-
-    def view_of(self, df: DataFrame, tag: str) -> str:
-        """Temp-view name for `df`, registering once (the SQL-compiled
-        query path references tables by view name; registration is one
-        py4j call, memoized on the DataFrame object so the per-file-set
-        pruned frames from _pruned's LRU re-use their view)."""
-        name = getattr(df, "_lucille_view", None)
-        if name is None:
-            SparkIndex._VIEW_SEQ[0] += 1
-            name = f"lucille_{tag}_{SparkIndex._VIEW_SEQ[0]}"
-            df.createOrReplaceTempView(name)
-            df._lucille_view = name
-        return name
-
     def segments_for(self, exact, intervals=()) -> DataFrame:
         return self._pruned(
             self.segments, "segments", self.segments_path, exact, intervals

@@ -1825,7 +1825,7 @@ def match_phrase_prefix(
     )
     def _shifted(colref, off: int):
         # single-arg lambda only: a second parameter would be bound
-        # to the ARRAY INDEX by Spark (see exec_df._phrase)
+        # to the ARRAY INDEX by Spark
         return F.transform(colref, lambda p: p - F.lit(off))
 
     starts = F.col("pm")[fixed[0]]

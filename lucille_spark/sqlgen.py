@@ -1,25 +1,26 @@
-"""Physical tree -> ONE Spark SQL statement (the cold-path twin of
-exec_df.DataFrameExecutor.evaluate).
+"""Physical tree -> ONE Spark SQL statement: the plan builder behind
+every exec_df.DataFrameExecutor entry point (search, search_many,
+warmup, evaluate).
 
-Why this exists: building the declarative plan with Column objects
-costs one py4j round trip per operator/expression — a boolean query
-like `table AND (batch OR window) AND NOT stream` is ~660 driver
-round trips, ~300-400 ms of pure plan construction (measured; the
-execution itself is comparable). Rendering the SAME plan as a single
-SQL string and calling `spark.sql(...)` once moves parsing/analysis
-into ONE JVM call: the py4j cost becomes O(1) in query complexity.
+Why one statement: building a declarative plan operator by operator
+from the driver costs one py4j round trip per operator/expression —
+a boolean query like `table AND (batch OR window) AND NOT stream` is
+~660 driver round trips, ~300-400 ms of pure plan construction
+(measured; the execution itself is comparable). Rendering the whole
+plan as a single SQL string and calling `spark.sql(...)` once moves
+parsing/analysis into ONE JVM call: the py4j cost is O(1) in query
+complexity.
 
-Semantics: every generated expression mirrors the exec_df Column
-expression tree node for node — same casts, same literal values
-(float literals render as CAST('<repr>' AS DOUBLE), which folds to
-the exact same IEEE double as F.lit), same operator associativity,
-same join/aggregate shapes — so scores are bit-identical to the
-DataFrame path (asserted by tests/test_sqlgen.py and by the fact
-that the 420 DuckDB oracle gates run through this path).
-
-Catalyst sees the identical logical plan either way; this module
-changes WHO builds the plan (one SQL parse vs hundreds of py4j
-calls), not what executes.
+Shapes: all PTerm clauses of a boolean fold into ONE postings scan
+(per-term constants come from map literals), unioned with the other
+clauses and combined by a single aggregate; a phrase is one scan plus
+one groupBy building a term->positions map per doc, matched with
+higher-order array functions; a synonym set sums tf per doc in one
+aggregate. Scores follow the scoring.py formulas with the same casts,
+literals (float literals render as CAST('<repr>' AS DOUBLE), the
+exact IEEE double) and operator order as exec_df._score_col, so rows
+are rank-identical to the numpy oracle (tests/test_sqlgen.py) and the
+420 DuckDB oracle gates run through this module.
 """
 
 from __future__ import annotations
@@ -28,11 +29,6 @@ from typing import List, Optional
 
 from lucille_spark import plans as P
 from lucille_spark.scoring import B, K1, MU
-
-
-class SqlUnsupported(Exception):
-    """Raised when a node/feature has no SQL rendering; the caller
-    falls back to the Column-based evaluate() path."""
 
 
 def _q(s: str) -> str:
@@ -56,7 +52,7 @@ def _q(s: str) -> str:
 def _d(x) -> str:
     """Exact DOUBLE literal. A bare SQL decimal literal (0.25) is
     DECIMAL in Spark; CAST('<repr>' AS DOUBLE) constant-folds to the
-    bit-identical double of F.lit(x)."""
+    bit-identical double of `x`."""
     return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
@@ -77,8 +73,9 @@ def _bm25_sql(tf: str, dl: str, idf_val: float, avgdl) -> str:
 
 
 def _score_sql(sim: str, tf: str, dl: str, w, avgdl, tw=0.0) -> str:
-    """SQL twin of exec_df._score_col: `w`/`avgdl`/`tw` accept a
-    float or an SQL expression string (per-term map lookups)."""
+    """Similarity-dispatched score expression (the SQL rendering of
+    exec_df._score_col): `w`/`avgdl`/`tw` accept a float or an SQL
+    expression string (per-term map lookups)."""
     if sim == "bm25":
         if isinstance(w, str):
             return f"{w} * {_bm25_sql(tf, dl, 1.0, avgdl)}"
@@ -98,15 +95,15 @@ def _score_sql(sim: str, tf: str, dl: str, w, avgdl, tw=0.0) -> str:
         twc = tw if isinstance(tw, str) else _d(float(tw))
         shape = f"LOG1P({twc} * {tff} / GREATEST({dld}, {_d(1.0)}))"
     else:
-        raise SqlUnsupported(f"similarity {sim!r}")
+        raise ValueError(f"unknown similarity {sim!r}")
     if not isinstance(w, str) and float(w) == 1.0:
         return shape
     return f"{w if isinstance(w, str) else _d(float(w))} * ({shape})"
 
 
 def _map_lookup(d: dict, cast: str) -> str:
-    """SQL twin of exec_df._terms_scan._map: map literal indexed by
-    the term column, cast like the Column version."""
+    """Per-term constant: a map literal indexed by the term column,
+    cast to `cast` (NULL for terms outside the map)."""
     if not d:
         return f"CAST(NULL AS {cast})"
     ks = list(d)
@@ -125,7 +122,7 @@ def _map_lookup(d: dict, cast: str) -> str:
 
 
 def expand_condition_sql(node: P.PExpand, col: str = "term") -> str:
-    """SQL twin of pushdown.expand_condition (same predicate
+    """pushdown.expand_condition rendered as SQL (same predicate
     selection rules, same residuals)."""
     from lucille_spark.pushdown import IN_THRESHOLD
 
@@ -180,7 +177,8 @@ def expand_condition_sql(node: P.PExpand, col: str = "term") -> str:
 class SqlCompiler:
     """Renders a PNode to a SELECT producing (doc_id, score). The
     `flat` / `doclens` view names are provided by the caller
-    (SparkIndex registers them, file-pruned per query)."""
+    (exec_df registers them, the postings view file-pruned per
+    query)."""
 
     def __init__(self, flat_view: str, doclens_view: str, avgdl: float):
         self.flat = flat_view
@@ -237,7 +235,7 @@ class SqlCompiler:
             return self._bool(node)
         if isinstance(node, P.PDisMax):
             return self._dismax(node)
-        raise SqlUnsupported(type(node).__name__)
+        raise TypeError(type(node).__name__)
 
     def _dismax(self, node: P.PDisMax) -> str:
         parts = " UNION ALL ".join(
@@ -442,7 +440,7 @@ class SqlCompiler:
                 conds.append(f"{col} {'<=' if hi_inc else '<'} {_q(hi)}")
             cond = " AND ".join(conds)
         else:
-            raise SqlUnsupported(node.kind)
+            raise ValueError(node.kind)
         return (
             f"SELECT doc_id, {_d(1.0)} AS score FROM {self.doclens}"
             f" WHERE {cond}"
@@ -474,7 +472,7 @@ def compile_search(
         sql = f"SELECT doc_id, score * ({case}) AS score FROM ({sql})"
     if deletes_view:
         # small-by-contract delete set -> broadcast anti-join, no
-        # shuffle of the match set (mirrors exec_df's F.broadcast)
+        # shuffle of the match set
         sql = (
             f"SELECT /*+ BROADCAST(dd) */ t.doc_id, t.score FROM"
             f" ({sql}) t LEFT ANTI JOIN"
@@ -485,6 +483,10 @@ def compile_search(
     limit = f" LIMIT {int(k)}" if k is not None else ""
     sql = f"SELECT doc_id, score FROM ({sql}){order}{limit}"
     if meta_cols is not None:
+        # broadcast the K-row result side, stream doclens (a left
+        # join would make the corpus the build side at scale); every
+        # result id exists in doclens, so inner == left. k=None keeps
+        # the un-hinted join and lets AQE pick from actual sizes.
         mc = ", ".join(f"m.{c_}" for c_ in meta_cols)
         hint = "/*+ BROADCAST(r) */ " if k is not None else ""
         sql = (

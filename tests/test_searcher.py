@@ -120,3 +120,27 @@ def test_request_cache_skips_parameterized_calls(spark, unit_index):
     assert s.request_cache_stats() == {
         "enabled": True, "entries": 0, "hits": 0, "misses": 0,
     }
+
+
+def test_warmup_failure_logged_not_raised(spark, unit_index, monkeypatch,
+                                          caplog):
+    """A failing warmup leaves the Searcher open and logs one warning
+    per executor."""
+    import logging
+
+    from lucille_spark.index.reader import SparkIndex
+    from lucille_spark.searcher import Searcher
+
+    def boom(self, n=2):
+        raise RuntimeError("no terms")
+
+    monkeypatch.setattr(SparkIndex, "sample_terms", boom)
+    ix, _, _ = unit_index
+    with caplog.at_level(logging.WARNING):
+        s = Searcher(spark, ix.dir, cache=False, warm=True)
+    warned = sorted(
+        r.name for r in caplog.records
+        if r.levelno == logging.WARNING and "warmup failed" in r.message
+    )
+    assert warned == ["lucille_spark.exec_df", "lucille_spark.exec_wand"]
+    assert s.count("cats") > 0
