@@ -3336,8 +3336,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("text"), F.lit("\n# extra banner comment")
             ).alias("text"),
         )
-        return C.logic_duplicates(
+        out = C.logic_duplicates(
             base.unionByName(variant), "doc_id", "text"
+        )
+        # gate projection only: doc_ids as one comma-joined string (a
+        # list cell cannot be hashed or sorted by the gate's canonical
+        # row order); the operator keeps its sorted array column
+        return out.select(
+            "logic_sha256", "n_docs",
+            F.array_join("doc_ids", ",").alias("doc_ids"),
         ).orderBy("logic_sha256")
 
     q["code_logic_dups"] = code_logic_dups_q
@@ -5120,8 +5127,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def hl_pos_q(s, d):
         from lucille_spark.search_features import highlight_positions
 
-        return highlight_positions(
+        # gate projection only: the positions array as one sorted,
+        # comma-joined string (a list cell cannot be hashed or sorted
+        # by the gate's canonical row order); the operator itself
+        # keeps its array<int> column
+        out = highlight_positions(
             _index_for(s, d), "spark batch", [0, 1, 2, 3, 4]
+        )
+        return out.select(
+            "doc_id", "term",
+            F.array_join(F.array_sort("positions"), ",").alias("positions"),
         )
 
     q["ft_highlight_pos"] = hl_pos_q
@@ -9906,7 +9921,7 @@ k AS (SELECT doc_id, list_filter(l, x -> NOT (
 s AS (SELECT doc_id,
       sha256(array_to_string(kl, chr(10))) AS logic_sha256 FROM k)
 SELECT logic_sha256, count(*) AS n_docs,
-       list(doc_id ORDER BY doc_id) AS doc_ids
+       array_to_string(list(doc_id ORDER BY doc_id), ',') AS doc_ids
 FROM s GROUP BY 1 HAVING count(*) >= 2 ORDER BY logic_sha256"""
 
     # language from the fixture paths (the extension map itself is
@@ -11699,7 +11714,7 @@ FROM ex JOIN fin ON ex.b = fin.b ORDER BY ex.b"""
     # positional highlighting: term positions for docs 0..4
     o["ft_highlight_pos"] = f"""
 WITH pos AS ({_POS})
-SELECT doc_id, term, list(p ORDER BY p) AS positions
+SELECT doc_id, term, array_to_string(list(p ORDER BY p), ',') AS positions
 FROM pos WHERE term IN ('spark', 'batch') AND doc_id IN (0, 1, 2, 3, 4)
 GROUP BY doc_id, term ORDER BY doc_id, term"""
 

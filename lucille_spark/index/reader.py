@@ -32,11 +32,17 @@ from lucille_spark import plans as P
 from lucille_spark.index import fsio
 
 
-# Observability for the wildcard/regex expansion paths: how many
-# dictionary rows the last expansions actually scanned vs the
-# dictionary size (the n-gram prefilter's effect; same testing idea
-# as exec_wand._PRUNE_STATS for posting blocks).
+# Observability for the dictionary expansion paths (prefix, wildcard,
+# regex, range, fuzzy): how many dictionary rows the expansions
+# since the last reset scanned vs the dictionary size, one dictionary
+# size per expansion (the sorted-slice and n-gram prefilters' effect;
+# same testing idea as exec_wand._PRUNE_STATS for posting blocks).
 _DICT_SCAN_STATS = {"scanned_terms": 0, "total_terms": 0}
+
+
+def _count_scan(scanned: int, total: int) -> None:
+    _DICT_SCAN_STATS["scanned_terms"] += int(scanned)
+    _DICT_SCAN_STATS["total_terms"] += int(total)
 
 
 def reset_dict_scan_stats() -> None:
@@ -179,6 +185,7 @@ class DriverDictionary(P.TermDictionary):
     def expand_prefix(self, prefix: str) -> List[str]:
         lo = np.searchsorted(self.terms, prefix)
         hi = np.searchsorted(self.terms, prefix + "￿")
+        _count_scan(hi - lo, self.terms.size)
         return self.terms[lo:hi].tolist()
 
     def expand_regex(self, pattern: str) -> List[str]:
@@ -220,8 +227,7 @@ class DriverDictionary(P.TermDictionary):
                 # the required-gram buckets before the residual
                 cand = self._gram_candidates(pattern)
                 sl = self.terms if cand is None else self.terms[cand]
-        _DICT_SCAN_STATS["scanned_terms"] += int(sl.size)
-        _DICT_SCAN_STATS["total_terms"] += int(self.terms.size)
+        _count_scan(sl.size, self.terms.size)
         if sl.size == 0:
             return []
         mask = pd.Series(sl).str.fullmatch(pattern).to_numpy()
@@ -235,6 +241,7 @@ class DriverDictionary(P.TermDictionary):
         hi = self.terms.size
         if upper is not None:
             hi = np.searchsorted(self.terms, upper, "right" if upper_inc else "left")
+        _count_scan(max(hi - lo, 0), self.terms.size)
         return self.terms[lo:hi].tolist()
 
     def expand_fuzzy(
@@ -244,6 +251,8 @@ class DriverDictionary(P.TermDictionary):
             self._lens = np.char.str_len(self.terms.astype(str))
         near = np.abs(self._lens - len(term)) <= max_edits
         cand = self.terms[near]
+        # the edit-distance pass runs over the length band only
+        _count_scan(cand.size, self.terms.size)
         if cand.size == 0:
             return []
         mask = _lev_batch(
@@ -558,6 +567,20 @@ class SparkIndex:
                 self.segments_path
             )
         return self._cached_segments
+
+    def uncached(self, table: str) -> DataFrame:
+        """The `segments` or `doclens` table as a DataFrame that does
+        not scan through Spark's cache, for a one-time collect: the
+        reader's own when it was opened with cache=False. With
+        cache=True a plain re-read would match the pinned plan, and
+        collecting it would materialize the cache; the explicit
+        (default) mergeSchema option makes the read a different
+        relation, so it scans the files."""
+        if self._cache:
+            return self.spark.read.option("mergeSchema", "false").parquet(
+                os.path.join(self.dir, table)
+            )
+        return self.segments if table == "segments" else self.doclens
 
     # -- tombstone deletes -------------------------------------------
     # `deletes/` (written by index.maintenance.delete_docs) holds

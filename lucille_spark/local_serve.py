@@ -31,6 +31,7 @@ so a served query touches Spark zero times.
 
 from __future__ import annotations
 
+import threading
 from typing import Optional
 
 import pandas as pd
@@ -59,12 +60,29 @@ class LocalSearcher:
         blocks compressed and decodes per query."""
         from lucille_spark.index.reader import SparkIndex
 
-        self.ix = SparkIndex(
-            spark,
-            index_dir,
-            similarity=similarity,
-            field_similarity=field_similarity,
+        self._open(
+            SparkIndex(
+                spark,
+                index_dir,
+                similarity=similarity,
+                field_similarity=field_similarity,
+            ),
+            prune,
+            predecode,
         )
+
+    @classmethod
+    def from_index(cls, ix, prune: bool = True, predecode: bool = False):
+        """-> a LocalSearcher over an already open SparkIndex, sharing
+        its stats, dictionary, planner and tombstone set instead of
+        opening the directory a second time (`Searcher.embedded`).
+        Deletes refreshed through either side reach both."""
+        self = cls.__new__(cls)
+        self._open(ix, prune, predecode)
+        return self
+
+    def _open(self, ix, prune, predecode) -> None:
+        self.ix = ix
         self.prune = prune
         self.avgdl = float(self.ix.stats["avg_dl"])
         self.meta_cols = list(self.ix.stats.get("meta_cols", []))
@@ -72,9 +90,9 @@ class LocalSearcher:
 
         self.decode = DECODERS[self.ix.stats.get("codec", "varbyte")]
         # ---- the one-time loads (the ONLY Spark jobs) ----
-        self.seg_pdf = self.ix.segments.toPandas()
+        self.seg_pdf = self.ix.uncached("segments").toPandas()
         self.dl_pdf = (
-            self.ix.doclens.drop("shard")
+            self.ix.uncached("doclens").drop("shard")
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -82,6 +100,9 @@ class LocalSearcher:
         # in-process: always pass the tombstone ARRAY (the shipping
         # threshold exec_wand guards against does not apply here)
         self.deleted = self.ix.deleted_ids
+        # the reader's plan_version the tombstones above belong to
+        self._deletes_version = self.ix.plan_version
+        self._deletes_lock = threading.Lock()
         self._sd = (
             self._predecode(full=(predecode == "full"))
             if predecode
@@ -137,12 +158,23 @@ class LocalSearcher:
         reload (the NRT-delete story for a long-lived sidecar):
         re-read the delete set and, in predecoded mode, mask the
         newly dead ids out of the resident arrays in place — no
-        re-decode, no Spark scan of postings."""
+        re-decode, no Spark scan of postings. A refresh_deletes on
+        the shared reader (say through the Searcher that opened this
+        sidecar) is picked up by the next search the same way."""
+        self.ix.refresh_deletes()
+        self._sync_deletes()
+
+    def _sync_deletes(self) -> None:
+        with self._deletes_lock:
+            if self._deletes_version != self.ix.plan_version:
+                self._deletes_version = self.ix.plan_version
+                self._apply_deletes()
+
+    def _apply_deletes(self) -> None:
         import numpy as np
 
         from lucille_spark.exec_wand import _in_sorted
 
-        self.ix.refresh_deletes()
         new = self.ix.deleted_ids
         if new is None or (
             self.deleted is not None
@@ -198,6 +230,8 @@ class LocalSearcher:
         same kernel, no Spark job)."""
         from lucille_spark.exec_wand import _make_kernel
 
+        if self._deletes_version != self.ix.plan_version:
+            self._sync_deletes()
         node = self.ix.plan(query, synonyms=synonyms)
         if self._sd is not None:
             # hot path: one resident decoded ShardData, straight to

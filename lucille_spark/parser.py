@@ -4,30 +4,53 @@ A from-scratch implementation of the grammar of the reference parser
 (reference: core/.../QueryParser.scala:28-326 and internal/Op.scala:34-107).
 The reference is built on the cats-parse combinator library, whose
 committed/epsilon failure semantics are load-bearing for this grammar
-(`soft` products, `repUntil`, ordered `oneOf`). We therefore implement
-a tiny combinator kernel with the same semantics:
+(`soft` products, `repUntil`, ordered `oneOf`). This module keeps those
+semantics in a hand-fused recursive-descent kernel:
 
-- A parser is a callable ``p(s, i) -> (j, value)`` on success, or a
-  ``_Fail(off, committed)`` on failure. ``committed`` is True when
-  input was consumed before failing; alternation (`one_of`) and
-  repetition stop only on *epsilon* (uncommitted) failures.
-- ``soft_seq(a, b)``: like ``seq`` but if ``b`` fails *without
-  consuming*, the whole product fails without consuming (the `.soft`
-  operator in the reference, e.g. QueryParser.scala:55,64,75,232,241).
-- ``rep_until(p, until)``: repeat ``p`` until ``until`` would match
-  (QueryParser.scala:99,108).
+- A production is a function ``p(s, i, ...)`` returning ``(j, value)``
+  on success, ``None`` on an *epsilon* failure (nothing consumed; the
+  failure offset is always ``i``), or an ``int`` offset on a
+  *committed* failure (input was consumed before failing). Ordered
+  alternation and repetition stop only on epsilon failures.
+- ``a.soft ~ b`` (QueryParser.scala:55,64,75,232,241): if ``b`` fails
+  without consuming, the whole product fails without consuming.
+- ``repUntil(p, until)`` (QueryParser.scala:99,108): repeat ``p`` until
+  ``until`` would match; a failure of the ``until`` lookahead, committed
+  or not, only means "keep going".
 
 Grammar production order and committedness mirror
 QueryParser.scala:135-153 ("termAndWildCardQ should be near last,
 below boostQ") — the ordering is what disambiguates e.g. boosts,
-minimum-match vs groups, and fuzzy vs bare terms.
+minimum-match vs groups, and fuzzy vs bare terms. Most productions
+start with a fixed character, so ``query`` dispatches on the first
+character and tries only the productions that can match there; every
+skipped production would have failed epsilon, so the outcome (AST,
+committed/epsilon failure, offset) is the one the full ordered
+alternation gives. The term-start chain (fieldQuery, fuzzyT, boostQ,
+termAndWildCardQ) scans its term once and branches on the character
+after it.
+
+Reentrancy: ``QueryParser.parse`` creates the packrat memo for one call
+and passes it down; no grammar function reads or writes parser state,
+so one ``QueryParser`` (and the module-level ``parse``) can be used from
+many threads at once without a lock. Only an input that needs more
+stack than the interpreter's current recursion limit takes a locked
+path that raises the limit for the call.
+
+Cost (`scripts/parser_bench.py`, 4-CPU VM, median of 3 runs), mean µs
+per parse over the perfbench seed-1 pool, this kernel vs the generic
+combinator kernel it replaced: term 4.8 vs 55.0, and 11.4 vs 80.7,
+or 10.2 vs 94.1, phrase 3.9 vs 73.2, bool_not 13.8 vs 103.1, prefix
+5.0 vs 71.3, fuzzy 4.3 vs 59.7.
 """
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Tuple
+import re
+import sys
+import threading
+from typing import List, Tuple
 
-from lucille_spark import ast
 from lucille_spark.ast import (
     And,
     Boost,
@@ -61,255 +84,6 @@ class ParseError(ValueError):
         self.offset = offset
 
 
-# ------------------------------------------------------------------ kernel
-
-
-class _Fail:
-    __slots__ = ("off", "committed")
-
-    def __init__(self, off: int, committed: bool):
-        self.off = off
-        self.committed = committed
-
-
-def _char(c: str):
-    def run(s, i):
-        if i < len(s) and s[i] == c:
-            return (i + 1, c)
-        return _Fail(i, False)
-
-    return run
-
-
-def _char_in(chars):
-    cs = frozenset(chars)
-
-    def run(s, i):
-        if i < len(s) and s[i] in cs:
-            return (i + 1, s[i])
-        return _Fail(i, False)
-
-    return run
-
-
-def _char_where(pred):
-    def run(s, i):
-        if i < len(s) and pred(s[i]):
-            return (i + 1, s[i])
-        return _Fail(i, False)
-
-    return run
-
-
-def _string(txt: str):
-    n = len(txt)
-
-    def run(s, i):
-        if s.startswith(txt, i):
-            return (i + n, txt)
-        # cats-parse P.string fails epsilon unless a strict prefix matched;
-        # for our uses (reserved words inside one_of guarded by soft/not)
-        # epsilon failure is the behavior we need.
-        return (_Fail(i, False))
-
-    return run
-
-
-def _string_in(strs):
-    # longest match, like cats-parse P.stringIn (radix-tree longest match)
-    ordered = sorted(strs, key=len, reverse=True)
-
-    def run(s, i):
-        for t in ordered:
-            if s.startswith(t, i):
-                return (i + len(t), t)
-        return _Fail(i, False)
-
-    return run
-
-
-def _end(s, i):
-    if i == len(s):
-        return (i, None)
-    return _Fail(i, False)
-
-
-def _seq(*ps):
-    def run(s, i):
-        j = i
-        vals = []
-        for p in ps:
-            r = p(s, j)
-            if type(r) is _Fail:
-                return _Fail(r.off, r.committed or j > i)
-            j, v = r
-            vals.append(v)
-        return (j, tuple(vals))
-
-    return run
-
-
-def _soft_seq(a, b):
-    """a.soft ~ b: if b fails epsilon, the whole fails epsilon at start."""
-
-    def run(s, i):
-        ra = a(s, i)
-        if type(ra) is _Fail:
-            return ra
-        j, va = ra
-        rb = b(s, j)
-        if type(rb) is _Fail:
-            if rb.committed:
-                return _Fail(rb.off, True)
-            return _Fail(i, False)  # rewind: uncommitted failure
-        k, vb = rb
-        return (k, (va, vb))
-
-    return run
-
-
-def _left(p):
-    def pick(r):
-        return r[0]
-
-    return _map(p, pick)
-
-
-def _right(p):
-    def pick(r):
-        return r[-1]
-
-    return _map(p, pick)
-
-
-def _map(p, f):
-    def run(s, i):
-        r = p(s, i)
-        if type(r) is _Fail:
-            return r
-        j, v = r
-        return (j, f(v))
-
-    return run
-
-
-def _one_of(ps):
-    def run(s, i):
-        for p in ps:
-            r = p(s, i)
-            if type(r) is _Fail:
-                if r.committed:
-                    return r
-                continue
-            return r
-        return _Fail(i, False)
-
-    return run
-
-
-def _opt(p):
-    def run(s, i):
-        r = p(s, i)
-        if type(r) is _Fail:
-            if r.committed:
-                return r
-            return (i, None)
-        return r
-
-    return run
-
-
-def _rep(p, min_count=1):
-    def run(s, i):
-        j = i
-        out = []
-        while True:
-            r = p(s, j)
-            if type(r) is _Fail:
-                if r.committed:
-                    return r
-                break
-            j2, v = r
-            out.append(v)
-            j = j2
-        if len(out) < min_count:
-            return _Fail(i, False)
-        return (j, out)
-
-    return run
-
-
-def _not(p):
-    """P.not: succeed (consuming nothing) iff p fails; always backtracks."""
-
-    def run(s, i):
-        r = p(s, i)
-        if type(r) is _Fail:
-            return (i, None)
-        return _Fail(i, False)
-
-    return run
-
-
-def _peek(p):
-    """p.peek: succeed consuming nothing iff p succeeds."""
-
-    def run(s, i):
-        r = p(s, i)
-        if type(r) is _Fail:
-            return _Fail(i, False)
-        return (i, None)
-
-    return run
-
-
-def _string_of(p):
-    """p.string — discard value, capture the matched substring."""
-
-    def run(s, i):
-        r = p(s, i)
-        if type(r) is _Fail:
-            return r
-        j, _ = r
-        return (j, s[i:j])
-
-    return run
-
-
-def _rep_until(p, until, min_count):
-    """(not(until).with1 *> p).rep — stop when `until` would match or p
-    fails epsilon; propagate committed failures of p."""
-
-    def run(s, i):
-        j = i
-        out = []
-        while True:
-            ru = until(s, j)
-            if not isinstance(ru, _Fail):
-                break
-            r = p(s, j)
-            if type(r) is _Fail:
-                if r.committed:
-                    return r
-                break
-            j, v = r
-            out.append(v)
-        if len(out) < min_count:
-            return _Fail(i, False)
-        return (j, out)
-
-    return run
-
-
-def _recursive():
-    cell = [None]
-
-    def run(s, i):
-        return cell[0](s, i)
-
-    return run, cell
-
-
 # ------------------------------------------------------ character classes
 
 # reference QueryParser.scala:204-215
@@ -320,217 +94,245 @@ _QUOTES = frozenset('"“”')  # straight + smart quotes (:187)
 _SPECIAL = _LUCENE_SPECIAL | _QUOTES | {" "}
 _PHRASE_ESCAPABLE = _QUOTES | {"\\"}
 _RESERVED = ("OR", "||", "AND", "&&", "NOT", "+", "-", "/")
+# first characters of the reserved strings: a term starting with any
+# other character skips the reserved-prefix check
+_RESERVED_FIRST = frozenset(t[0] for t in _RESERVED)
+_ASCII_ALPHA = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
 LUCENE_SPECIAL = _LUCENE_SPECIAL
 PHRASE_ESCAPABLE = _PHRASE_ESCAPABLE
 
 
-def _allowed_pred(c: str) -> bool:
-    return c >= " " and c not in _SPECIAL
+def _cls(chars) -> str:
+    return "".join(re.escape(c) for c in sorted(chars))
 
 
-_wsp = _char_in(" \t")
-_sp = _char(" ")
-_spaces = _rep(_wsp, 1)
-_maybe_space = _opt(_spaces)
-_digit = _char_where(str.isdigit)
-_alpha = _char_where(lambda c: ("a" <= c <= "z") or ("A" <= c <= "Z"))
+# term (QueryParser.scala:218-219): allowed chars are >= ' ' and not
+# special; '\' escapes a special char. Phrase body (:221-225): inside a
+# phrase only quotes and backslash are special/escapable.
+_TERM_RE = re.compile(
+    r"(?:[^\x00-\x20%s]|\\[%s])+" % (_cls(_SPECIAL - {" "}), _cls(_SPECIAL))
+)
+_PHRASE_RE = re.compile(
+    r"(?:[^\x00-\x1f%s]|\\[%s])+" % (_cls(_PHRASE_ESCAPABLE), _cls(_PHRASE_ESCAPABLE))
+)
+_UNESCAPE = re.compile(r"\\(.)", re.S)
 
-# int: digits not followed by '.' (QueryParser.scala:190)
-def _int_run(s, i):
-    r = _rep(_digit, 1)(s, i)
-    if type(r) is _Fail:
-        return r
-    j, _ = r
-    if j < len(s) and s[j] == ".":
-        return _Fail(j, True)  # digits consumed then '.' forbidden → committed
+_MISS = object()  # memo sentinel: None is a stored epsilon failure
+
+
+# ------------------------------------------------------------- leaves
+#
+# Leaf productions take (s, i, n) with n == len(s) and never recurse.
+
+
+def _reserved_at(s: str, i: int) -> bool:
+    # not(stringIn(reserved)) guard; callers check _RESERVED_FIRST first
+    for t in _RESERVED:
+        if s.startswith(t, i):
+            return True
+    return False
+
+
+def _term(s, i, n):
+    """term: reserved prefix -> epsilon fail; '\\' followed by a
+    non-special char (or the end) -> committed fail just past it."""
+    if i < n and s[i] in _RESERVED_FIRST and _reserved_at(s, i):
+        return None
+    mt = _TERM_RE.match(s, i)
+    j = i if mt is None else mt.end()
+    if j < n and s[j] == "\\":
+        return j + 1
+    if mt is None:
+        return None
+    txt = mt.group()
+    if "\\" in txt:
+        txt = _UNESCAPE.sub(r"\1", txt)
+    return (j, txt)
+
+
+def _phrase(s, i, n):
+    """quote body quote, s[i] a quote: once the opening quote is
+    consumed every failure is committed (an empty body included)."""
+    mt = _PHRASE_RE.match(s, i + 1)
+    j = i + 1 if mt is None else mt.end()
+    if j < n and s[j] == "\\":
+        return j + 1
+    if mt is None:
+        return i + 1
+    if j < n and s[j] in _QUOTES:
+        body = mt.group()
+        if "\\" in body:
+            body = _UNESCAPE.sub(r"\1", body)
+        return (j + 1, body)
+    return j
+
+
+def _int(s, i, n):
+    # int: digits not followed by '.' (QueryParser.scala:190)
+    j = i
+    while j < n and s[j].isdigit():
+        j += 1
+    if j == i:
+        return None
+    if j < n and s[j] == ".":
+        return j  # digits consumed then '.' forbidden -> committed
     return (j, int(s[i:j]))
 
 
-_int = _int_run
-
-
-def _float_run(s, i):
+def _float(s, i, n):
     # float: digits (('.' digits)?) (QueryParser.scala:198-202)
-    r = _rep(_digit, 1)(s, i)
-    if type(r) is _Fail:
-        return r
-    j, _ = r
-    if j < len(s) and s[j] == ".":
-        r2 = _rep(_digit, 1)(s, j + 1)
-        if type(r2) is _Fail:
-            return _Fail(r2.off, True)  # '.' consumed, digits required
-        j, _ = r2
+    j = i
+    while j < n and s[j].isdigit():
+        j += 1
+    if j == i:
+        return None
+    if j < n and s[j] == ".":
+        k = j + 1
+        while k < n and s[k].isdigit():
+            k += 1
+        if k == j + 1:
+            return k  # '.' consumed, digits required
+        j = k
     return (j, float(s[i:j]))
 
 
-# queryEnd = (wsp | end | ')').peek (QueryParser.scala:215)
-_query_end = _peek(_one_of([_wsp, _end, _char(")")]))
+def _at_query_end(s, j, n) -> bool:
+    # queryEnd = (wsp | end | ')').peek (QueryParser.scala:215)
+    return j == n or s[j] in " \t)"
 
 
-# term (QueryParser.scala:218-219): reject reserved *prefixes*.
-# Hand-rolled scanner equivalent to
-#   _right(_seq(_not(_string_in(_RESERVED)),
-#               _map(_rep(_one_of([_allowed_char, _escaped_token]), 1),
-#                    "".join)))
-# — ~4 closure calls per character in the combinator form, and terms
-# are the hottest production. Failure semantics preserved exactly:
-# reserved prefix -> epsilon fail; '\' followed by a non-special (or
-# end) -> COMMITTED fail at the post-backslash offset (the _seq had
-# consumed the backslash).
-_reserved_prefix = _string_in(_RESERVED)
+def _boost_suffix(s, j, n, q):
+    """boostQ's `.soft ~ ('^' float queryEnd)` after a limited query
+    ending at j (:62-67): no '^' -> (j, q) unchanged, the soft rewind;
+    '^' then a bad float or no queryEnd -> committed."""
+    if j >= n or s[j] != "^":
+        return (j, q)
+    f = _float(s, j + 1, n)
+    if f is None:
+        return j + 1
+    if type(f) is int:
+        return f
+    k, b = f
+    if not _at_query_end(s, k, n):
+        return k
+    return (k, Boost(q, b))
 
-# first characters of the reserved strings — lets _term skip the
-# 8-way startswith loop for ~every real token
-_RESERVED_FIRST = frozenset(t[0] for t in _RESERVED)
+
+def _wildcard_run(s, j, n, ops):
+    """termAndWildCardQ's rep(oneOf('?', '*', term)) continued from j,
+    collapsed (QueryParser.scala:250-261). After a term only '?'/'*'
+    can follow (terms are scanned maximally)."""
+    while j < n:
+        c = s[j]
+        if c == "?":
+            ops.append(SingleChar())
+            j += 1
+        elif c == "*":
+            ops.append(ManyChar())
+            j += 1
+        else:
+            if ops and type(ops[-1]) is Str:
+                break
+            t = _term(s, j, n)
+            if t is None:
+                break
+            if type(t) is int:
+                return t
+            j = t[0]
+            ops.append(Str(t[1]))
+    if len(ops) == 1 and type(ops[0]) is Str:
+        return (j, Term(ops[0].value))
+    if len(ops) == 2 and type(ops[0]) is Str and type(ops[1]) is ManyChar:
+        return (j, Prefix(ops[0].value))
+    return (j, WildCard(tuple(ops)))
 
 
-def _term(s, i):
-    if i < len(s) and s[i] in _RESERVED_FIRST:
-        for t in _RESERVED:
-            if s.startswith(t, i):
-                return _Fail(i, False)
-    n = len(s)
-    j = i
-    buf = []
+def _regex(s, i, n):
+    """'/' body '/', s[i] == '/', body kept raw with its '\\/' escapes
+    (QueryParser.scala:264-273); '\\' not followed by '/' commits."""
+    j = i + 1
     while j < n:
         c = s[j]
         if c == "\\":
-            if j + 1 < n and s[j + 1] in _SPECIAL:
-                buf.append(s[j + 1])
+            if j + 1 < n and s[j + 1] == "/":
                 j += 2
                 continue
-            return _Fail(j + 1, True)
-        if c >= " " and c not in _SPECIAL:
-            buf.append(c)
+            return j + 1
+        if c >= " " and c != "/":
             j += 1
             continue
         break
-    if j == i:
-        return _Fail(i, False)
-    return (j, "".join(buf))
+    if j == i + 1:
+        return i + 1
+    if j < n and s[j] == "/":
+        return (j + 1, TermRegex(s[i + 1:j]))
+    return j
 
 
-# phrase (QueryParser.scala:221-225) — same hand-rolled shape; inside
-# a phrase only quotes and backslash are special/escapable
+def _skip_ws(s, j, n):
+    while j < n and s[j] in " \t":
+        j += 1
+    return j
 
 
-def _phrase_body(s, i):
-    n = len(s)
-    j = i
-    buf = []
-    while j < n:
-        c = s[j]
-        if c == "\\":
-            if j + 1 < n and s[j + 1] in _PHRASE_ESCAPABLE:
-                buf.append(s[j + 1])
-                j += 2
-                continue
-            return _Fail(j + 1, True)
-        if c >= " " and c not in _PHRASE_ESCAPABLE:
-            buf.append(c)
-            j += 1
-            continue
-        break
-    if j == i:
-        return _Fail(i, False)
-    return (j, "".join(buf))
+def _range_bound(s, k, n):
+    # '*' -> open bound, else not(reserved) then [A-Za-z digit .]+
+    if k < n and s[k] == "*":
+        return (k + 1, None)
+    if k < n and s[k] in _RESERVED_FIRST and _reserved_at(s, k):
+        return None
+    j = k
+    while j < n and ((c := s[j]) in _ASCII_ALPHA or c.isdigit() or c == "."):
+        j += 1
+    if j == k:
+        return None
+    return (j, s[k:j])
 
 
-def _phrase_run(s, i):
-    r = _seq(_char_in(_QUOTES), _phrase_body, _char_in(_QUOTES))(s, i)
-    if type(r) is _Fail:
-        return r
-    j, (_, body, _) = r
-    return (j, body)
+def _range(s, i, n):
+    """rangeQuery (QueryParser.scala:278-289), s[i] in '[{': '[' / ']'
+    inclusive. The bracket is consumed, so every failure commits at
+    the offset of the first element that fails."""
+    lo_inc = s[i] == "["
+    k = _skip_ws(s, i + 1, n)
+    r = _range_bound(s, k, n)
+    if r is None:
+        return k
+    k, lo = r
+    k2 = _skip_ws(s, k, n)
+    if k2 == k:
+        return k
+    if not s.startswith("TO", k2):
+        return k2
+    k = k2 + 2
+    k2 = _skip_ws(s, k, n)
+    if k2 == k:
+        return k
+    r = _range_bound(s, k2, n)
+    if r is None:
+        return k2
+    k, hi = r
+    k = _skip_ws(s, k, n)
+    if k < n and s[k] in "}]":
+        return (k + 1, TermRange(lo, hi, lo_inc, s[k] == "]"))
+    return k
 
-
-_phrase = _phrase_run
-
-
-# proximity: phrase.soft <* '~' then int (QueryParser.scala:232-239)
-
-# fuzzy: term.soft <* '~' then int? (QueryParser.scala:241-248)
-
-
-def _collapse_wildcard(ops: List[object]) -> Query:
-    # collapse rules (QueryParser.scala:257-261)
-    if len(ops) == 1 and isinstance(ops[0], Str):
-        return Term(ops[0].value)
-    if (
-        len(ops) == 2
-        and isinstance(ops[0], Str)
-        and isinstance(ops[1], ManyChar)
-    ):
-        return Prefix(ops[0].value)
-    return WildCard(tuple(ops))
-
-
-_wc_single = _map(_char("?"), lambda _: SingleChar())
-_wc_many = _map(_char("*"), lambda _: ManyChar())
-
-# regex: '/pat/', '\/' escape, slashes stripped (QueryParser.scala:264-273)
-_regex_char = _char_where(lambda c: c >= " " and c not in "\\/")
-_regex_body = _string_of(_rep(_one_of([_regex_char, _seq(_char("\\"), _char("/"))]), 1))
-
-
-def _regex_run(s, i):
-    r = _seq(_char("/"), _regex_body, _char("/"))(s, i)
-    if type(r) is _Fail:
-        return r
-    j, (_, body, _) = r
-    return (j, TermRegex(body))
-
-
-_regex_q = _regex_run
-
-
-# rangeQuery components hoisted to module level — _range_run is tried
-# at every query position, and rebuilding the closures per call was
-# measurable in profiles
-_range_bound_txt = _string_of(_rep(_one_of([_alpha, _digit, _char(".")]), 1))
-_range_bound = _one_of(
-    [
-        _map(_char("*"), lambda _: None),
-        _right(
-            _seq(_not(_reserved_prefix), _map(_range_bound_txt, lambda t: t))
-        ),
-    ]
-)
-_range_p = _seq(
-    _char_in("{["),
-    _maybe_space,
-    _range_bound,
-    _spaces,
-    _string("TO"),
-    _spaces,
-    _range_bound,
-    _maybe_space,
-    _char_in("}]"),
-)
-
-
-def _range_run(s, i):
-    # rangeQuery (QueryParser.scala:278-289): '[' / '{' … TO … ']' / '}'
-    # '[' → lower inclusive, ']' → upper inclusive
-    r = _range_p(s, i)
-    if type(r) is _Fail:
-        return r
-    j, (lo_b, _, lo, _, _, _, hi, _, hi_b) = r
-    return (j, TermRange(lo, hi, lo_b == "[", hi_b == "]"))
-
-
-_range_q = _range_run
 
 # infix ops (QueryParser.scala:291-293)
 _OP_OR = "OR"
 _OP_AND = "AND"
-_infix_op = _one_of(
-    [
-        _map(_one_of([_string("OR"), _string("||")]), lambda _: _OP_OR),
-        _map(_one_of([_string("AND"), _string("&&")]), lambda _: _OP_AND),
-    ]
-)
+
+
+def _infix_op(s, k):
+    # -> (op, end) or None
+    if s.startswith("OR", k) or s.startswith("||", k):
+        return (_OP_OR, k + 2)
+    if s.startswith("AND", k):
+        return (_OP_AND, k + 3)
+    if s.startswith("&&", k):
+        return (_OP_AND, k + 2)
+    return None
 
 
 def associate_ops(first: Query, op_qs: List[Tuple[str, Query]]) -> Query:
@@ -567,287 +369,229 @@ def associate_ops(first: Query, op_qs: List[Tuple[str, Query]]) -> Query:
 
 # ------------------------------------------------------------- the parser
 
+# parses that need more stack than the current recursion limit take
+# this lock while they raise it (the limit is interpreter-wide)
+_DEEP_LOCK = threading.Lock()
+
 
 class QueryParser:
     """Parser with a configurable default boolean operator
-    (reference QueryParser.scala:28-30, 170-176)."""
+    (reference QueryParser.scala:28-30, 170-176). Reentrant: one
+    instance may parse on many threads at once."""
 
     def __init__(self, default_boolean_or: bool = True):
         self.default_boolean_or = default_boolean_or
-        self._memo = {}
         self._full = self._build()
 
-    # grammar assembly, mirroring QueryParser.scala productions
+    # grammar assembly, mirroring QueryParser.scala productions. The
+    # closures are built once per parser; a parse passes its memo `m`
+    # down to `query` and `nel_queries`, the memoized productions (and
+    # through the helpers that call them). `m` maps a position i to the
+    # query result at i, and ~i (a negative key) to the nelQueries
+    # result at i.
     def _build(self):
-        query, cell = _recursive()
+        make_list = Or.from_list_unsafe if self.default_boolean_or else And.from_list_unsafe
 
-        # Packrat-memoized leaf productions. A bare term is otherwise
-        # scanned up to 5 times per position (fieldQuery soft, fuzzy
-        # soft, boostQ's field + wildcard attempts, then the winning
-        # termAndWildCardQ); a phrase 3 times (proximity soft, boostQ,
-        # phraseQ). Results at a position are pure, so caching them in
-        # the per-parse memo (cleared by parse()) changes nothing but
-        # speed. Keys are tuples — nel_queries uses plain int keys in
-        # the same dict.
-        def term_m(s, i):
-            memo = self._memo
-            r = memo.get(("t", i))
-            if r is None:
-                r = _term(s, i)
-                memo[("t", i)] = r
-            return r
-
-        def phrase_m(s, i):
-            memo = self._memo
-            r = memo.get(("p", i))
-            if r is None:
-                r = _phrase(s, i)
-                memo[("p", i)] = r
-            return r
-
-        phrase_q = _map(phrase_m, Phrase)
-        prox_soft = _map(_soft_seq(phrase_m, _char("~")), lambda t: t[0])
-        proximity_q = _map(
-            _seq(prox_soft, _int), lambda t: Proximity(t[0], t[1])
-        )
-        fuzzy_soft = _map(_soft_seq(term_m, _char("~")), lambda t: t[0])
-        fuzzy_t = _map(_seq(fuzzy_soft, _opt(_int)), lambda t: Fuzzy(t[0], t[1]))
-        wc_str = _map(term_m, Str)
-        term_and_wildcard_raw = _map(
-            _rep(_one_of([_wc_single, _wc_many, wc_str]), 1),
-            _collapse_wildcard,
-        )
-
-        def term_and_wildcard_q(s, i):
-            memo = self._memo
-            r = memo.get(("w", i))
-            if r is None:
-                r = term_and_wildcard_raw(s, i)
-                memo[("w", i)] = r
-            return r
-
-        def not_q(s, i):
-            # (P.string("NOT").soft ~ maybeSpace) *> query (:37-38)
-            r = _soft_seq(_string("NOT"), _maybe_space)(s, i)
-            if type(r) is _Fail:
-                return r
-            j, _ = r
-            rq = query(s, j)
-            if isinstance(rq, _Fail):
-                return _Fail(rq.off, True)
-            k, v = rq
-            return (k, Not(v))
-
-        unary_plus = _map(_right(_seq(_char("+"), query)), UnaryPlus)
-        unary_minus = _map(_right(_seq(_char("-"), query)), UnaryMinus)
-
-        # fieldValueSoft = term.soft <* ':' (:55-57)
-        field_value_soft = _map(_soft_seq(term_m, _char(":")), lambda t: t[0])
-        field_query = _map(
-            _seq(field_value_soft, query), lambda t: Field(t[0], t[1])
-        )
-
-        def group_q(s, i):
-            # '(' wrappedQueries ')' <* not('@') (:113-118)
-            r = _seq(_char("("), wrapped_queries, _char(")"))(s, i)
-            if type(r) is _Fail:
-                return r
-            j, (_, q, _) = r
-            if j < len(s) and s[j] == "@":
-                # '(…)' consumed then the not('@') guard fails → arresting
-                # failure, so MinimumMatch (tried earlier) wins (:116-117)
-                return _Fail(j, True)
-            return (j, Group(q))
-
-        # boostQ (:62-67): limited targets, '^' float queryEnd
-        limited_q = _one_of(
-            [field_query, term_and_wildcard_q, phrase_q, group_q]
-        )
-
-        def boost_suffix_run(s, i):
-            r = _seq(_char("^"), _float_run, _query_end)(s, i)
-            if type(r) is _Fail:
-                return r
-            j, (_, f, _) = r
-            return (j, f)
-
-        boost_q = _map(
-            _soft_seq(limited_q, boost_suffix_run), lambda t: Boost(t[0], t[1])
-        )
-
-        # nelQueries (QueryParser.scala:82-100): leading implicit list,
-        # suffix op-chain association, repeated until end-of-list.
-        qs_and_last = _rep(_left(_soft_take_left(query, _maybe_space)), 1)
-        until_suffix = _right(_seq(_maybe_space, _one_of([_end, query])))
-        suffix_ops = _rep_until(
-            _seq(
-                _right(_seq_with1(_maybe_space, _infix_op)),
-                _rep(_sp, 1),
-                query,
-            ),
-            until_suffix,
-            0,
-        )
-
-        def combined(s2, j2):
-            # maybeSpace.with1 *> (qsAndLast ~ suffixOps) (:87)
-            rs = _maybe_space(s2, j2)
-            j3, _ = rs
-            r1 = qs_and_last(s2, j3)
-            if isinstance(r1, _Fail):
-                return _Fail(r1.off, r1.committed or j3 > j2)
-            j4, qlist = r1
-            r2 = suffix_ops(s2, j4)
-            if type(r2) is _Fail:
-                return _Fail(r2.off, True)
-            j5, ops = r2
-            ops = [(op, q) for (op, _sp_, q) in ops]
-            init, last = qlist[:-1], qlist[-1]
-            if ops:
-                return (j5, list(init) + [associate_ops(last, ops)])
-            return (j5, list(init) + [last])
-
-        rep_all = _rep_until(combined, _seq(_maybe_space, _end), 1)
-
-        def nel_queries(s, i):
-            # packrat memo: nelQueries at a given position always yields
-            # the same result within one parse; without this, nested
-            # groups are re-parsed once each by minimumMatchQ, boostQ and
-            # groupQ → exponential time on deep nesting. Pure speedup —
-            # identical results.
-            memo = self._memo
-            hit = memo.get(i)
-            if hit is not None:
-                return hit
-            r = rep_all(s, i)
-            if type(r) is _Fail:
-                memo[i] = r
-                return r
-            j, chains = r
-            out: List[Query] = []
-            for c in chains:
-                out.extend(c)
-            memo[i] = (j, out)
-            return (j, out)
-
-        def minimum_match_q(s, i):
-            # '(' nelQueries ')' .soft '@' int queryEnd (:72-76)
-            grouped = _seq(_char("("), nel_queries, _char(")"))
-            r = grouped(s, i)
-            if type(r) is _Fail:
-                return r
-            j, (_, qs, _) = r
-            rn = _seq(_char("@"), _int, _query_end)(s, j)
-            if isinstance(rn, _Fail):
-                if rn.committed:
-                    return _Fail(rn.off, True)
-                return _Fail(i, False)  # soft rewind
-            k, (_, n, _) = rn
-            return (k, MinimumMatch(tuple(qs), n))
-
-        # order is load-bearing (QueryParser.scala:131-153)
-        # order is load-bearing (QueryParser.scala:131-153)
-        full_alt = _one_of(
-            [
-                unary_plus,
-                unary_minus,
-                not_q,
-                field_query,
-                proximity_q,
-                _range_q,
-                fuzzy_t,
-                minimum_match_q,
-                boost_q,
-                term_and_wildcard_q,
-                _regex_q,
-                phrase_q,
-                group_q,
-            ]
-        )
-        # First-set prediction: when the next char is a plain term
-        # character (not special, not 'N' which may start NOT),
-        # unaryPlus('+'), unaryMinus('-'), notQ('NOT'),
-        # proximity/phrase('"'/smart quotes), range('['/'{'),
-        # minimumMatch/group('('), regex('/') ALL fail epsilon on
-        # their first char, so skipping them is observationally
-        # identical to the full ordered alternation — same matches,
-        # same committed/epsilon failures. ~10 closure calls + _Fail
-        # allocations saved per query position; purely a speedup.
-        term_start_alt = _one_of(
-            [field_query, fuzzy_t, boost_q, term_and_wildcard_q]
-        )
-        special = _SPECIAL
-
-        def query_dispatch(s, i):
-            # full packrat on the whole query production: the
-            # implicit-list loop and the suffix-op `until` lookahead
-            # each attempt `query` at the same positions the real
-            # parse then consumes — pure, so cache by position (same
-            # per-parse memo dict as nel_queries/leaves)
-            memo = self._memo
-            r = memo.get(("q", i))
-            if r is not None:
-                return r
-            if i < len(s) and (
-                (c := s[i]) >= " " and c != "N" and c not in special
-            ):
-                r = term_start_alt(s, i)
-            else:
-                r = full_alt(s, i)
-            memo[("q", i)] = r
-            return r
-
-        cell[0] = query_dispatch
-
-        def wrapped_queries(s, i):
+        def wrapped(qs):
             # wrap multi-query lists in the default boolean (:124-129)
-            r = nel_queries(s, i)
-            if type(r) is _Fail:
+            return qs[0] if len(qs) == 1 else make_list(qs)
+
+        def query(s, i, m):
+            # packrat: the implicit-list loop and the suffix-op `until`
+            # lookahead both try `query` at positions the real parse
+            # then consumes
+            r = m.get(i, _MISS)
+            if r is not _MISS:
                 return r
+            n = len(s)
+            c = s[i] if i < n else ""
+            if c >= " " and c != "N" and c not in _SPECIAL:
+                r = term_start(s, i, n, m)
+            elif c == "(":
+                r = paren(s, i, n, m)
+            elif c in _QUOTES:
+                r = quoted(s, i, n)
+            elif c == "+" or c == "-":
+                # unaryPlus / unaryMinus: the sign is consumed, so a
+                # failing operand commits
+                r = query(s, i + 1, m)
+                if type(r) is tuple:
+                    r = (r[0], (UnaryPlus if c == "+" else UnaryMinus)(r[1]))
+                elif r is None:
+                    r = i + 1
+            elif c == "N" and s.startswith("NOT", i):
+                # notQ: (P.string("NOT").soft ~ maybeSpace) *> query (:37-38)
+                k = _skip_ws(s, i + 3, n)
+                r = query(s, k, m)
+                if type(r) is tuple:
+                    r = (r[0], Not(r[1]))
+                elif r is None:
+                    r = k
+            elif c == "N" or c == "\\":
+                # a term (an escape or a non-NOT 'N'): the term-start
+                # chain is all that can match here
+                r = term_start(s, i, n, m)
+            elif c == "[" or c == "{":
+                r = _range(s, i, n)
+            elif c == "?" or c == "*":
+                r = _wildcard_run(s, i, n, [])
+                if type(r) is tuple:
+                    r = _boost_suffix(s, r[0], n, r[1])
+            elif c == "/":
+                r = _regex(s, i, n)
+            else:
+                r = None  # end of input, space, control or stray special
+            m[i] = r
+            return r
+
+        def term_start(s, i, n, m):
+            # fieldQuery | fuzzyT | boostQ | termAndWildCardQ, all of
+            # which start with the same term; the char after it picks
+            t = _term(s, i, n)
+            if type(t) is not tuple:
+                return t
+            j, txt = t
+            c = s[j] if j < n else ""
+            if c == ":":
+                # fieldValueSoft = term.soft <* ':' (:55-57), then query
+                r = query(s, j + 1, m)
+                if type(r) is tuple:
+                    return (r[0], Field(txt, r[1]))
+                return j + 1 if r is None else r
+            if c == "~":
+                # fuzzyT: term.soft <* '~' then int? (:241-248)
+                r = _int(s, j + 1, n)
+                if type(r) is tuple:
+                    return (r[0], Fuzzy(txt, r[1]))
+                return (j + 1, Fuzzy(txt, None)) if r is None else r
+            # boostQ over termAndWildCardQ, else termAndWildCardQ
+            w = _wildcard_run(s, j, n, [Str(txt)])
+            if type(w) is not tuple:
+                return w
+            return _boost_suffix(s, w[0], n, w[1])
+
+        def quoted(s, i, n):
+            # proximityQ: phrase.soft <* '~' then int (:232-239), else
+            # boostQ over phraseQ, else phraseQ
+            p = _phrase(s, i, n)
+            if type(p) is not tuple:
+                return p
+            j, body = p
+            if j < n and s[j] == "~":
+                r = _int(s, j + 1, n)
+                if type(r) is tuple:
+                    return (r[0], Proximity(body, r[1]))
+                return j + 1 if r is None else r
+            return _boost_suffix(s, j, n, Phrase(body))
+
+        def paren(s, i, n, m):
+            # minimumMatchQ: '(' nelQueries ')' .soft '@' int queryEnd
+            # (:72-76); else boostQ over groupQ, else groupQ (:113-118).
+            # '(' nelQueries ')' is shared and commits once '(' is in.
+            r = nel_queries(s, i + 1, m)
+            if type(r) is not tuple:
+                return i + 1 if r is None else r
             j, qs = r
-            if len(qs) == 1:
-                return (j, qs[0])
-            ctor = Or if self.default_boolean_or else And
-            return (j, ctor.from_list_unsafe(qs))
+            if j >= n or s[j] != ")":
+                return j
+            j += 1
+            if j < n and s[j] == "@":
+                r = _int(s, j + 1, n)
+                if type(r) is not tuple:
+                    return j + 1 if r is None else r
+                k, num = r
+                if not _at_query_end(s, k, n):
+                    return k
+                return (k, MinimumMatch(tuple(qs), num))
+            return _boost_suffix(s, j, n, Group(wrapped(qs)))
 
-        def full(s, i):
-            r = wrapped_queries(s, i)
-            if type(r) is _Fail:
+        def nel_queries(s, i, m):
+            # nelQueries (QueryParser.scala:82-100): repeated until
+            # maybeSpace ~ end, each round a leading implicit list
+            # (query <* maybeSpace).rep then suffix op-chains
+            # (maybeSpace.with1 *> infixOp) ~ ' '.rep ~ query, the chain
+            # folded into the last query of the list. Packrat-memoized:
+            # minimumMatchQ and groupQ share the nested list.
+            key = ~i
+            r = m.get(key, _MISS)
+            if r is not _MISS:
                 return r
-            j, q = r
-            rs = _maybe_space(s, j)
-            j, _ = rs
-            return (j, q)
+            n = len(s)
+            j = i
+            out: List[Query] = []
+            while True:
+                k = _skip_ws(s, j, n)
+                if k == n:
+                    break
+                qs: List[Query] = []
+                p = k
+                while True:
+                    r = query(s, p, m)
+                    if type(r) is not tuple:
+                        break
+                    qs.append(r[1])
+                    p = _skip_ws(s, r[0], n)
+                if r is not None:
+                    m[key] = r
+                    return r
+                if not qs:
+                    if k > j:  # spaces consumed before the failure
+                        m[key] = k
+                        return k
+                    break
+                ops = []
+                while True:
+                    # until: maybeSpace then end or a query
+                    k = _skip_ws(s, p, n)
+                    if k == n or type(query(s, k, m)) is tuple:
+                        break
+                    op = _infix_op(s, k)
+                    if op is None:
+                        if k > p:  # spaces consumed, no operator
+                            m[key] = k
+                            return k
+                        break
+                    op, k = op
+                    if k >= n or s[k] != " ":
+                        m[key] = k
+                        return k
+                    k += 1
+                    while k < n and s[k] == " ":
+                        k += 1
+                    r = query(s, k, m)
+                    if type(r) is not tuple:
+                        r = k if r is None else r
+                        m[key] = r
+                        return r
+                    ops.append((op, r[1]))
+                    p = r[0]
+                if ops:
+                    qs[-1] = associate_ops(qs[-1], ops)
+                out.extend(qs)
+                j = p
+            r = (j, out) if out else None
+            m[key] = r
+            return r
 
-        self._query = query
+        def full(s):
+            r = nel_queries(s, 0, {})
+            if type(r) is not tuple:
+                return r
+            return (_skip_ws(s, r[0], len(s)), wrapped(r[1]))
+
         return full
 
     def parse(self, input_str: str) -> Query:
         """Parse a whole string; raises ParseError on failure
         (reference QueryParser.scala:164-168, parseAll semantics)."""
-        import sys
-
-        # deep nesting costs ~20 Python frames per paren level; give
-        # pathological-but-valid queries headroom, and turn stack
-        # exhaustion into a ParseError instead of a RecursionError
-        old_limit = sys.getrecursionlimit()
-        # ~15 frames per nesting level; cap the raise — deeper inputs
-        # would risk exhausting the C stack, fail them cleanly instead
-        needed = min(2000 + 20 * len(input_str), 60_000)
-        self._memo = {}
         try:
-            if needed > old_limit:
-                sys.setrecursionlimit(needed)
-            r = self._full(input_str, 0)
+            r = self._full(input_str)
         except RecursionError:
-            raise ParseError("Parse error: query too deeply nested", 0) from None
-        finally:
-            sys.setrecursionlimit(old_limit)
-            self._memo = {}
-        if type(r) is _Fail:
-            raise ParseError(
-                f"Parse error at offset {r.off}", r.off
-            )
+            r = self._parse_deep(input_str)
+        if r is None:
+            raise ParseError("Parse error at offset 0", 0)
+        if type(r) is int:
+            raise ParseError(f"Parse error at offset {r}", r)
         j, q = r
         if j != len(input_str):
             raise ParseError(
@@ -855,40 +599,29 @@ class QueryParser:
             )
         return q
 
+    def _parse_deep(self, input_str: str):
+        # deep nesting costs ~2 Python frames per paren level; retry
+        # with headroom, and turn stack exhaustion into a ParseError
+        # instead of a RecursionError. The cap keeps deeper inputs from
+        # exhausting the C stack.
+        needed = min(2000 + 20 * len(input_str), 60_000)
+        with _DEEP_LOCK:
+            old_limit = sys.getrecursionlimit()
+            try:
+                if needed > old_limit:
+                    sys.setrecursionlimit(needed)
+                return self._full(input_str)
+            except RecursionError:
+                raise ParseError("Parse error: query too deeply nested", 0) from None
+            finally:
+                sys.setrecursionlimit(old_limit)
+
     def parse_either(self, input_str: str):
         """Either-style result: (None, query) or (error_message, None)."""
         try:
             return (None, self.parse(input_str))
         except ParseError as e:
             return (str(e), None)
-
-
-def _soft_take_left(a, b):
-    # (query <* maybeSpace) — maybeSpace can't fail so plain seq, take left
-    def run(s, i):
-        ra = a(s, i)
-        if type(ra) is _Fail:
-            return ra
-        j, va = ra
-        rb = b(s, j)
-        j2, _ = rb
-        return (j2, (va, None))
-
-    return run
-
-
-def _seq_with1(p0, p1):
-    # maybeSpace.with1 *> p1 — committed if whitespace consumed before fail
-    def run(s, i):
-        r0 = p0(s, i)
-        j, _ = r0
-        r1 = p1(s, j)
-        if isinstance(r1, _Fail):
-            return _Fail(r1.off, r1.committed or j > i)
-        k, v = r1
-        return (k, (None, v))
-
-    return run
 
 
 default_parser = QueryParser(default_boolean_or=True)

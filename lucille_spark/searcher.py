@@ -118,29 +118,22 @@ class Searcher:
         self._rcache_misses = 0
 
     def embedded(self, predecode: bool = True):
-        """-> a LocalSearcher over the same index dir and similarity:
-        the zero-Spark-jobs serving path (local_serve) for when this
+        """-> a LocalSearcher over this Searcher's open index: the
+        zero-Spark-jobs serving path (local_serve) for when this
         process should answer single queries at millisecond latency
-        — a sidecar next to the batched submit() front door. Single
+        — a sidecar next to the batched submit() front door. It
+        shares the reader (stats, dictionary, planner, tombstones),
+        so opening it collects only the segment and doclens tables,
+        and a refresh_deletes on either side reaches both. Single
         physical indexes only (alias sets stay on the batched path)."""
         from lucille_spark.local_serve import LocalSearcher
 
-        if not isinstance(getattr(self.index, "dir", None), str):
+        if not isinstance(self.index, SparkIndex):
             raise ValueError(
                 "embedded() serves a single physical index; alias "
                 "sets stay on the batched search_many path"
             )
-        return LocalSearcher(
-            self.index.spark,
-            self.index.dir,
-            similarity=getattr(
-                self.index.planner, "similarity", "bm25"
-            ),
-            field_similarity=getattr(
-                self.index.planner, "field_similarity", None
-            ),
-            predecode=predecode,
-        )
+        return LocalSearcher.from_index(self.index, predecode=predecode)
 
     # -- request cache ---------------------------------------------
     def enable_request_cache(self, max_entries: int = 128) -> None:

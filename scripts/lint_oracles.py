@@ -12,11 +12,20 @@ errors (VERDICT r3 "What's wrong" #1-2):
      count(*) semantics differ in width, which a hasher may normalize
      differently from Spark's BIGINT even with zero value diffs.
 
+A third class makes a gate error even when both engines agree: an
+oracle and gate that return a LIST column (ft_highlight_pos positions,
+code_logic_dups doc_ids before their projections were scalarized).
+The gate harness sorts and hashes result cells, and a list cell can
+be neither.
+
 This linter EXECUTES every oracle at sf0.01 and flags, per column:
 
   * HUGEINT / INT128 / UINT128 / DECIMAL result types (class 2): the
     projection must CAST to BIGINT/DOUBLE so both engines agree on a
     canonical width.
+  * non-scalar result types — LIST (`T[]`), fixed ARRAY (`T[n]`),
+    STRUCT, MAP, UNION (class 3): the projection must emit a scalar
+    (e.g. `array_to_string(list(x ORDER BY x), ',')`).
   * FLOAT/DOUBLE columns that carry FRACTIONAL values at magnitude
     >= 1e6 (class 1): round-to-k-decimals is beyond reliable double
     precision there; the projection should emit an integer canonical
@@ -49,6 +58,15 @@ TABLES = [
 
 # DuckDB types whose hash canonicalization differs from Spark's
 FRAGILE_TYPES = ("HUGEINT", "INT128", "UINT128", "DECIMAL")
+
+# DuckDB type-name prefixes of nested (non-scalar) types; LIST and
+# ARRAY print as `T[]` / `T[n]`
+NESTED_PREFIXES = ("STRUCT", "MAP", "UNION", "LIST", "ARRAY")
+
+
+def is_nested(ty: str) -> bool:
+    return ty.endswith("]") or ty.startswith(NESTED_PREFIXES)
+
 
 # |value| above this with a fractional part => round() is past the
 # precision a double can hold reliably for digit-exact cross-engine
@@ -99,6 +117,13 @@ def main() -> int:
             continue
 
         for i, (c, ty) in enumerate(zip(cols, types)):
+            if is_nested(ty):
+                flags.append(
+                    f"{name}.{c}: non-scalar result type {ty} — the gate "
+                    f"cannot sort or hash it; emit a scalar (e.g. "
+                    f"array_to_string(list(x ORDER BY x), ','))"
+                )
+                continue
             if any(ft in ty for ft in FRAGILE_TYPES):
                 flags.append(
                     f"{name}.{c}: fragile result type {ty} — CAST to "

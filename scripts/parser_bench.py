@@ -4,6 +4,11 @@ harness with these exact workloads but no committed numbers
 QueryPrinterBenchmark.scala, MapLastTermBenchmark.scala). This
 mirrors the workloads so future regressions are visible.
 
+Next to those rows it times the parse of each of perfbench's seven
+query shapes (`parse_us_<shape>`: mean µs per parse over the shape's
+sub-pool of `perfbench.inputs.make_pool(1)`, best of 5 passes) — the
+queries the embedded benchmark serves, without Spark.
+
 Usage: python scripts/parser_bench.py  -> one JSON line
 """
 
@@ -18,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lucille_spark import parse, print_query  # noqa: E402
 from lucille_spark.autocomplete import expand_last_term  # noqa: E402
+from perfbench.inputs import make_pool  # noqa: E402
 
 OR_10 = " OR ".join(f"term{i}" for i in range(10))
 OR_1000 = " OR ".join(f"term{i}" for i in range(1000))
@@ -46,6 +52,22 @@ def rate(fn, reps):
     return reps / (time.perf_counter() - t0)
 
 
+def shape_parse_us(seed=1, passes=5, reps=40):
+    """-> {"parse_us_<shape>": mean µs per parse} over the pool."""
+    out = {}
+    for shape, pool in make_pool(seed).items():
+        texts = [q.text for q in pool]
+        best = float("inf")
+        for _ in range(passes):
+            t0 = time.perf_counter()
+            for _ in range(reps):
+                for t in texts:
+                    parse(t)
+            best = min(best, time.perf_counter() - t0)
+        out[f"parse_us_{shape}"] = round(best / (reps * len(texts)) * 1e6, 2)
+    return out
+
+
 def main():
     out = {
         "parse_or10_per_sec": round(rate(lambda: parse(OR_10), 2000), 1),
@@ -54,6 +76,7 @@ def main():
             rate(lambda: [parse(q) for q in ASSOC], 500), 1
         ),
     }
+    out.update(shape_parse_us())
     asts = [parse(q) for q in ASSOC] + [parse(OR_10)]
     out["print_per_sec"] = round(
         rate(lambda: [print_query(a) for a in asts], 500), 1

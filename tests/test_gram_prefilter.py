@@ -174,3 +174,34 @@ def test_expand_condition_no_literal_has_contains(spark):
     s = str(cond._jc)
     assert "contains" in s.lower()
     assert "RLIKE" in s or "rlike" in s.lower()
+
+
+def test_prefix_and_fuzzy_plans_count_scans():
+    """Prefix, range and fuzzy expansions count the dictionary rows
+    they scan: the prefix's sorted slice, the range's slice, and the
+    fuzzy length band (the rows the edit-distance pass runs over)."""
+    from lucille_spark import parse
+    from lucille_spark.index.reader import (
+        dict_scan_stats,
+        reset_dict_scan_stats,
+    )
+    from lucille_spark.plans import Planner
+
+    d = _dict(TERMS)
+    planner = Planner(d, n_docs=100)
+    n = d.terms.size
+
+    reset_dict_scan_stats()
+    planner.plan(parse("ca*"))
+    # sorted slice ["cast", "cat", "catalog"]
+    assert dict_scan_stats() == {"scanned_terms": 3, "total_terms": n}
+
+    reset_dict_scan_stats()
+    planner.plan(parse("caat~1"))
+    # the length band 3..5: 12 of the 25 terms
+    assert len([t for t in TERMS if 3 <= len(t) <= 5]) == 12
+    assert dict_scan_stats() == {"scanned_terms": 12, "total_terms": n}
+
+    reset_dict_scan_stats()
+    d.expand_range("d", "f", True, False)  # "dog", "ether"
+    assert dict_scan_stats() == {"scanned_terms": 2, "total_terms": n}

@@ -108,6 +108,44 @@ def test_searcher_embedded_front_door(spark, unit_index):
     assert got == want
 
 
+@pytest.mark.parametrize("predecode", [True, False])
+def test_searcher_embedded_shares_reader(spark, unit_index, tmp_path, predecode):
+    """embedded() reuses the Searcher's open SparkIndex (no second
+    open), answers exactly like a standalone LocalSearcher, leaves the
+    Searcher's pinned tables unmaterialized, and a refresh_deletes
+    through the Searcher reaches the sidecar."""
+    import shutil
+
+    from lucille_spark.index.maintenance import delete_docs
+    from lucille_spark.searcher import Searcher
+
+    ix, _, _ = unit_index
+    dup = str(tmp_path / f"ixshare_{predecode}")
+    shutil.copytree(ix.dir, dup)
+
+    def cached_rdds():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    s = Searcher(spark, dup)  # cache=True: tables marked for caching
+    before = cached_rdds()
+    hot = s.embedded(predecode=predecode)
+    assert hot.ix is s.index
+    # collecting segments/doclens did not populate Spark's cache
+    assert cached_rdds() == before
+    alone = LocalSearcher(spark, dup, predecode=predecode)
+    for q in SHAPES:
+        a = hot.search(q, k=10)
+        b = alone.search(q, k=10)
+        assert a["doc_id"].tolist() == b["doc_id"].tolist(), q
+        assert a["score"].tolist() == b["score"].tolist(), q
+
+    victim = int(hot.search("spark", k=3).iloc[0]["doc_id"])
+    delete_docs(spark, dup, [victim])
+    s.index.refresh_deletes()  # through the Searcher's side
+    assert victim not in set(hot.search("spark", k=3)["doc_id"].astype(int))
+    assert victim not in {r["doc_id"] for r in s.search("spark", k=3).collect()}
+
+
 @pytest.mark.parametrize("q", ['"def parser"', "spark", "par*"])
 def test_predecode_full_matches_lazy(spark, unit_index, q):
     """predecode='full' (eager positions) and predecode=True (lazy
