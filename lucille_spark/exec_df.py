@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import itertools
 import logging
-from collections import OrderedDict
 from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -38,6 +37,7 @@ from pyspark.sql import functions as F
 from lucille_spark import plans as P
 from lucille_spark import sqlgen
 from lucille_spark.index.reader import SparkIndex
+from lucille_spark.lru import LRUCache
 from lucille_spark.pushdown import file_prune_bounds
 from lucille_spark.scoring import B, K1, MU
 
@@ -49,7 +49,8 @@ def _view(df: DataFrame, tag: str) -> str:
     """Temp-view name for `df`, registering it on first use. The name
     is memoized on the DataFrame object, so the per-file-set pruned
     frames from SparkIndex's LRU re-use their view (registration is
-    one py4j call). Two threads racing on one frame may both register
+    one py4j call) until the LRU evicts the frame and drops the view
+    (SparkIndex._drop_view). Two threads racing on one frame may both register
     it; each name is unique and reads the same rows, so either is
     correct."""
     name = getattr(df, "_lucille_view", None)
@@ -116,7 +117,7 @@ class DataFrameExecutor:
     def __init__(self, index: SparkIndex):
         self.ix = index
         self.avgdl = float(index.stats["avg_dl"])
-        self._plan_cache: "OrderedDict" = OrderedDict()
+        self._plan_cache = LRUCache(self.PLAN_CACHE_MAX)
 
     # ------------------------------------------------------------ api
     def warmup(self) -> None:
@@ -176,7 +177,6 @@ class DataFrameExecutor:
             )
             hit = self._plan_cache.get(cache_key)
             if hit is not None:
-                self._plan_cache.move_to_end(cache_key)
                 return hit
         ix = self.ix
         node = ix.plan(query, synonyms=synonyms)
@@ -194,9 +194,7 @@ class DataFrameExecutor:
             doc_boosts, meta_cols,
         ))
         if cache_key is not None:
-            self._plan_cache[cache_key] = df
-            if len(self._plan_cache) > self.PLAN_CACHE_MAX:
-                self._plan_cache.popitem(last=False)
+            return self._plan_cache.put(cache_key, df)
         return df
 
     def evaluate(self, node: P.PNode) -> DataFrame:

@@ -45,7 +45,6 @@ tests (tests/test_engine_wand.py, tests/test_property_pruning.py).
 from __future__ import annotations
 
 import logging
-from collections import OrderedDict
 from itertools import chain
 from typing import Dict, List, Optional, Tuple
 
@@ -57,8 +56,10 @@ from pyspark.sql import functions as F
 from lucille_spark import plans as P
 from lucille_spark.codec import bitpack_decode, varbyte_decode
 from lucille_spark.pushdown import expand_condition, file_prune_bounds
+from lucille_spark.sqlgen import ident
 from lucille_spark.eval_local import Posting, ShardData, evaluate, top_k
 from lucille_spark.index.reader import SparkIndex
+from lucille_spark.lru import LRUCache
 
 OUT_SCHEMA = "doc_id long, score double"
 
@@ -140,7 +141,7 @@ class WandExecutor:
     def __init__(self, index: SparkIndex, prune: bool = True):
         self.ix = index
         self.prune = prune
-        self._plan_cache: "OrderedDict" = OrderedDict()
+        self._plan_cache = LRUCache(self.PLAN_CACHE_MAX)
 
     def warmup(self) -> None:
         """Pay process one-time costs at startup (counterpart of
@@ -205,7 +206,6 @@ class WandExecutor:
             )
             hit = self._plan_cache.get(cache_key)
             if hit is not None:
-                self._plan_cache.move_to_end(cache_key)
                 return hit
         ix = self.ix
         node = ix.plan(query, synonyms=synonyms)
@@ -240,7 +240,7 @@ class WandExecutor:
                 if c not in ("shard", "doc_id", "doc_len")
             ]
             schema = OUT_SCHEMA + "".join(
-                f", {c} {dl_schema[c]}" for c in meta_out
+                f", {ident(c)} {dl_schema[c]}" for c in meta_out
             )
         kernel = _make_kernel(
             node, avgdl, k, self.prune, need_uni, meta_cols, decode,
@@ -282,9 +282,7 @@ class WandExecutor:
                 *[c for c in meta.columns if c != "doc_id"],
             ).orderBy(F.desc("score"), F.asc("doc_id"))
         if cache_key is not None:
-            self._plan_cache[cache_key] = out
-            if len(self._plan_cache) > self.PLAN_CACHE_MAX:
-                self._plan_cache.popitem(last=False)
+            return self._plan_cache.put(cache_key, out)
         return out
 
 

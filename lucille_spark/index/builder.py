@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from lucille_spark.codec import varbyte_encode_with_lengths
 from lucille_spark.index import fsio
+from lucille_spark.sqlgen import ident
 
 INDEX_FORMAT = 4  # bump when the on-disk layout changes
 
@@ -352,7 +353,7 @@ class IndexBuilder:
                 dl_schema = (
                     "shard int, doc_id long, doc_len int, "
                     "content_sha256 string"
-                    + "".join(f", {c} string" for c in meta_cols)
+                    + "".join(f", {ident(c)} string" for c in meta_cols)
                     + "".join(f", len_{c} int" for c in indexed_cols)
                 )
                 dl_df = (

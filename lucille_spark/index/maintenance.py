@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucille_spark.index import fsio
+from lucille_spark.sqlgen import ident
 from lucille_spark.index.builder import (
     BuildConfig,
     IndexBuilder,
@@ -152,7 +153,7 @@ def purge_deletes(
     empty = spark.createDataFrame(
         [],
         "doc_id long, content string"
-        + "".join(f", {c} string" for c in extra),
+        + "".join(f", {ident(c)} string" for c in extra),
     )
     return IndexBuilder(cfg).build(
         empty,
@@ -378,7 +379,7 @@ def split_index(
     empty = spark.createDataFrame(
         [],
         "doc_id long, content string"
-        + "".join(f", {c} string" for c in extra),
+        + "".join(f", {ident(c)} string" for c in extra),
     )
     return IndexBuilder(cfg).build(
         empty,

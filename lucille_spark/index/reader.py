@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from lucille_spark import ast, parse
 from lucille_spark import plans as P
 from lucille_spark.index import fsio
+from lucille_spark.lru import LRUCache
 
 
 # Observability for the dictionary expansion paths (prefix, wildcard,
@@ -515,9 +516,9 @@ class SparkIndex:
         self._deletes_checked = False
         # bumped by refresh_deletes(); executor plan caches key on it
         self.plan_version = 0
-        from collections import OrderedDict
-
-        self._pruned_cache: "OrderedDict" = OrderedDict()
+        self._pruned_cache = LRUCache(
+            self.PRUNED_CACHE_MAX, on_evict=self._drop_view
+        )
         fidx_path = os.path.join(index_dir, "file_index.json")
         self._fidx = None
         if fsio.exists(fidx_path, spark):
@@ -656,6 +657,8 @@ class SparkIndex:
         reader can never silently observe rewritten postings; it
         keeps serving its own directory until reopened on the new
         one. tests/test_plan_cache covers the delete path."""
+        if self._deleted_df is not None:
+            self._drop_view(self._deleted_df)  # as for evicted frames
         self._deleted_df = None
         self._deleted_ids = None
         self._deleted_n = None
@@ -690,22 +693,41 @@ class SparkIndex:
         sel = fidx.select(list(exact), list(intervals))
         if len(sel) >= len(fidx.entries):
             return full
-        if not sel:
-            return self.spark.createDataFrame([], full.schema)
         ck = (key, tuple(sel))
         hit = self._pruned_cache.get(ck)
         if hit is not None:
-            self._pruned_cache.move_to_end(ck)
             return hit
-        df = (
-            self.spark.read.schema(full.schema)
-            .option("basePath", base_path)
-            .parquet(*sel)
-        )
-        self._pruned_cache[ck] = df
-        if len(self._pruned_cache) > self.PRUNED_CACHE_MAX:
-            self._pruned_cache.popitem(last=False)
-        return df
+        if not sel:
+            # cached like any file set: a fresh empty frame per call
+            # would register a fresh temp view per call
+            df = self.spark.createDataFrame([], full.schema)
+        else:
+            df = (
+                self.spark.read.schema(full.schema)
+                .option("basePath", base_path)
+                .parquet(*sel)
+            )
+        return self._pruned_cache.put(ck, df)
+
+    def _drop_view(self, df: DataFrame) -> None:
+        """on_evict of the pruned-frame cache (and, in refresh_deletes,
+        for the replaced tombstone frame): drop the temp view
+        exec_df._view registered for the frame, so the catalog holds
+        at most PRUNED_CACHE_MAX pruned views. Safe because a view is
+        read only while a plan is being analyzed: a DataFrame that
+        spark.sql already built keeps its analyzed plan (and collects
+        the same rows) after the drop, and the frame a get/put has
+        just handed to exec_df._views is the most recently used entry,
+        which is evicted only after PRUNED_CACHE_MAX newer distinct
+        file sets are inserted. refresh_deletes is the one exception:
+        a search on the same reader whose SQL is being analyzed at
+        that instant can lose its view. The name comes off
+        the frame first, so a holder that registers it again gets a
+        live view."""
+        name = getattr(df, "_lucille_view", None)
+        if name is not None:
+            del df._lucille_view
+            self.spark.catalog.dropTempView(name)
 
     def flat_for(self, exact, intervals=()) -> DataFrame:
         return self._pruned(

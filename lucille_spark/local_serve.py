@@ -32,6 +32,8 @@ so a served query touches Spark zero times.
 from __future__ import annotations
 
 import threading
+from dataclasses import replace
+from functools import partial
 from typing import Optional
 
 import pandas as pd
@@ -129,25 +131,27 @@ class LocalSearcher:
             self.deleted,
         )
         if not full:
-            sd.pos_loader = self._load_positions
+            sd.pos_loader = partial(self._load_positions, sd, self.deleted)
         return sd
 
-    def _load_positions(self, term: str):
-        """ShardData.pos_loader hook: decode ONE term's positions on
-        first phrase use and swap the enriched Posting in (memoized
-        by being stored back into sd.postings)."""
+    def _load_positions(self, sd, deleted, term: str):
+        """ShardData.pos_loader hook of `sd`, whose postings were
+        masked with the tombstones `deleted`: decode ONE term's
+        positions on first phrase use with that same mask (so the
+        ids match the resident posting's and its score memo) and
+        swap the enriched Posting into `sd` (memoized there)."""
         from lucille_spark.exec_wand import BlockTable, decode_postings
 
         rows = self.seg_pdf[self.seg_pdf["term"] == term]
         p = decode_postings(
-            BlockTable.from_frame(rows), True, self.decode, self.deleted
+            BlockTable.from_frame(rows), True, self.decode, deleted
         ).get(str(term))
         if p is None:
             return None
-        old = self._sd.postings.get(term)
+        old = sd.postings.get(term)
         if old is not None:
             p.score_memo = old.score_memo
-        self._sd.postings[term] = p
+        sd.postings[term] = p
         return p
 
     def n_docs(self) -> int:
@@ -165,15 +169,22 @@ class LocalSearcher:
         self._sync_deletes()
 
     def _sync_deletes(self) -> None:
+        # the version is recorded only once the masked ShardData is
+        # published: a search that sees it current also sees the data
         with self._deletes_lock:
-            if self._deletes_version != self.ix.plan_version:
-                self._deletes_version = self.ix.plan_version
+            version = self.ix.plan_version
+            if self._deletes_version != version:
                 self._apply_deletes()
+                self._deletes_version = version
 
     def _apply_deletes(self) -> None:
+        """Mask newly tombstoned ids out of the resident ShardData.
+        Concurrent searches keep reading the old ShardData, so the
+        masked copy (unchanged postings shared, not copied) is built
+        aside and published with one assignment to `_sd`."""
         import numpy as np
 
-        from lucille_spark.exec_wand import _in_sorted
+        from lucille_spark.exec_wand import _csr_take, _in_sorted
 
         new = self.ix.deleted_ids
         if new is None or (
@@ -190,34 +201,35 @@ class LocalSearcher:
         self.deleted = new
         if self._sd is None or fresh.size == 0:
             return
-        sd = self._sd
+        old = self._sd
+        sd = replace(old, postings={}, pos_loader=None)
         if sd.all_ids.size:
             live = ~_in_sorted(sd.all_ids, fresh)
-            sd.all_ids = sd.all_ids[live]
-            sd.all_dls = sd.all_dls[live]
-            for c in list(sd.meta):
-                sd.meta[c] = sd.meta[c][live]
-        from lucille_spark.exec_wand import _csr_take
-
-        for term, p in sd.postings.items():
-            if not p.ids.size:
+            sd.all_ids, sd.all_dls = sd.all_ids[live], sd.all_dls[live]
+            sd.meta = {c: v[live] for c, v in sd.meta.items()}
+        # a list: a lazy-positions load may swap a posting into `old`
+        for term, p in list(old.postings.items()):
+            live = ~_in_sorted(p.ids, fresh) if p.ids.size else None
+            if live is None or live.all():
+                sd.postings[term] = p
                 continue
-            live = ~_in_sorted(p.ids, fresh)
-            if live.all():
-                continue
-            if p.pos_flat is not None:
-                keep = np.flatnonzero(live)
-                p.pos_flat, p.pos_bounds = _csr_take(
-                    p.pos_flat, p.pos_bounds, keep
+            pos_flat, pos_bounds = p.pos_flat, p.pos_bounds
+            if pos_flat is not None:
+                pos_flat, pos_bounds = _csr_take(
+                    pos_flat, pos_bounds, np.flatnonzero(live)
                 )
-            p.ids = p.ids[live]
-            p.tfs = p.tfs[live]
-            p.dls = p.dls[live]
-            p.score_memo = None  # tf/dl arrays changed
-            if p.positions is not None:
-                p.positions = [
-                    pos for pos, m in zip(p.positions, live) if m
-                ]
+            sd.postings[term] = replace(
+                p, ids=p.ids[live], tfs=p.tfs[live], dls=p.dls[live],
+                pos_flat=pos_flat, pos_bounds=pos_bounds,
+                positions=(
+                    None if p.positions is None
+                    else [x for x, m in zip(p.positions, live) if m]
+                ),
+                score_memo=None,  # tf/dl arrays changed
+            )
+        if old.pos_loader is not None:
+            sd.pos_loader = partial(self._load_positions, sd, new)
+        self._sd = sd
 
     def search(
         self,
@@ -233,18 +245,18 @@ class LocalSearcher:
         if self._deletes_version != self.ix.plan_version:
             self._sync_deletes()
         node = self.ix.plan(query, synonyms=synonyms)
-        if self._sd is not None:
+        sd = self._sd  # one snapshot: a delete refresh swaps it whole
+        if sd is not None:
             # hot path: one resident decoded ShardData, straight to
             # the shared evaluator (the same eval_local.evaluate the
             # worker kernel calls — parity by construction)
             from lucille_spark.eval_local import evaluate, top_k
 
-            ids, scores = evaluate(node, self._sd)
+            ids, scores = evaluate(node, sd)
             ids, scores = top_k(ids, scores, int(k))
             return pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
-        need_uni = P.needs_universe(node) or (
-            self.deleted is not None
-        )
+        deleted = self.deleted
+        need_uni = P.needs_universe(node) or deleted is not None
         kernel = _make_kernel(
             node,
             self.avgdl,
@@ -253,7 +265,7 @@ class LocalSearcher:
             need_uni,
             self.meta_cols,
             self.decode,
-            self.deleted,
+            deleted,
         )
         # slice the block table with the SAME bounds the distributed
         # path pushes to parquet (exact terms + string intervals from

@@ -171,7 +171,7 @@ def _phrase(s, i, n):
 def _int(s, i, n):
     # int: digits not followed by '.' (QueryParser.scala:190)
     j = i
-    while j < n and s[j].isdigit():
+    while j < n and s[j].isdecimal():
         j += 1
     if j == i:
         return None
@@ -183,13 +183,13 @@ def _int(s, i, n):
 def _float(s, i, n):
     # float: digits (('.' digits)?) (QueryParser.scala:198-202)
     j = i
-    while j < n and s[j].isdigit():
+    while j < n and s[j].isdecimal():
         j += 1
     if j == i:
         return None
     if j < n and s[j] == ".":
         k = j + 1
-        while k < n and s[k].isdigit():
+        while k < n and s[k].isdecimal():
             k += 1
         if k == j + 1:
             return k  # '.' consumed, digits required

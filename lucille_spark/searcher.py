@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from lucille_spark.exec_df import DataFrameExecutor
 from lucille_spark.exec_wand import WandExecutor
 from lucille_spark.index.reader import SparkIndex
+from lucille_spark.lru import LRUCache
 
 
 class SearchFuture:
@@ -112,10 +113,7 @@ class Searcher:
         self.max_batch = 64
 
         # request cache (see enable_request_cache)
-        self._rcache: "Optional[dict]" = None
-        self._rcache_max = 0
-        self._rcache_hits = 0
-        self._rcache_misses = 0
+        self._rcache: Optional[LRUCache] = None
 
     def embedded(self, predecode: bool = True):
         """-> a LocalSearcher over this Searcher's open index: the
@@ -139,29 +137,27 @@ class Searcher:
     def enable_request_cache(self, max_entries: int = 128) -> None:
         """ES-style request cache: memoize COLLECTED result pages of
         plain string searches keyed on (query, k, with_meta,
-        executor kind). A hit rebuilds a local DataFrame from the
-        cached rows — zero Spark jobs. LRU-bounded. An index built
-        to a directory is immutable, so entries never go stale for
-        a fixed Searcher; after maintenance (deletes, upserts,
-        compaction) open a new Searcher or call
-        clear_request_cache() — same contract as ES's cache
-        invalidation on refresh."""
-        from collections import OrderedDict
-
-        self._rcache = OrderedDict()
-        self._rcache_max = int(max_entries)
+        executor kind) and the index's plan_version. A hit rebuilds
+        a local DataFrame from the cached rows — zero Spark jobs.
+        LRU-bounded; calling this again starts a new, empty cache
+        with fresh counters. A refresh_deletes on the index (also
+        through embedded()) bumps plan_version, so no page cached
+        before it is served after it — same contract as ES's cache
+        invalidation on refresh. After physical maintenance
+        (upserts, compaction into a new directory) open a new
+        Searcher."""
+        self._rcache = LRUCache(max_entries)
 
     def clear_request_cache(self) -> None:
         if self._rcache is not None:
             self._rcache.clear()
 
     def request_cache_stats(self) -> dict:
-        return {
-            "enabled": self._rcache is not None,
-            "entries": len(self._rcache or ()),
-            "hits": self._rcache_hits,
-            "misses": self._rcache_misses,
-        }
+        if self._rcache is None:
+            return {"enabled": False, "entries": 0, "hits": 0, "misses": 0}
+        st = self._rcache.stats()
+        del st["evictions"]
+        return {"enabled": True, **st}
 
     # -- core ------------------------------------------------------
     def search(
@@ -183,27 +179,21 @@ class Searcher:
         )
         if cacheable:
             kind = "wand" if self.executor is self._wand_ex else "df"
-            key = (query, k, with_meta, kind)
+            key = (
+                query, k, with_meta, kind,
+                getattr(self.index, "plan_version", 0),
+            )
             hit = self._rcache.get(key)
-            if hit is not None:
-                self._rcache_hits += 1
-                self._rcache.move_to_end(key)
-                schema, rows = hit
-                spark = self.index.doclens.sparkSession
-                return spark.createDataFrame(rows, schema)
-            self._rcache_misses += 1
-        out = self.executor.search(
+            if hit is None:
+                out = self.executor.search(query, k=k, with_meta=with_meta)
+                hit = self._rcache.put(key, (out.schema, out.collect()))
+            schema, rows = hit
+            spark = self.index.doclens.sparkSession
+            return spark.createDataFrame(rows, schema)
+        return self.executor.search(
             query, k=k, with_meta=with_meta, synonyms=synonyms,
             doc_boosts=self._resolve_indices_boost(indices_boost),
         )
-        if cacheable:
-            rows = out.collect()
-            self._rcache[key] = (out.schema, rows)
-            while len(self._rcache) > self._rcache_max:
-                self._rcache.popitem(last=False)
-            spark = self.index.doclens.sparkSession
-            return spark.createDataFrame(rows, out.schema)
-        return out
 
     def _resolve_indices_boost(self, indices_boost):
         if not indices_boost:
@@ -317,8 +307,9 @@ class Searcher:
 
     def stats(self) -> dict:
         """ES `_stats`-style snapshot: docs, terms, avg_dl, analyzer,
-        deletes. Reads the stats the index already carries + the
-        tombstone count (one tiny count when deletes exist)."""
+        deletes, cache counters. Reads the stats the index already
+        carries + the tombstone count (one tiny count when deletes
+        exist)."""
         ix = self.index
         out = {
             "n_docs": int(ix.stats["n_docs"]),
@@ -327,6 +318,18 @@ class Searcher:
             "analyzer": ix.stats.get("analyzer", "standard"),
             "meta_cols": list(ix.stats.get("meta_cols", [])),
             "deleted": int(getattr(ix, "deleted_count", 0) or 0),
+        }
+        # entries/hits/misses/evictions of every serving cache: both
+        # plan caches, the reader's pruned frames (single physical
+        # index) and the request cache when enabled
+        caches = {
+            "plan_df": self._df_ex._plan_cache,
+            "plan_wand": self._wand_ex._plan_cache,
+            "pruned": getattr(ix, "_pruned_cache", None),
+            "request": self._rcache,
+        }
+        out["caches"] = {
+            name: c.stats() for name, c in caches.items() if c is not None
         }
         return out
 

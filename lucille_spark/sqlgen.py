@@ -49,6 +49,13 @@ def _q(s: str) -> str:
     return "'" + "".join(out) + "'"
 
 
+def ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (also valid in a DDL schema
+    string): meta columns keep their input names, which may hold
+    '-', spaces or backticks."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _d(x) -> str:
     """Exact DOUBLE literal. A bare SQL decimal literal (0.25) is
     DECIMAL in Spark; CAST('<repr>' AS DOUBLE) constant-folds to the
@@ -401,7 +408,7 @@ class SqlCompiler:
         return f"SELECT doc_id, {score} AS score FROM ({body})"
 
     def _meta(self, node: P.PMetaFilter) -> str:
-        f = node.field
+        f = ident(node.field)
         if node.kind in ("num_eq", "num_range"):
             ncol = f"CAST({f} AS DOUBLE)"
             if node.kind == "num_eq":
@@ -487,7 +494,7 @@ def compile_search(
         # join would make the corpus the build side at scale); every
         # result id exists in doclens, so inner == left. k=None keeps
         # the un-hinted join and lets AQE pick from actual sizes.
-        mc = ", ".join(f"m.{c_}" for c_ in meta_cols)
+        mc = ", ".join(f"m.{ident(c_)}" for c_ in meta_cols)
         hint = "/*+ BROADCAST(r) */ " if k is not None else ""
         sql = (
             f"SELECT {hint}m.doc_id, r.score{', ' + mc if mc else ''}"

@@ -21,7 +21,7 @@ def test_refresh_deletes_clears_pruned_cache(spark, unit_index):
 
     DataFrameExecutor(ix).search("spark", k=1).collect()
     before = ix.plan_version
-    ix._pruned_cache[("probe", ("x",))] = "sentinel"
+    ix._pruned_cache.put(("probe", ("x",)), "sentinel")
     ix.refresh_deletes()
     assert ix.plan_version == before + 1
     assert len(ix._pruned_cache) == 0

@@ -310,6 +310,7 @@ PARSE_ERRORS = [
     "cat OR ",
     "cat AND ",
     "/jump.*",  # unterminated regex (RegexSuite.scala:29-32)
+    "a^²",  # non-ASCII digit: a boost needs decimal digits
 ]
 
 
@@ -317,3 +318,16 @@ PARSE_ERRORS = [
 def test_parse_errors(query, ):
     with pytest.raises(ParseError):
         parse(query)
+
+
+def test_superscript_digit_is_not_a_number():
+    # '²' is str.isdigit but not a decimal digit: the number parsers
+    # stop before it, so the boost has no digits (ParseError with an
+    # offset) and '~' is a bare fuzzy followed by the term '²', just
+    # as for any other non-digit
+    with pytest.raises(ParseError) as e:
+        parse("a^²")
+    assert e.value.offset == 2
+    assert parse("a~²") == parse("a~ ²") == Or(
+        (Fuzzy("a", None), Term("²"))
+    )

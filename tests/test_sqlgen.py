@@ -258,3 +258,34 @@ def test_sql_escaping_hostile_terms(ix):
     # ... and the rendering parses and runs: no match, no error
     ex = DataFrameExecutor(ix)
     assert ex.evaluate(node).count() == 0
+
+
+def test_meta_columns_are_quoted_identifiers(spark, tmp_path_factory):
+    """Meta columns keep their input names, which need not be plain
+    SQL identifiers: an index with a `repo-name` column builds, joins
+    its meta on with_meta=True (both executors) and filters on it."""
+    from lucille_spark.exec_wand import WandExecutor
+    from lucille_spark.sqlgen import ident
+
+    assert ident("a`b") == "`a``b`"
+    docs = spark.createDataFrame(
+        [
+            (0, "spark batch", "alpha"),
+            (1, "spark stream", "beta"),
+            (2, "batch table", "alpha"),
+        ],
+        ["doc_id", "text", "repo-name"],
+    )
+    d = str(tmp_path_factory.mktemp("quoted") / "ix")
+    IndexBuilder(num_shards=2, block_size=8).build(
+        docs, d, content_col="text", id_col="doc_id"
+    )
+    ix = SparkIndex(spark, d)
+    for ex in (DataFrameExecutor(ix), WandExecutor(ix)):
+        for q in ("spark", "spark AND NOT table"):
+            rows = ex.search(q, k=5, with_meta=True).collect()
+            assert {(r["doc_id"], r["repo-name"]) for r in rows} == {
+                (0, "alpha"), (1, "beta"),
+            }, (type(ex).__name__, q)
+    rows = DataFrameExecutor(ix).search(r"repo\-name:alpha", k=5).collect()
+    assert sorted(r["doc_id"] for r in rows) == [0, 2]
