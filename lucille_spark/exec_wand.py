@@ -1,23 +1,25 @@
 """Segment executor: per-shard block-decode + block-max pruned
 evaluation inside ``applyInPandas``, then a k-row global merge.
 
-Architecture (doc-partitioned, SURVEY.md §3.4):
+Architecture (doc-partitioned, SURVEY.md §3.4); `search` is a
+`search_many` batch of one, both run WandExecutor._scan:
 
   segments parquet ──filter(term IN query terms / startswith / range
-      predicates, see _term_filter)──  [parquet predicate pushdown +
-      row-group pruning: segments are sorted by term string within
-      each shard partition]
+      predicates of every query, see _term_filter)──  [parquet
+      predicate pushdown + row-group pruning: segments are sorted by
+      term string within each shard partition]
     ──groupBy(shard).applyInPandas(kernel)──  each shard turns its
       rows into one BlockTable (numpy columns sorted by term, with
       per-term row runs), decodes the blocks it needs in one
       concatenated varbyte pass, builds a ShardData and runs the SAME
-      evaluator as the oracle (eval_local.evaluate); emits its local
-      top-k only
+      evaluator as the oracle (eval_local.evaluate); emits each
+      query's local top-k only
     ──orderBy(score desc, doc_id).limit(k)──  global merge of
-      num_shards * k rows -> TakeOrderedAndProject (no full shuffle).
+      num_shards * k rows -> TakeOrderedAndProject (no full shuffle);
+      search_many cuts each query with a Window row_number instead.
 
 The kernel touches pandas only at its entry (frame -> BlockTable) and
-exit (top-k -> frame): term runs, block overlap and decoding are numpy
+returns numpy columns: term runs, block overlap and decoding are numpy
 array operations, so a request's cost is the decode, not per-call
 DataFrame plumbing. LocalSearcher passes a pre-sorted BlockTable
 directly and skips the entry conversion too.
@@ -36,15 +38,17 @@ build time — a vectorized MaxScore/BMW hybrid:
   * AND: the rarest term is decoded fully; every other term decodes
     only blocks overlapping the running candidate id range-set.
 
-For trees that are not flat term booleans the kernel decodes the
-(already term-filtered) blocks exhaustively — still numpy-vectorized
-and shard-local. Pruned and exhaustive paths are asserted equal in
-tests (tests/test_engine_wand.py, tests/test_property_pruning.py).
+Every other tree, and every query of a search_many batch, evaluates
+on the (already term-filtered) blocks decoded once for all of them —
+still numpy-vectorized and shard-local. Pruned and exhaustive paths
+are asserted equal in tests (tests/test_engine_wand.py,
+tests/test_property_pruning.py).
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 from itertools import chain
 from typing import Dict, List, Optional, Tuple
 
@@ -61,7 +65,8 @@ from lucille_spark.eval_local import Posting, ShardData, evaluate, top_k
 from lucille_spark.index.reader import SparkIndex
 from lucille_spark.lru import LRUCache
 
-OUT_SCHEMA = "doc_id long, score double"
+# one row per hit of one query of the batch a shard kernel evaluates
+KERNEL_SCHEMA = "query_id string, doc_id long, score double"
 
 # posting-block codecs by the name recorded in stats.json at build
 DECODERS = {"varbyte": varbyte_decode, "bitpack": bitpack_decode}
@@ -85,15 +90,6 @@ def _tombstones(ix):
     if n <= TOMBSTONE_SHIP_MAX:
         return ix.deleted_ids, False
     return "dl", True
-
-
-def _mark_deleted(dl: DataFrame, ix) -> DataFrame:
-    """Left-join the tombstone flag onto a doclens projection (JVM
-    join; AQE picks broadcast vs shuffle by actual size)."""
-    dd = ix.deleted_df.dropDuplicates(["doc_id"]).withColumn(
-        "_del", F.lit(True)
-    )
-    return dl.join(dd, "doc_id", "left")
 
 
 def _local_deleted(deleted, dl_pdf) -> Optional[np.ndarray]:
@@ -156,10 +152,12 @@ class WandExecutor:
                 return
             t1, t2 = ts[0], ts[-1]
             # pass plan NODES: node queries skip the string-keyed
-            # plan cache, so warmup leaves it untouched. Two shapes
-            # compile the two distinct kernels: the plain groupBy-
-            # apply (term/OR union predicate) and the cogroup path
-            # (NOT needs the doc universe -> segments x doclens).
+            # plan cache, so warmup leaves it untouched. search and
+            # search_many run the same kernel through the same scan,
+            # so two shapes compile both of its forms for both: the
+            # plain groupBy-apply (term/OR union predicate) and the
+            # cogroup path (NOT needs the doc universe -> segments x
+            # doclens).
             self.search(self.ix.plan(f"{t1} OR {t2}"), k=1).collect()
             self.search(
                 self.ix.plan(f"{t1} AND NOT {t2}"), k=1
@@ -208,62 +206,11 @@ class WandExecutor:
             if hit is not None:
                 return hit
         ix = self.ix
-        node = ix.plan(query, synonyms=synonyms)
-        terms = P.collect_terms(node)
-
-        seg_src = getattr(ix, "segments_for", None)
-        if seg_src is not None:
-            exact, intervals = file_prune_bounds(node)
-            segs = seg_src(exact, intervals)
-        else:
-            segs = ix.segments
-        if terms:
-            segs = segs.filter(_term_filter(node, terms))
-        need_uni = P.needs_universe(node)
-        avgdl = float(ix.stats["avg_dl"])
-        meta_cols = list(ix.stats.get("meta_cols", []))
-        decode = DECODERS[ix.stats.get("codec", "varbyte")]
-        deleted, mark_dl = _tombstones(ix)
-        need_uni = need_uni or mark_dl  # 'dl' needs the doclens slice
-        # meta fold: when the kernel already cogroups doclens, it
-        # emits the meta columns for its local top-k directly — one
-        # fewer scan + exchange than the post-hoc join (with_meta on
-        # the plain path stays a broadcast join of the k-row result
-        # against doclens).
-        meta_out = []
-        schema = OUT_SCHEMA
-        if with_meta and need_uni:
-            dl_schema = {f.name: f.dataType.simpleString()
-                         for f in ix.doclens.schema.fields}
-            meta_out = [
-                c for c in ix.doclens.columns
-                if c not in ("shard", "doc_id", "doc_len")
-            ]
-            schema = OUT_SCHEMA + "".join(
-                f", {ident(c)} {dl_schema[c]}" for c in meta_out
-            )
-        kernel = _make_kernel(
-            node, avgdl, k, self.prune, need_uni, meta_cols, decode,
-            deleted, meta_out,
-            stats_acc=getattr(self, "profile_acc", None),
+        local, meta_folded = self._scan(
+            {"q0": ix.plan(query, synonyms=synonyms)}, {"q0": k},
+            self.prune, with_meta,
         )
-        if need_uni:
-            # cogroup segments with the shard's doclens slice so the
-            # kernel has the doc universe + metadata columns
-            dl_cols = set(
-                ["shard", "doc_id", "doc_len", *meta_cols] + meta_out
-            )
-            dl = ix.doclens.select(
-                *[c for c in ix.doclens.columns if c in dl_cols]
-            )
-            if mark_dl:
-                dl = _mark_deleted(dl, ix)
-            grouped = segs.groupBy("shard").cogroup(dl.groupBy("shard"))
-            local = grouped.applyInPandas(kernel, schema=schema)
-        else:
-            local = segs.groupBy("shard").applyInPandas(
-                kernel, schema=schema
-            )
+        local = local.drop("query_id")
         if doc_boosts:
             from lucille_spark.exec_df import _boost_case
 
@@ -271,7 +218,7 @@ class WandExecutor:
                 "score", F.col("score") * _boost_case(doc_boosts)
             )
         out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_meta and not meta_out:
+        if with_meta and not meta_folded:
             meta = ix.doclens.drop("shard", "doc_len")
             # broadcast the K-ROW result side, stream doclens: a left
             # join would force doclens as the build side (full
@@ -284,7 +231,6 @@ class WandExecutor:
         if cache_key is not None:
             return self._plan_cache.put(cache_key, out)
         return out
-
 
     def search_many(
         self,
@@ -321,67 +267,11 @@ class WandExecutor:
             for qid, q in queries.items()
         }
         kmap = {qid: int((ks or {}).get(qid, k)) for qid in queries}
-
-        seg_src = getattr(ix, "segments_for", None)
-        if seg_src is not None:
-            exact_all: set = set()
-            intervals_all: list = []
-            for node in nodes.values():
-                exact, intervals = file_prune_bounds(node)
-                exact_all |= set(exact)
-                intervals_all.extend(intervals)
-            segs = seg_src(sorted(exact_all), intervals_all)
-        else:
-            segs = ix.segments
-        # ONE union predicate for the whole batch: a single isin over
-        # every query's exact terms + one OR per expansion predicate
-        # (not per query) — keeps driver-serial py4j Column
-        # construction O(expansions), not O(batch x clauses).
-        exact_terms: set = set()
-        preds: list = []
-        any_terms = False
-        for node in nodes.values():
-            e, p = _term_filter_parts(node)
-            exact_terms |= e
-            preds.extend(p)
-            any_terms = any_terms or bool(P.collect_terms(node))
-        if exact_terms or preds or any_terms:
-            cond = (
-                F.col("term").isin(sorted(exact_terms))
-                if exact_terms
-                else None
-            )
-            for p in preds:
-                cond = p if cond is None else (cond | p)
-            if cond is not None:
-                segs = segs.filter(cond)
-
-        need_uni = any(P.needs_universe(n) for n in nodes.values())
-        pos_terms: set = set()
-        for node in nodes.values():
-            if P.needs_positions(node):
-                pos_terms.update(P.collect_terms(node))
-        avgdl = float(ix.stats["avg_dl"])
-        meta_cols = list(ix.stats.get("meta_cols", []))
-        decode = DECODERS[ix.stats.get("codec", "varbyte")]
-        deleted, mark_dl = _tombstones(ix)
-        need_uni = need_uni or mark_dl  # 'dl' needs the doclens slice
-        kernel = _make_batch_kernel(
-            nodes, avgdl, kmap, need_uni, pos_terms, meta_cols, decode,
-            deleted,
-        )
-        if need_uni:
-            dl = ix.doclens.select(
-                "shard", "doc_id", "doc_len", *meta_cols
-            )
-            if mark_dl:
-                dl = _mark_deleted(dl, ix)
-            grouped = segs.groupBy("shard").cogroup(dl.groupBy("shard"))
-            local = grouped.applyInPandas(kernel, schema=BATCH_SCHEMA)
-        else:
-            local = segs.groupBy("shard").applyInPandas(
-                kernel, schema=BATCH_SCHEMA
-            )
+        # no block pruning in a batch: the shard decodes every term
+        # it holds ONCE for all of the batch's queries, while the
+        # pruned path decodes per query — a term shared by several
+        # flat queries would be decoded once for each of them
+        local, _ = self._scan(nodes, kmap, prune=False)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -398,102 +288,101 @@ class WandExecutor:
             .drop("_rn")
         )
 
-
-BATCH_SCHEMA = "query_id string, doc_id long, score double"
-
-
-def _make_batch_kernel(
-    nodes: Dict[str, P.PNode],
-    avgdl: float,
-    k,  # int, or dict[query_id -> int] for per-query limits
-    need_uni: bool,
-    pos_terms: set,
-    meta_cols: List[str],
-    decode=varbyte_decode,
-    deleted=None,  # None | sorted np.ndarray | "dl" sentinel
-):
-    """Shard kernel for search_many: decode every term in the shard
-    slice ONCE (positions only for terms some query needs
-    positionally), then evaluate each query tree against the shared
-    ShardData with the same evaluator as single-query search; emit
-    each query's local top-k."""
-
-    def eval_segments(seg_pdf: pd.DataFrame, dl_pdf=None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "doc_id": [], "score": []}
-        ).astype({"query_id": "object", "doc_id": "int64", "score": "float64"})
-        if len(seg_pdf) == 0 and dl_pdf is None:
-            return empty
-        dead = _local_deleted(deleted, dl_pdf)
-        sd, _ = _shard_universe(avgdl, dl_pdf, meta_cols, dead)
-        sd.postings.update(decode_postings(
-            BlockTable.from_frame(seg_pdf), pos_terms, decode, dead
-        ))
-        frames = []
-        for qid, node in nodes.items():
-            ids, scores = evaluate(node, sd)
-            kq = k[qid] if isinstance(k, dict) else k
-            ids, scores = top_k(ids, scores, kq)
-            frames.append(
-                pd.DataFrame(
-                    {"query_id": qid, "doc_id": ids, "score": scores}
-                )
+    def _scan(
+        self, nodes: Dict[str, P.PNode], ks: Dict[str, int], prune: bool,
+        with_meta: bool = False,
+    ) -> Tuple[DataFrame, bool]:
+        """The WAND job for the plan trees `nodes` (query id -> tree):
+        one file-pruned, term-filtered segment scan for all of them,
+        then ONE applyInPandas per shard running _make_kernel.
+        -> (per-shard top-k rows (query_id, doc_id, score, ...), True
+        when the meta columns were folded into those rows)."""
+        ix = self.ix
+        seg_src = getattr(ix, "segments_for", None)
+        if seg_src is not None:
+            segs = seg_src(*file_prune_bounds(*nodes.values()))
+        else:
+            segs = ix.segments
+        cond = _term_filter(nodes.values())
+        if cond is not None:
+            segs = segs.filter(cond)
+        meta_cols = list(ix.stats.get("meta_cols", []))
+        deleted, mark_dl = _tombstones(ix)
+        need_uni = mark_dl or any(  # 'dl' needs the doclens slice
+            P.needs_universe(n) for n in nodes.values()
+        )
+        # meta fold: when the kernel already cogroups doclens, it
+        # emits the meta columns for its local top-k directly — one
+        # fewer scan + exchange than the post-hoc join (with_meta on
+        # the plain path stays a broadcast join of the k-row result
+        # against doclens).
+        meta_out = []
+        schema = KERNEL_SCHEMA
+        if with_meta and need_uni:
+            dl_schema = {f.name: f.dataType.simpleString()
+                         for f in ix.doclens.schema.fields}
+            meta_out = [
+                c for c in ix.doclens.columns
+                if c not in ("shard", "doc_id", "doc_len")
+            ]
+            schema = KERNEL_SCHEMA + "".join(
+                f", {ident(c)} {dl_schema[c]}" for c in meta_out
             )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        kernel = _make_kernel(
+            nodes, float(ix.stats["avg_dl"]), ks, prune, meta_cols,
+            DECODERS[ix.stats.get("codec", "varbyte")], deleted, meta_out,
+            stats_acc=getattr(self, "profile_acc", None),
+        )
+        if need_uni:
+            # cogroup segments with the shard's doclens slice so the
+            # kernel has the doc universe + metadata columns
+            dl_cols = {"shard", "doc_id", "doc_len", *meta_cols, *meta_out}
+            dl = ix.doclens.select(
+                *[c for c in ix.doclens.columns if c in dl_cols]
+            )
+            if mark_dl:
+                # left-join the tombstone flag (JVM join; AQE picks
+                # broadcast vs shuffle by actual size)
+                dl = dl.join(
+                    ix.deleted_df.dropDuplicates(["doc_id"])
+                    .withColumn("_del", F.lit(True)),
+                    "doc_id", "left",
+                )
+            local = segs.groupBy("shard").cogroup(
+                dl.groupBy("shard")
+            ).applyInPandas(
+                lambda seg, dl: pd.DataFrame(kernel(seg, dl), copy=False),
+                schema=schema,
+            )
+        else:
+            local = segs.groupBy("shard").applyInPandas(
+                lambda seg: pd.DataFrame(kernel(seg), copy=False),
+                schema=schema,
+            )
+        return local, bool(meta_out)
 
-    def kernel_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-        return eval_segments(pdf)
 
-    def kernel_cogroup(
-        seg_pdf: pd.DataFrame, dl_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        return eval_segments(seg_pdf, dl_pdf)
-
-    return kernel_cogroup if need_uni else kernel_plain
-
-
-def _term_filter_parts(node: P.PNode):
-    """-> (exact_terms set, expansion predicate Columns list) for the
-    segment-scan term predicate. Split out so search_many can union
-    the parts across a whole batch into ONE isin + a few ORs instead
-    of per-query Column chains (py4j round trips are driver-serial
-    and add up at high QPS)."""
+def _term_filter(nodes):
+    """Segment-scan predicate on the term column for every tree in
+    `nodes`, or None when they touch no term: ONE isin over all exact
+    terms (terms, phrases, synonyms) plus one OR per expansion. An
+    expansion uses the shared pushdown predicate (exact IN below a
+    threshold, else a StartsWith/range/length-band bound + JVM
+    residual — never a huge enumerated IN list). One union instead of
+    per-query Column chains keeps the driver-serial py4j Column
+    construction O(expansions), not O(batch x clauses)."""
     exact: set = set()
     preds: List = []
-
-    def walk(n: P.PNode) -> None:
+    for n in chain.from_iterable(map(P.leaves, nodes)):
         if isinstance(n, P.PTerm):
             exact.add(n.term)
-        elif isinstance(n, P.PPhrase):
-            exact.update(n.terms)
-        elif isinstance(n, P.PSynonym):
+        elif isinstance(n, (P.PPhrase, P.PSynonym)):
             exact.update(n.terms)
         elif isinstance(n, P.PExpand):
             preds.append(expand_condition(n))
-        elif isinstance(n, P.PBool):
-            for c in n.must + n.should + n.must_not:
-                walk(c)
-        elif isinstance(n, P.PDisMax):
-            for c in n.children:
-                walk(c)
-        elif isinstance(n, (P.PNot, P.PBoost)):
-            walk(n.child)
-
-    walk(node)
-    return exact, preds
-
-
-def _term_filter(node: P.PNode, all_terms: List[str]):
-    """Segment-scan predicate on the term column. Expansions use the
-    shared pushdown predicate (exact IN below a threshold, else a
-    StartsWith/range/length-band bound + JVM residual — never a huge
-    enumerated IN list); terms and phrases contribute exact terms."""
-    exact, preds = _term_filter_parts(node)
     cond = F.col("term").isin(sorted(exact)) if exact else None
     for p in preds:
         cond = p if cond is None else (cond | p)
-    if cond is None:
-        cond = F.col("term").isin(list(all_terms))
     return cond
 
 
@@ -759,88 +648,86 @@ def _flat_terms(node: P.PNode):
 
 
 def _make_kernel(
-    node: P.PNode,
+    nodes: Dict[str, P.PNode],
     avgdl: float,
-    k: int,
+    ks: Dict[str, int],
     prune: bool,
-    need_uni: bool,
     meta_cols: List[str],
     decode=varbyte_decode,
     deleted=None,  # None | sorted np.ndarray | "dl" sentinel
     meta_out: "Optional[List[str]]" = None,
     stats_acc=None,  # (total_blocks, decoded_blocks) accumulators
 ):
-    flat = _flat_terms(node) if prune else None
-    want_pos = P.needs_positions(node)
+    """-> the shard function for the plan trees `nodes` (query id ->
+    tree; a single query is a batch of one): `shard(seg, dl_pdf=None)`
+    evaluates every tree on one shard and returns the columns of each
+    query's local top-k `ks[query id]` — query_id, doc_id, score and
+    the `meta_out` columns of `dl_pdf`.
+
+    `seg` is the shard's segment rows, as the applyInPandas frame or
+    an already sorted BlockTable (LocalSearcher); `dl_pdf` is its
+    doclens slice, passed when a tree needs the doc universe or the
+    tombstones are the 'dl' sentinel. A flat term boolean under
+    `prune` runs block-max pruned on the BlockTable; every other tree
+    evaluates on postings decoded ONCE for all of them, with
+    positions only for the terms of their phrases."""
+    flats = {
+        qid: _flat_terms(n) if prune else None for qid, n in nodes.items()
+    }
+    pos_terms = {  # the only terms whose positions evaluation reads
+        t for n in chain.from_iterable(map(P.leaves, nodes.values()))
+        if isinstance(n, P.PPhrase) for t in n.terms
+    }
     meta_out = meta_out or []
 
-    def _empty_out() -> pd.DataFrame:
-        out = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        for c in meta_out:
-            out[c] = pd.Series([], dtype=object)
-        return out
-
-    def eval_segments(seg, dl_pdf=None) -> pd.DataFrame:
-        """`seg`: the shard's segment rows, as the applyInPandas
-        frame or an already sorted BlockTable (LocalSearcher)."""
-        if len(seg) == 0 and dl_pdf is None:
-            return _empty_out()
-        bt = seg if isinstance(seg, BlockTable) else BlockTable.from_frame(seg)
-        dead = _local_deleted(deleted, dl_pdf)
-        sd, dl_pdf = _shard_universe(avgdl, dl_pdf, meta_cols, dead)
-
-        # profiling: ship this worker's block counters to the driver
-        # (the module counters are worker-local; accumulators are the
-        # only channel back — captured in the kernel closure)
-        if stats_acc is not None:
-            _snap = dict(_PRUNE_STATS)
-
-        if flat is not None and bt.terms.size > 1:
-            ids, scores = _eval_flat_pruned(flat, bt, sd, k, decode, dead)
-            if stats_acc is not None:
-                stats_acc[0].add(
-                    _PRUNE_STATS["total_blocks"] - _snap["total_blocks"]
-                )
-                stats_acc[1].add(
-                    _PRUNE_STATS["decoded_blocks"]
-                    - _snap["decoded_blocks"]
-                )
-        else:
-            if stats_acc is not None:
-                stats_acc[0].add(len(bt))
-                stats_acc[1].add(len(bt))  # exhaustive path decodes all
-            # one vectorized decode for every term's blocks (a term
-            # may arrive as several disjoint doc-range runs from
-            # different build partitions; the decoder restores
-            # ascending ids per term)
-            sd.postings.update(
-                decode_postings(bt, bool(want_pos), decode, dead)
+    def shard(seg, dl_pdf=None) -> dict:
+        qids, ids, scores = [], [np.empty(0, np.int64)], [np.empty(0)]
+        if len(seg) or dl_pdf is not None:
+            bt = (
+                seg if isinstance(seg, BlockTable)
+                else BlockTable.from_frame(seg)
             )
-            ids, scores = evaluate(node, sd)
-        ids, scores = top_k(ids, scores, k)
-        out = pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
-        if meta_out:
-            if dl_pdf is not None and len(dl_pdf) and len(out):
-                # dl_pdf is doc_id-sorted; positional lookup of
-                # the local top-k ids (every id came from this slice)
-                dl_ids = dl_pdf["doc_id"].to_numpy(dtype=np.int64)
-                pos = np.searchsorted(dl_ids, ids)
-                for c in meta_out:
-                    out[c] = dl_pdf[c].to_numpy()[pos]
-            else:
-                for c in meta_out:
-                    out[c] = pd.Series([None] * len(out), dtype=object)
+            dead = _local_deleted(deleted, dl_pdf)
+            sd, dl_pdf = _shard_universe(avgdl, dl_pdf, meta_cols, dead)
+            pruned = (
+                {q for q, f in flats.items() if f} if bt.terms.size > 1 else ()
+            )
+            if len(pruned) < len(nodes):
+                # one vectorized decode for every term's blocks (a term
+                # may arrive as several disjoint doc-range runs from
+                # different build partitions; the decoder restores
+                # ascending ids per term)
+                sd.postings.update(
+                    decode_postings(bt, pos_terms, decode, dead)
+                )
+                if stats_acc is not None:
+                    stats_acc[0].add(len(bt))
+                    stats_acc[1].add(len(bt))  # decodes all
+            for qid, node in nodes.items():
+                if qid in pruned:
+                    i, s = _eval_flat_pruned(
+                        flats[qid], bt, sd, ks[qid], decode, dead, stats_acc
+                    )
+                else:
+                    i, s = evaluate(node, sd)
+                i, s = top_k(i, s, ks[qid])
+                qids += [qid] * i.size
+                ids.append(i)
+                scores.append(s)
+        ids = np.concatenate(ids)
+        out = {
+            "query_id": np.array(qids, dtype=object),
+            "doc_id": ids,
+            "score": np.concatenate(scores),
+        }
+        if meta_out:  # only set when the doclens slice is cogrouped
+            # dl_pdf is doc_id-sorted; positional lookup of the local
+            # top-k ids (every id came from this slice)
+            pos = np.searchsorted(dl_pdf["doc_id"].to_numpy(), ids)
+            out.update({c: dl_pdf[c].to_numpy()[pos] for c in meta_out})
         return out
 
-    def kernel_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-        return eval_segments(pdf)
-
-    def kernel_cogroup(seg_pdf: pd.DataFrame, dl_pdf: pd.DataFrame) -> pd.DataFrame:
-        return eval_segments(seg_pdf, dl_pdf)
-
-    return kernel_cogroup if need_uni else kernel_plain
+    return shard
 
 
 def _eval_flat_pruned(
@@ -850,9 +737,12 @@ def _eval_flat_pruned(
     k: int,
     decode=varbyte_decode,
     deleted: Optional[np.ndarray] = None,
+    stats_acc=None,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Block-max pruned evaluation of flat AND/OR over PTerms.
-    Counts decoded blocks in _PRUNE_STATS for testability. Block
+    Counts this call's total and decoded blocks and adds them once
+    (_count_blocks) to _PRUNE_STATS, for testability, and to the
+    profiling accumulators `stats_acc` when given. Block
     upper bounds are completed here from the stored max_tf and the
     plan-time weight (scoring.term_upper_bound, per the plan's
     similarity)."""
@@ -869,9 +759,7 @@ def _eval_flat_pruned(
         rows = bt.run(term)
         if rows is not None:
             avail[term] = rows
-    if kind == "and" and len(avail) < len(pterms):
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    if not avail:
+    if not avail or (kind == "and" and len(avail) < len(pterms)):
         return np.empty(0, np.int64), np.empty(0, np.float64)
 
     from lucille_spark.scoring import term_score_np
@@ -880,19 +768,29 @@ def _eval_flat_pruned(
         pt = terms[t]
         return term_score_np(pt.sim, tfs, dls, pt.idf, _adl(t), pt.tw)
 
-    stats = _PRUNE_STATS
-    stats["total_blocks"] += sum(r.size for r in avail.values())
+    total, decoded = sum(r.size for r in avail.values()), 0
 
     def _decode(t: str, rows: np.ndarray) -> Posting:
-        stats["decoded_blocks"] += rows.size
+        nonlocal decoded
+        decoded += rows.size
         return decode_postings(bt, False, decode, deleted, rows)[t]
 
-    def _overlapping(rows: np.ndarray, cand_ids: np.ndarray) -> np.ndarray:
-        """The rows whose exact [doc_id_base, doc_id_max] range holds
-        at least one candidate id (iff searchsorted moves)."""
+    def _probe(t: str, cand_ids: np.ndarray):
+        """-> (indexes into `cand_ids` of the docs holding `t`, their
+        `t` scores), decoding only the blocks of `t` whose exact
+        [doc_id_base, doc_id_max] range holds at least one candidate
+        id (iff searchsorted moves)."""
+        rows = avail[t]
         lo = np.searchsorted(cand_ids, bt.cols["doc_id_base"][rows], "left")
         hi = np.searchsorted(cand_ids, bt.cols["doc_id_max"][rows], "right")
-        return rows[hi > lo]
+        rows = rows[hi > lo]
+        if not rows.size:
+            return np.empty(0, np.int64), np.empty(0)
+        pt = _decode(t, rows)
+        _, ia, ib = np.intersect1d(
+            cand_ids, pt.ids, assume_unique=True, return_indices=True
+        )
+        return ia, _score(t, pt.tfs[ib], pt.dls[ib])
 
     if kind == "and":
         # decode rarest term (fewest postings) fully
@@ -903,17 +801,9 @@ def _eval_flat_pruned(
         cand_ids = p.ids
         score = _score(first, p.tfs, p.dls)
         for t in order[1:]:
-            if cand_ids.size == 0:
-                return np.empty(0, np.int64), np.empty(0, np.float64)
-            sel = _overlapping(avail[t], cand_ids)
-            if not sel.size:
-                return np.empty(0, np.int64), np.empty(0, np.float64)
-            pt = _decode(t, sel)
-            common, ia, ib = np.intersect1d(
-                cand_ids, pt.ids, assume_unique=True, return_indices=True
-            )
-            cand_ids = common
-            score = score[ia] + _score(t, pt.tfs[ib], pt.dls[ib])
+            ia, sc = _probe(t, cand_ids)  # decodes nothing once empty
+            cand_ids, score = cand_ids[ia], score[ia] + sc
+        _count_blocks(total, decoded, stats_acc)
         return cand_ids, score
 
     # kind == 'or': MaxScore with candidate-restricted tail decoding.
@@ -940,28 +830,20 @@ def _eval_flat_pruned(
     remaining = sum(ubs.values())
     for i, t in enumerate(order):
         threshold = -np.inf
-        if acc_ids.size >= k:
+        if 0 < k <= acc_ids.size:  # k <= 0: no k-th score to beat
             threshold = np.partition(acc_sc, acc_sc.size - k)[
                 acc_sc.size - k
             ]
         if threshold > remaining:
             for t2 in order[i:]:
-                if acc_ids.size == 0:
-                    break
-                sel = _overlapping(avail[t2], acc_ids)
-                if not sel.size:
-                    continue
-                pt = _decode(t2, sel)
-                common, ia, ib = np.intersect1d(
-                    acc_ids, pt.ids, assume_unique=True, return_indices=True
-                )
-                if common.size:
-                    acc_sc[ia] += _score(t2, pt.tfs[ib], pt.dls[ib])
-            return acc_ids, acc_sc
+                ia, sc = _probe(t2, acc_ids)
+                acc_sc[ia] += sc
+            break
         pt = _decode(t, avail[t])
         sc = _score(t, pt.tfs, pt.dls)
         acc_ids, acc_sc = _merge_acc(acc_ids, acc_sc, pt.ids, sc)
         remaining -= ubs[t]
+    _count_blocks(total, decoded, stats_acc)
     return acc_ids, acc_sc
 
 
@@ -978,12 +860,29 @@ def _merge_acc(ids_a, sc_a, ids_b, sc_b):
 
 
 _PRUNE_STATS = {"total_blocks": 0, "decoded_blocks": 0}
+# LocalSearcher serves threads: an unlocked `+=` on the dict loses
+# updates between its read and its write
+_PRUNE_LOCK = threading.Lock()
+
+
+def _count_blocks(total: int, decoded: int, stats_acc=None) -> None:
+    """Add one pruned evaluation's block counts to _PRUNE_STATS, and
+    to the profiling accumulators when given: the module counters are
+    worker-local on Spark, accumulators are the only channel back."""
+    with _PRUNE_LOCK:
+        _PRUNE_STATS["total_blocks"] += int(total)
+        _PRUNE_STATS["decoded_blocks"] += int(decoded)
+    if stats_acc is not None:
+        stats_acc[0].add(int(total))
+        stats_acc[1].add(int(decoded))
 
 
 def reset_prune_stats():
-    _PRUNE_STATS["total_blocks"] = 0
-    _PRUNE_STATS["decoded_blocks"] = 0
+    with _PRUNE_LOCK:
+        _PRUNE_STATS["total_blocks"] = 0
+        _PRUNE_STATS["decoded_blocks"] = 0
 
 
 def get_prune_stats():
-    return dict(_PRUNE_STATS)
+    with _PRUNE_LOCK:
+        return dict(_PRUNE_STATS)

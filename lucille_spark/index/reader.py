@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 from typing import Dict, List, Sequence
 
 import numpy as np
@@ -39,20 +40,26 @@ from lucille_spark.lru import LRUCache
 # size per expansion (the sorted-slice and n-gram prefilters' effect;
 # same testing idea as exec_wand._PRUNE_STATS for posting blocks).
 _DICT_SCAN_STATS = {"scanned_terms": 0, "total_terms": 0}
+# planning runs on serving threads: `+=` on the dict is a separate
+# read and write, so unlocked concurrent adds can lose updates
+_DICT_SCAN_LOCK = threading.Lock()
 
 
 def _count_scan(scanned: int, total: int) -> None:
-    _DICT_SCAN_STATS["scanned_terms"] += int(scanned)
-    _DICT_SCAN_STATS["total_terms"] += int(total)
+    with _DICT_SCAN_LOCK:
+        _DICT_SCAN_STATS["scanned_terms"] += int(scanned)
+        _DICT_SCAN_STATS["total_terms"] += int(total)
 
 
 def reset_dict_scan_stats() -> None:
-    _DICT_SCAN_STATS["scanned_terms"] = 0
-    _DICT_SCAN_STATS["total_terms"] = 0
+    with _DICT_SCAN_LOCK:
+        _DICT_SCAN_STATS["scanned_terms"] = 0
+        _DICT_SCAN_STATS["total_terms"] = 0
 
 
 def dict_scan_stats() -> dict:
-    return dict(_DICT_SCAN_STATS)
+    with _DICT_SCAN_LOCK:
+        return dict(_DICT_SCAN_STATS)
 
 
 def _gram_keys(s: str) -> "list[int]":

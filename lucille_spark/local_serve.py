@@ -9,13 +9,15 @@ the right shape is Lucene's: an in-process reader. `LocalSearcher`
 loads the segment and doclens tables ONCE (the only Spark jobs it
 ever runs), then answers queries in about a millisecond by running
 the SAME shard kernel the distributed WAND executor ships to workers
-(`exec_wand._make_kernel`) — one code path, so embedded results are
-bit-identical to cluster results by construction, and every kernel
-feature rides along (block-max pruning, positions, tombstones, meta
-filters, per-field similarity). Without predecode the segment table
-is held as one term-sorted `exec_wand.BlockTable`: a request slices
-its terms' row runs with np.searchsorted and hands them to the
-kernel, which decodes them on numpy columns.
+for both `search` and `search_many` (`exec_wand._make_kernel`, called
+here with a batch of one query) — one code path, so embedded results
+are bit-identical to cluster results by construction, and every
+kernel feature rides along (block-max pruning, positions, tombstones,
+meta filters, per-field similarity). Without predecode the segment
+table is held as one term-sorted `exec_wand.BlockTable`: a request
+slices its terms' row runs with np.searchsorted and hands them to the
+kernel, which decodes them on numpy columns and returns the top-k as
+arrays.
 
 At 100 TB this is not a replacement for the shard-parallel path:
 it is the per-executor sidecar / edge-cache shape — pin a hot
@@ -256,16 +258,9 @@ class LocalSearcher:
             ids, scores = top_k(ids, scores, int(k))
             return pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
         deleted = self.deleted
-        need_uni = P.needs_universe(node) or deleted is not None
         kernel = _make_kernel(
-            node,
-            self.avgdl,
-            int(k),
-            self.prune,
-            need_uni,
-            self.meta_cols,
-            self.decode,
-            deleted,
+            {"q0": node}, self.avgdl, {"q0": int(k)}, self.prune,
+            self.meta_cols, self.decode, deleted,
         )
         # slice the block table with the SAME bounds the distributed
         # path pushes to parquet (exact terms + string intervals from
@@ -275,7 +270,11 @@ class LocalSearcher:
         from lucille_spark.pushdown import file_prune_bounds
 
         segs = self._blocks.select(*file_prune_bounds(node))
-        return kernel(segs, self.dl_pdf) if need_uni else kernel(segs)
+        need_uni = P.needs_universe(node) or deleted is not None
+        out = kernel(segs, self.dl_pdf if need_uni else None)
+        return pd.DataFrame(
+            {"doc_id": out["doc_id"], "score": out["score"]}, copy=False
+        )
 
     def search_many(
         self, queries, k: int = 10, synonyms=None

@@ -1060,44 +1060,40 @@ def simplify(node: PNode) -> PNode:
     return node
 
 
+def leaves(node: PNode) -> List[PNode]:
+    """The leaves of a physical tree (terms, phrases, synonyms,
+    expansions, meta filters, match-all/none), left to right, under
+    every boolean, dis-max, NOT and boost: the one walk behind every
+    question about the terms a tree touches."""
+    out: List[PNode] = []
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, PBool):
+            stack.extend(reversed(n.must + n.should + n.must_not))
+        elif isinstance(n, PDisMax):
+            stack.extend(reversed(n.children))
+        elif isinstance(n, (PNot, PBoost)):
+            stack.append(n.child)
+        else:
+            out.append(n)
+    return out
+
+
 def collect_terms(node: PNode) -> List[str]:
     """All posting-list terms a physical tree touches (for partition
     pruning / segment scan filters)."""
-    out: List[str] = []
-
-    def walk(n: PNode) -> None:
+    out: set = set()
+    for n in leaves(node):
         if isinstance(n, PTerm):
-            out.append(n.term)
-        elif isinstance(n, PExpand):
-            out.extend(n.terms)
-        elif isinstance(n, PPhrase):
-            out.extend(n.terms)
-        elif isinstance(n, PSynonym):
-            out.extend(n.terms)
-        elif isinstance(n, PBool):
-            for c in n.must + n.should + n.must_not:
-                walk(c)
-        elif isinstance(n, PDisMax):
-            for c in n.children:
-                walk(c)
-        elif isinstance(n, (PNot, PBoost)):
-            walk(n.child if isinstance(n, PNot) else n.child)
-    walk(node)
-    return sorted(set(out))
+            out.add(n.term)
+        elif isinstance(n, (PExpand, PPhrase, PSynonym)):
+            out.update(n.terms)
+    return sorted(out)
 
 
 def needs_positions(node: PNode) -> bool:
-    if isinstance(node, PPhrase):
-        return True
-    if isinstance(node, PBool):
-        return any(
-            needs_positions(c) for c in node.must + node.should + node.must_not
-        )
-    if isinstance(node, PDisMax):
-        return any(needs_positions(c) for c in node.children)
-    if isinstance(node, (PNot, PBoost)):
-        return needs_positions(node.child)
-    return False
+    return any(isinstance(n, PPhrase) for n in leaves(node))
 
 
 def needs_universe(node: PNode) -> bool:

@@ -21,6 +21,8 @@ asserted by tests/test_pushdown.py.
 
 from __future__ import annotations
 
+from itertools import chain
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,34 +54,21 @@ def expand_bounds(node: P.PExpand):
     return [], [(None, None)]
 
 
-def file_prune_bounds(node: P.PNode):
-    """Walk a physical tree -> (exact_terms, intervals) covering every
-    posting-list term any evaluator may touch. Feed to
+def file_prune_bounds(*nodes: P.PNode):
+    """Walk physical trees -> (exact_terms, intervals) covering every
+    posting-list term any evaluator of any of them may touch. Feed to
     SparkIndex.flat_for / segments_for."""
     exact: set = set()
     intervals: list = []
-
-    def walk(n: P.PNode) -> None:
+    for n in chain.from_iterable(map(P.leaves, nodes)):
         if isinstance(n, P.PTerm):
             exact.add(n.term)
-        elif isinstance(n, P.PPhrase):
-            exact.update(n.terms)
-        elif isinstance(n, P.PSynonym):
+        elif isinstance(n, (P.PPhrase, P.PSynonym)):
             exact.update(n.terms)
         elif isinstance(n, P.PExpand):
             e, iv = expand_bounds(n)
             exact.update(e)
             intervals.extend(iv)
-        elif isinstance(n, P.PBool):
-            for c in n.must + n.should + n.must_not:
-                walk(c)
-        elif isinstance(n, P.PDisMax):
-            for c in n.children:
-                walk(c)
-        elif isinstance(n, (P.PNot, P.PBoost)):
-            walk(n.child)
-
-    walk(node)
     return sorted(exact), intervals
 
 

@@ -1,8 +1,11 @@
 """The array-native shard kernel: per-term positions, pinned prune
-counters, top_k edge cases, and rank identity of the embedded
-serving paths with the oracle on every benchmark query shape."""
+counters (also under threads), top_k edge cases, and rank identity
+of every WAND serving path (embedded and Spark, single and batched)
+with the oracle on every benchmark query shape."""
 
 import shutil
+import sys
+import threading
 
 import numpy as np
 import pytest
@@ -21,6 +24,8 @@ STREAM = [
     "import AND NOT cats", "parser AND NOT spark",
     "imp*", "par*",
     "parsr~1", "imprt~1",
+    # mixed: only the phrase's terms decode positions
+    '"import spark" OR cats', '"def parser" AND NOT spark',
 ]
 
 DELETED = list(range(0, 200, 9))
@@ -56,7 +61,7 @@ def test_phrase_survives_a_term_without_positions():
 
     q = '"quick fox"'
     node = oracle.plan(q)
-    out = W._make_kernel(node, oracle.sd.avgdl, 10, True, False, [])(seg)
+    out = W._make_kernel({"q": node}, oracle.sd.avgdl, {"q": 10}, True, [])(seg)
     want = oracle.search(q, k=10)
     assert sorted(d for d, _ in want) == [0, 1, 4]
     assert list(out["doc_id"]) == [d for d, _ in want]
@@ -91,6 +96,48 @@ def test_prune_counters_pinned(lazy, q):
     assert (st["total_blocks"], st["decoded_blocks"]) == PRUNE_COUNTS[q]
 
 
+def test_pruned_or_nonpositive_k_is_empty(lazy):
+    """A pruned flat OR with k <= 0 has no k-th score to beat; it
+    returns no rows instead of indexing an empty partition."""
+    for k in (0, -1):
+        assert len(lazy.search("import OR def OR cats", k=k)) == 0
+
+
+def test_prune_counters_exact_under_threads(lazy):
+    """Threads sharing one LocalSearcher lose no block counts: the
+    totals are rounds x the pinned per-query counts."""
+    threads, rounds = 16, 20
+    errors = []
+
+    def work():
+        try:
+            for _ in range(rounds):
+                for q in PRUNE_COUNTS:
+                    lazy.search(q, k=10)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    W.reset_prune_stats()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        pool = [threading.Thread(target=work) for _ in range(threads)]
+        for t in pool:
+            t.start()
+        for t in pool:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in pool)
+    assert not errors, errors[:3]
+    n = threads * rounds
+    st = W.get_prune_stats()
+    assert (st["total_blocks"], st["decoded_blocks"]) == (
+        n * sum(t for t, _ in PRUNE_COUNTS.values()),
+        n * sum(d for _, d in PRUNE_COUNTS.values()),
+    )
+
+
 @pytest.fixture(scope="module", params=["plain", "tombstones", "bitpack"])
 def served(request, spark, unit_index, unit_corpus, tmp_path_factory):
     """-> (index dir, deleted ids) for each index variant."""
@@ -112,23 +159,36 @@ def served(request, spark, unit_index, unit_corpus, tmp_path_factory):
 
 
 def test_serving_paths_rank_identical(spark, unit_index, served):
-    """LocalSearcher per-query decode, LocalSearcher predecode and the
-    oracle agree on doc order exactly and on scores within 1e-9."""
+    """LocalSearcher per-query decode, LocalSearcher predecode, the
+    Spark WandExecutor's search and one search_many batch of the whole
+    stream, and the oracle agree on doc order exactly and on scores
+    within 1e-9."""
     _, oracle, _ = unit_index
     ix_dir, dead = served
     paths = [
         LocalSearcher(spark, ix_dir, predecode=False),
         LocalSearcher(spark, ix_dir, predecode=True),
     ]
-    for q in STREAM:
+    wand = W.WandExecutor(paths[0].ix)
+    batch = {}
+    for r in wand.search_many(STREAM, k=10).collect():
+        batch.setdefault(int(r["query_id"][1:]), []).append(
+            (r["doc_id"], r["score"])
+        )
+    for i, q in enumerate(STREAM):
         # as-built stats: deleted docs drop out of the full ranking
         want = [
             (d, s) for d, s in oracle.search(q, k=None) if d not in dead
         ][:10]
         assert want, q
-        for ls in paths:
-            out = ls.search(q, k=10)
-            assert list(out["doc_id"]) == [d for d, _ in want], q
+        got = [ls.search(q, k=10) for ls in paths]
+        got = [list(zip(out["doc_id"], out["score"])) for out in got]
+        got.append([(r["doc_id"], r["score"]) for r in
+                    wand.search(q, k=10).collect()])
+        got.append(sorted(batch.get(i, []), key=lambda r: (-r[1], r[0])))
+        for rows in got:
+            assert [d for d, _ in rows] == [d for d, _ in want], q
             assert np.allclose(
-                out["score"], [s for _, s in want], rtol=0, atol=1e-9
+                [s for _, s in rows], [s for _, s in want],
+                rtol=0, atol=1e-9,
             ), q

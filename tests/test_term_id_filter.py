@@ -20,7 +20,7 @@ def test_filter_matches_semantics(spark):
     # prefix expansion -> startswith predicate
     node = _mk_expand(["alpha", "alphabet"], "prefix", ("prefix", "alph"))
     got = sorted(
-        r["term"] for r in df.filter(_term_filter(node, list(node.terms))).collect()
+        r["term"] for r in df.filter(_term_filter([node])).collect()
     )
     assert got == ["alpha", "alphabet"]
 
@@ -29,7 +29,7 @@ def test_filter_matches_semantics(spark):
         ["beta", "delta"], "range", ("range", "beta", "delta", True, True)
     )
     got = sorted(
-        r["term"] for r in df.filter(_term_filter(node, list(node.terms))).collect()
+        r["term"] for r in df.filter(_term_filter([node])).collect()
     )
     assert got == ["beta", "delta"]
 
@@ -39,11 +39,11 @@ def test_filter_matches_semantics(spark):
     )
     got = sorted(
         r["term"]
-        for r in df.filter(_term_filter(node, ["beta", "gamma"])).collect()
+        for r in df.filter(_term_filter([node])).collect()
     )
     assert got == ["beta", "gamma"]
 
     # fuzzy expansion (no pushdown source) -> enumerated terms
     node = _mk_expand(["beta"], "fuzzy")
-    got = [r["term"] for r in df.filter(_term_filter(node, ["beta"])).collect()]
+    got = [r["term"] for r in df.filter(_term_filter([node])).collect()]
     assert got == ["beta"]
