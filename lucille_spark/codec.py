@@ -170,9 +170,12 @@ def decode_u32s(buf: bytes) -> np.ndarray:
 # ------------------------------------------------------------ bitpack
 # Fixed-width bit packing (the FOR / PackedInts family Lucene uses for
 # postings blocks; public-domain technique): a block of n values is
-# stored at the bit width of its largest value. Typically ~2x smaller
-# than varbyte for small-gap blocks (dense terms) because gaps of
-# 2-3 bits don't pay varbyte's 8-bit floor. Self-contained per block:
+# stored at the bit width of its largest value, so small gaps (dense
+# terms) don't pay varbyte's 8-bit floor. On disk the parquet codec
+# takes most of that back: a seed-1 2,000-doc segments table is 12%
+# smaller than varbyte under snappy (929,575 vs 1,056,380 B) and 6%
+# LARGER under zstd, the index's codec (757,443 vs 715,409 B).
+# Self-contained per block:
 # [1 byte width][4 bytes LE count][ceil(n*w/8) bytes little-endian
 # bit stream]; width 0 = all zeros, no payload.
 

@@ -303,9 +303,10 @@ class WandExecutor:
             segs = seg_src(*file_prune_bounds(*nodes.values()))
         else:
             segs = ix.segments
+        # a tree that touches no term reads no segment row: the
+        # doclens cogroup below still brings its universe
         cond = _term_filter(nodes.values())
-        if cond is not None:
-            segs = segs.filter(cond)
+        segs = segs.filter(F.lit(False) if cond is None else cond)
         meta_cols = list(ix.stats.get("meta_cols", []))
         deleted, mark_dl = _tombstones(ix)
         need_uni = mark_dl or any(  # 'dl' needs the doclens slice
@@ -397,7 +398,7 @@ class BlockTable:
     instead of a pandas mask, sort or groupby."""
 
     INTS = ("doc_id_base", "doc_id_max", "n_docs", "max_tf")
-    BUFS = ("ids_delta", "tfs", "dls", "pos_counts", "positions")
+    BUFS = ("ids_delta", "tfs", "dls", "positions")
 
     def __init__(self, terms: np.ndarray, bounds: np.ndarray, cols: dict):
         self.terms, self.bounds, self.cols = terms, bounds, cols
@@ -413,7 +414,7 @@ class BlockTable:
         cols = {c: pdf[c].to_numpy(dtype=np.int64)[order] for c in cls.INTS}
         for c in cls.BUFS:
             cols[c] = pdf[c].to_numpy(dtype=object)[order]
-        cols["has_pos"] = pdf["pos_counts"].notna().to_numpy()[order]
+        cols["has_pos"] = pdf["positions"].notna().to_numpy()[order]
         bounds = np.searchsorted(codes[order], np.arange(terms.size + 1))
         return cls(terms.astype(object), bounds, cols)
 
@@ -519,9 +520,10 @@ def decode_postings(
     """Decode blocks `rows` of `bt` (ascending row indexes; default
     all) into one Posting per term, in one vectorized pass.
 
-    Per-block value counts are the block's n_docs; per-block doc-id
-    bases and per-doc position deltas are restored with segmented
-    cumsums. A term carries positions when they are wanted and every
+    Per-block value counts are the block's n_docs and per-doc
+    position counts are the tfs; per-block doc-id bases and per-doc
+    position deltas are restored with segmented cumsums. A term
+    carries positions when they are wanted and every
     one of its selected blocks stores them, decided per term: a block
     without positions never strips them from another term. Positions
     land in CSR shape (Posting.pos_flat/pos_bounds): one array object
@@ -543,11 +545,10 @@ def decode_postings(
     tpos = want & np.logical_and.reduceat(c["has_pos"][rows], tb[:-1])
     rpos = np.repeat(tpos, np.diff(tb))
     n = c["n_docs"][rows]
-    prows = rows[rpos]
-    N, Np = int(n.sum()), int(n[rpos].sum())
+    N, any_pos = int(n.sum()), bool(tpos.any())
     cols = [c["ids_delta"][rows], c["tfs"][rows], c["dls"][rows]]
-    if Np:
-        cols += [c["pos_counts"][prows], c["positions"][prows]]
+    if any_pos:
+        cols.append(c["positions"][rows[rpos]])
     vals = _decode_values(decode, cols)
     ids = _segmented_cumsum(vals[:N], n) + np.repeat(
         c["doc_id_base"][rows], n
@@ -556,13 +557,12 @@ def decode_postings(
     # the whole decoded buffer alive through views
     tfs, dls = vals[N : 2 * N].copy(), vals[2 * N : 3 * N].copy()
     pos_flat = pb = None
-    if Np:
-        pc = np.zeros(N, dtype=np.int64)
-        pc[np.repeat(rpos, n)] = vals[3 * N : 3 * N + Np]
+    if any_pos:
+        pc = np.where(np.repeat(rpos, n), tfs, 0)
         pb = np.zeros(N + 1, dtype=np.int64)
         np.cumsum(pc, out=pb[1:])
-        pos_flat = _segmented_cumsum(vals[3 * N + Np :], pc)
-    if vals.size != 3 * N + Np + (0 if pb is None else int(pb[-1])):
+        pos_flat = _segmented_cumsum(vals[3 * N :], pc)
+    if vals.size != 3 * N + (0 if pb is None else int(pb[-1])):
         raise ValueError("posting blocks disagree with their n_docs")
     vb = np.zeros(rows.size + 1, dtype=np.int64)
     np.cumsum(n, out=vb[1:])

@@ -30,9 +30,14 @@ per-row Python):
            zero-shuffle mapInPandas pass over the term-sorted flat
            parquet [NO shuffle — the block BM25 bound factors as
            idf(term) * f(max_tf), and idf is applied at query time,
-           so the encode needs no dictionary join]. The dictionary
-           aggregation is the build's ONLY shuffle, and its rows are
-           (term, partial-count) pairs — bytes, not postings.
+           so the encode needs no dictionary join]. A block stores
+           doc-id gaps, tfs, doc lengths and position deltas; a
+           doc's position count is its tf, so it is not stored
+           again. The dictionary aggregation is the build's ONLY
+           shuffle, and its rows are (term, partial-count) pairs —
+           bytes, not postings.
+
+Every table is written through fsio.index_writer, with zstd pages.
 
 Shard layout is DOC-partitioned (each shard holds postings of ALL
 terms for its doc range). At query time every shard evaluates the
@@ -65,17 +70,20 @@ from lucille_spark.codec import varbyte_encode_with_lengths
 from lucille_spark.index import fsio
 from lucille_spark.sqlgen import ident
 
-INDEX_FORMAT = 4  # bump when the on-disk layout changes
+INDEX_FORMAT = 5  # bump when the on-disk layout changes
 
 FLAT_SCHEMA = (
     "shard int, term string, doc_id long, doc_len int, tf int, "
     "positions array<int>"
 )
 
+# One row per block of up to block_size postings of a term. A doc's
+# position count is its tf, so `positions` (per-doc position deltas,
+# null when the index stores no positions) is split by `tfs`.
 SEGMENT_SCHEMA = (
     "shard int, term string, block_id int, doc_id_base long, "
     "doc_id_max long, n_docs int, "
-    "ids_delta binary, tfs binary, dls binary, pos_counts binary, "
+    "ids_delta binary, tfs binary, dls binary, "
     "positions binary, max_tf int"
 )
 
@@ -137,8 +145,9 @@ class BuildConfig:
     store_positions: bool = True
     # posting-block codec: "varbyte" (default; 8-bit floor per value)
     # or "bitpack" (fixed-width FOR packing per block — Lucene's
-    # PackedInts family; ~2-3x smaller for dense terms whose gaps fit
-    # in 2-3 bits). Readers dispatch on stats.json's "codec".
+    # PackedInts family). Its raw streams are smaller, but under the
+    # tables' zstd pages its segments are 6% LARGER on disk (numbers
+    # in codec.py). Readers dispatch on stats.json's "codec".
     codec: str = "varbyte"
     # text analyzer: "standard" (identifier-preserving, [a-z0-9_]+
     # runs) or "code" (camelCase/ALLCAPS/snake_case subtoken
@@ -397,7 +406,7 @@ class IndexBuilder:
                         "shard", cfg.doclens_sort_by, "doc_id"
                     )
                 (
-                    dl_df.write.mode("overwrite")
+                    fsio.index_writer(dl_df)
                     .partitionBy("shard")
                     .parquet(doclens_path)
                 )
@@ -426,9 +435,9 @@ class IndexBuilder:
                 # doc_id)), and the segment pass only needs sorted
                 # (shard, term) runs per file, which plain task files
                 # provide.
-                w = flat.sortWithinPartitions(
-                    "shard", "term", "doc_id"
-                ).write.mode("overwrite")
+                w = fsio.index_writer(
+                    flat.sortWithinPartitions("shard", "term", "doc_id")
+                )
                 if cfg.max_records_per_file:
                     # rows are term-sorted within each task, so the
                     # record cap splits a task's output into files
@@ -463,7 +472,7 @@ class IndexBuilder:
             # term and window-sorted within partitions — write as-is
             # (a second repartitionByRange here would add an exchange
             # and re-sample boundaries for nothing)
-            terms.write.mode("overwrite").parquet(terms_path)
+            fsio.index_writer(terms).parquet(terms_path)
             for p in pinned_terms:
                 p.unpersist()
             man.record("terms", "done", secs=time.time() - t0)
@@ -541,7 +550,7 @@ class IndexBuilder:
             segs = flat.select(
                 "shard", "term", "doc_id", "doc_len", "tf", "positions"
             ).mapInPandas(kernel, schema=SEGMENT_SCHEMA)
-            w = segs.write.mode("overwrite").partitionBy("shard")
+            w = fsio.index_writer(segs).partitionBy("shard")
             if cfg.max_records_per_file:
                 w = w.option(
                     "maxRecordsPerFile", cfg.max_records_per_file
@@ -807,8 +816,7 @@ def _make_segment_kernel(
         out = {k: [] for k in (
             "shard", "term", "block_id", "doc_id_base", "doc_id_max",
             "n_docs",
-            "ids_delta", "tfs", "dls", "pos_counts", "positions",
-            "max_tf",
+            "ids_delta", "tfs", "dls", "positions", "max_tf",
         )}
         ids = grp["doc_id"].to_numpy(dtype=np.int64)
         tfs = grp["tf"].to_numpy(dtype=np.int64)
@@ -846,6 +854,11 @@ def _make_segment_kernel(
         if store_positions:
             poss = [np.asarray(p, dtype=np.int64) for p in poss_in]
             counts = np.array([p.size for p in poss], dtype=np.int64)
+            if (counts != tfs).any():
+                # readers split `positions` by the decoded tfs
+                raise ValueError(
+                    f"term {term!r}: position counts differ from tfs"
+                )
             flat_pos = (
                 np.concatenate(poss)
                 if counts.sum()
@@ -864,10 +877,6 @@ def _make_segment_kernel(
                 pos_buf, pos_len = varbyte_encode_with_lengths(
                     deltas.astype(np.uint64)
                 )
-                cnt_buf, cnt_len = varbyte_encode_with_lengths(
-                    counts.astype(np.uint64)
-                )
-                cnt_off = _offsets(cnt_len, bstarts, bends)
                 # position byte ranges per block: doc -> position
                 # index boundaries -> byte boundaries
                 pos_byte_cum = np.concatenate(([0], np.cumsum(pos_len)))
@@ -899,19 +908,14 @@ def _make_segment_kernel(
                 out["tfs"].append(tfs_buf[slice(*tfs_off[b])])
                 out["dls"].append(dls_buf[slice(*dls_off[b])])
             if store_positions and bitpack:
-                out["pos_counts"].append(
-                    bitpack_encode(counts[s:e].astype(np.uint64))
-                )
                 out["positions"].append(
                     bitpack_encode(
                         deltas[pos_cum[s] : pos_cum[e]].astype(np.uint64)
                     )
                 )
             elif store_positions:
-                out["pos_counts"].append(cnt_buf[slice(*cnt_off[b])])
                 out["positions"].append(pos_buf[slice(*pos_off[b])])
             else:
-                out["pos_counts"].append(None)
                 out["positions"].append(None)
             out["max_tf"].append(int(max_tfs[b]))
         return pd.DataFrame(out)

@@ -10,12 +10,30 @@ plain ``os`` — no JVM round-trip on the local fast path.
 
 `file://` URIs deliberately take the Hadoop branch so the JVM code
 path is unit-testable without HDFS/S3.
+
+`index_writer` is the one DataFrame writer for every index table
+(doclens, postings_flat, terms, segments, deletes): it fixes their
+Parquet codec on the writer, not on the session.
 """
 
 from __future__ import annotations
 
 import os
 from typing import Optional
+
+
+# Parquet codec of the index tables, at parquet-mr's default level
+# (sizes against Spark's default snappy: BENCH/BASELINE.md §3b).
+INDEX_CODEC = "zstd"
+
+
+def index_writer(df, mode: str = "overwrite"):
+    """-> `df`'s DataFrameWriter for an index table: `mode`, pages
+    compressed with INDEX_CODEC. The codec is a writer option, so the
+    caller's `spark.sql.parquet.compression.codec` stays as it was.
+    Readers need no setting: parquet records the codec per column
+    chunk."""
+    return df.write.mode(mode).option("compression", INDEX_CODEC)
 
 
 def is_uri(path: str) -> bool:

@@ -65,7 +65,7 @@ def delete_docs(
         ).coalesce(1)
     df = df.persist()
     n = df.count()
-    df.write.mode("append").parquet(path)
+    fsio.index_writer(df, "append").parquet(path)
     df.unpersist()
     return n
 
@@ -120,20 +120,18 @@ def purge_deletes(
 
     dl = spark.read.parquet(os.path.join(index_dir, "doclens"))
     (
-        dl.join(F.broadcast(dd), "doc_id", "left_anti")
-        .write.mode("overwrite")
+        fsio.index_writer(dl.join(F.broadcast(dd), "doc_id", "left_anti"))
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "doclens"))
     )
 
     flat = spark.read.parquet(os.path.join(index_dir, "postings_flat"))
-    w = (
+    w = fsio.index_writer(
         flat.join(F.broadcast(dd), "doc_id", "left_anti")
         # reading may concatenate files with different term ranges
         # into one partition; the segment kernel needs sorted
         # (shard, term, doc_id) runs per partition
         .sortWithinPartitions("shard", "term", "doc_id")
-        .write.mode("overwrite")
     )
     if cfg.max_records_per_file:
         w = w.option("maxRecordsPerFile", cfg.max_records_per_file)
@@ -232,23 +230,21 @@ def force_merge(
 
     flat = spark.read.parquet(os.path.join(index_dir, "postings_flat"))
     flat_before = len(flat.inputFiles())
-    (
+    fsio.index_writer(
         flat.repartitionByRange(target, "shard", "term", "doc_id")
         .sortWithinPartitions("shard", "term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings_flat"))
-    )
+    ).parquet(os.path.join(out_dir, "postings_flat"))
 
     segs = spark.read.parquet(os.path.join(index_dir, "segments"))
     seg_before = len(segs.inputFiles())
     (
-        segs.repartitionByRange(
-            target, "shard", "term", "doc_id_base", "block_id"
+        fsio.index_writer(
+            segs.repartitionByRange(
+                target, "shard", "term", "doc_id_base", "block_id"
+            ).sortWithinPartitions(
+                "shard", "term", "doc_id_base", "block_id"
+            )
         )
-        .sortWithinPartitions(
-            "shard", "term", "doc_id_base", "block_id"
-        )
-        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "segments"))
     )
@@ -333,21 +329,20 @@ def split_index(
     span = max(1, math.ceil((int(hi) + 1) / num_shards))
     reshard = (F.col("doc_id") / F.lit(span)).cast("int")
     (
-        dl.withColumn("shard", reshard)
-        .repartition("shard")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
+        fsio.index_writer(
+            dl.withColumn("shard", reshard)
+            .repartition("shard")
+            .sortWithinPartitions("doc_id")
+        )
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "doclens"))
     )
     flat = spark.read.parquet(os.path.join(index_dir, "postings_flat"))
-    (
+    fsio.index_writer(
         flat.withColumn("shard", reshard)
         .repartitionByRange(num_shards, "shard", "term", "doc_id")
         .sortWithinPartitions("shard", "term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings_flat"))
-    )
+    ).parquet(os.path.join(out_dir, "postings_flat"))
     # dictionary is shard-independent: copy verbatim
     _copy_tree(
         spark,
@@ -597,8 +592,7 @@ def update_meta(
         if c not in dl.columns:
             keep.append(F.col(f"_new_{c}").alias(c))
     (
-        j.select(*keep)
-        .write.mode("overwrite")
+        fsio.index_writer(j.select(*keep))
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "doclens"))
     )

@@ -739,18 +739,20 @@ def compact(
     span = max(1, math.ceil(n_docs / cfg.num_shards))
     reshard = (F.col("doc_id") / F.lit(span)).cast("int")
     (
-        dl.withColumn("shard", reshard)
-        .repartition("shard")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
+        fsio.index_writer(
+            dl.withColumn("shard", reshard)
+            .repartition("shard")
+            .sortWithinPartitions("doc_id")
+        )
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "doclens"))
     )
     (
-        flat.withColumn("shard", reshard)
-        .repartition("shard")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
+        fsio.index_writer(
+            flat.withColumn("shard", reshard)
+            .repartition("shard")
+            .sortWithinPartitions("term", "doc_id")
+        )
         .partitionBy("shard")
         .parquet(os.path.join(out_dir, "postings_flat"))
     )
