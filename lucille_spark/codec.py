@@ -166,43 +166,3 @@ def encode_u32s(values: np.ndarray) -> bytes:
 def decode_u32s(buf: bytes) -> np.ndarray:
     return varbyte_decode(buf).astype(np.int64)
 
-
-# ------------------------------------------------------------ bitpack
-# Fixed-width bit packing (the FOR / PackedInts family Lucene uses for
-# postings blocks; public-domain technique): a block of n values is
-# stored at the bit width of its largest value, so small gaps (dense
-# terms) don't pay varbyte's 8-bit floor. On disk the parquet codec
-# takes most of that back: a seed-1 2,000-doc segments table is 12%
-# smaller than varbyte under snappy (929,575 vs 1,056,380 B) and 6%
-# LARGER under zstd, the index's codec (757,443 vs 715,409 B).
-# Self-contained per block:
-# [1 byte width][4 bytes LE count][ceil(n*w/8) bytes little-endian
-# bit stream]; width 0 = all zeros, no payload.
-
-
-def bitpack_encode(values: np.ndarray) -> bytes:
-    """Encode a uint64 array at the block's max bit width."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b"\x00\x00\x00\x00\x00"
-    w = int(v.max()).bit_length()
-    head = bytes([w]) + int(n).to_bytes(4, "little")
-    if w == 0:
-        return head
-    shifts = np.arange(w, dtype=np.uint64)
-    bits = ((v[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
-    return head + np.packbits(bits.ravel(), bitorder="little").tobytes()
-
-
-def bitpack_decode(buf: bytes) -> np.ndarray:
-    """-> uint64 array (inverse of bitpack_encode)."""
-    w = buf[0]
-    n = int.from_bytes(buf[1:5], "little")
-    if n == 0 or w == 0:
-        return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(
-        np.frombuffer(buf, dtype=np.uint8, offset=5), bitorder="little"
-    )[: n * w].reshape(n, w)
-    weights = np.uint64(1) << np.arange(w, dtype=np.uint64)
-    return (bits.astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)

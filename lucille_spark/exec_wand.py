@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucille_spark import plans as P
-from lucille_spark.codec import bitpack_decode, varbyte_decode
+from lucille_spark.codec import varbyte_decode
 from lucille_spark.pushdown import expand_condition, file_prune_bounds
 from lucille_spark.sqlgen import ident
 from lucille_spark.eval_local import Posting, ShardData, evaluate, top_k
@@ -67,9 +67,6 @@ from lucille_spark.lru import LRUCache
 
 # one row per hit of one query of the batch a shard kernel evaluates
 KERNEL_SCHEMA = "query_id string, doc_id long, score double"
-
-# posting-block codecs by the name recorded in stats.json at build
-DECODERS = {"varbyte": varbyte_decode, "bitpack": bitpack_decode}
 
 # Tombstone sets up to this size ship into the shard kernels as a
 # sorted array in the task closure (~8 B/id serialized per task).
@@ -331,7 +328,7 @@ class WandExecutor:
             )
         kernel = _make_kernel(
             nodes, float(ix.stats["avg_dl"]), ks, prune, meta_cols,
-            DECODERS[ix.stats.get("codec", "varbyte")], deleted, meta_out,
+            deleted, meta_out,
             stats_acc=getattr(self, "profile_acc", None),
         )
         if need_uni:
@@ -487,20 +484,6 @@ def _csr_take(
     return flat[idx], nb
 
 
-def _decode_values(decode, cols) -> np.ndarray:
-    """Decode a list of buffer columns into ONE int64 value stream.
-    Varbyte is self-delimiting, so the concatenation of every buffer
-    decodes exactly like separate decodes: one call for all blocks
-    and columns replaces a per-block loop of three or five calls.
-    Bitpack blocks carry headers and are not concatenation-safe, so
-    they decode one at a time."""
-    if decode is varbyte_decode:
-        buf = b"".join(chain.from_iterable(cols))
-        return varbyte_decode(buf).astype(np.int64)
-    parts = [decode(b) for col in cols for b in col]
-    return np.concatenate(parts).astype(np.int64)
-
-
 def _segmented_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Cumulative sum of `vals` restarting at every segment of
     `counts` values (per-block doc-id gaps, per-doc position
@@ -513,7 +496,6 @@ def _segmented_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
 def decode_postings(
     bt: BlockTable,
     pos_terms,  # bool (all/none) | set of terms wanting positions
-    decode=varbyte_decode,
     deleted: Optional[np.ndarray] = None,
     rows: Optional[np.ndarray] = None,
 ) -> "Dict[str, Posting]":
@@ -549,7 +531,10 @@ def decode_postings(
     cols = [c["ids_delta"][rows], c["tfs"][rows], c["dls"][rows]]
     if any_pos:
         cols.append(c["positions"][rows[rpos]])
-    vals = _decode_values(decode, cols)
+    # varbyte is self-delimiting: the concatenation of every block's
+    # buffers decodes exactly like separate decodes, so one call
+    # decodes all blocks and columns
+    vals = varbyte_decode(b"".join(chain.from_iterable(cols))).astype(np.int64)
     ids = _segmented_cumsum(vals[:N], n) + np.repeat(
         c["doc_id_base"][rows], n
     )
@@ -653,7 +638,6 @@ def _make_kernel(
     ks: Dict[str, int],
     prune: bool,
     meta_cols: List[str],
-    decode=varbyte_decode,
     deleted=None,  # None | sorted np.ndarray | "dl" sentinel
     meta_out: "Optional[List[str]]" = None,
     stats_acc=None,  # (total_blocks, decoded_blocks) accumulators
@@ -698,7 +682,7 @@ def _make_kernel(
                 # different build partitions; the decoder restores
                 # ascending ids per term)
                 sd.postings.update(
-                    decode_postings(bt, pos_terms, decode, dead)
+                    decode_postings(bt, pos_terms, dead)
                 )
                 if stats_acc is not None:
                     stats_acc[0].add(len(bt))
@@ -706,7 +690,7 @@ def _make_kernel(
             for qid, node in nodes.items():
                 if qid in pruned:
                     i, s = _eval_flat_pruned(
-                        flats[qid], bt, sd, ks[qid], decode, dead, stats_acc
+                        flats[qid], bt, sd, ks[qid], dead, stats_acc
                     )
                 else:
                     i, s = evaluate(node, sd)
@@ -735,7 +719,6 @@ def _eval_flat_pruned(
     bt: BlockTable,
     sd: ShardData,
     k: int,
-    decode=varbyte_decode,
     deleted: Optional[np.ndarray] = None,
     stats_acc=None,
 ) -> Tuple[np.ndarray, np.ndarray]:
@@ -773,7 +756,7 @@ def _eval_flat_pruned(
     def _decode(t: str, rows: np.ndarray) -> Posting:
         nonlocal decoded
         decoded += rows.size
-        return decode_postings(bt, False, decode, deleted, rows)[t]
+        return decode_postings(bt, False, deleted, rows)[t]
 
     def _probe(t: str, cand_ids: np.ndarray):
         """-> (indexes into `cand_ids` of the docs holding `t`, their

@@ -71,6 +71,8 @@ from lucille_spark.index import fsio
 from lucille_spark.sqlgen import ident
 
 INDEX_FORMAT = 5  # bump when the on-disk layout changes
+# the one posting-block codec, recorded in stats.json as "codec"
+BLOCK_CODEC = "varbyte"
 
 FLAT_SCHEMA = (
     "shard int, term string, doc_id long, doc_len int, tf int, "
@@ -143,12 +145,6 @@ class BuildConfig:
     term_group_buckets: int = 8        # applyInPandas group granularity
     salt_buckets: int = 16             # hot-term salting fan-out
     store_positions: bool = True
-    # posting-block codec: "varbyte" (default; 8-bit floor per value)
-    # or "bitpack" (fixed-width FOR packing per block — Lucene's
-    # PackedInts family). Its raw streams are smaller, but under the
-    # tables' zstd pages its segments are 6% LARGER on disk (numbers
-    # in codec.py). Readers dispatch on stats.json's "codec".
-    codec: str = "varbyte"
     # text analyzer: "standard" (identifier-preserving, [a-z0-9_]+
     # runs) or "code" (camelCase/ALLCAPS/snake_case subtoken
     # splitting — analysis.code_tokenize). Recorded in stats.json;
@@ -517,7 +513,7 @@ class IndexBuilder:
                 "n_terms": int(n_terms),
                 "num_shards": cfg.num_shards,
                 "block_size": cfg.block_size,
-                "codec": cfg.codec,
+                "codec": BLOCK_CODEC,
                 "analyzer": cfg.analyzer,
                 "meta_cols": meta_cols,
                 "meta_types": meta_types,
@@ -545,7 +541,7 @@ class IndexBuilder:
         if not (man.done("segments") and _has_success(seg_path, spark)):
             t0 = time.time()
             kernel = _make_segment_kernel(
-                cfg.block_size, cfg.store_positions, cfg.codec
+                cfg.block_size, cfg.store_positions
             )
             segs = flat.select(
                 "shard", "term", "doc_id", "doc_len", "tf", "positions"
@@ -791,9 +787,7 @@ def _postings_frame(pdf, col, prefix, analyzer, pandas_token_lists):
     )
 
 
-def _make_segment_kernel(
-    block_size: int, store_positions: bool, codec: str = "varbyte"
-):
+def _make_segment_kernel(block_size: int, store_positions: bool):
     """mapInPandas kernel over flat rows in (term, doc_id) order ->
     delta+varbyte block rows with block-max tf stats (the BM25 block
     bound idf(term) * max_tf/(max_tf + k1(1-b)) is completed at
@@ -805,19 +799,9 @@ def _make_segment_kernel(
     once complete — no pandas sort or groupby. Per term, every array
     (docID gaps, tfs, doc lens, position deltas) is varbyte-encoded
     ONCE, whole; blocks are byte slices computed from the per-value
-    length arrays. With codec="bitpack" each block is encoded
-    separately at its own fixed bit width (self-contained header per
-    block), trading the single whole-run encode for smaller blocks."""
-    from lucille_spark.codec import bitpack_encode
-
-    bitpack = codec == "bitpack"
+    length arrays."""
 
     def encode_term(shard: int, term: str, grp: pd.DataFrame) -> pd.DataFrame:
-        out = {k: [] for k in (
-            "shard", "term", "block_id", "doc_id_base", "doc_id_max",
-            "n_docs",
-            "ids_delta", "tfs", "dls", "positions", "max_tf",
-        )}
         ids = grp["doc_id"].to_numpy(dtype=np.int64)
         tfs = grp["tf"].to_numpy(dtype=np.int64)
         dls = grp["doc_len"].to_numpy(dtype=np.int64)
@@ -839,18 +823,7 @@ def _make_segment_kernel(
         gaps[0] = 0
         gaps[1:] = np.diff(ids).astype(np.uint64)
         gaps[bstarts] = 0
-        if not bitpack:
-            ids_buf, ids_len = varbyte_encode_with_lengths(gaps)
-            tfs_buf, tfs_len = varbyte_encode_with_lengths(
-                tfs.astype(np.uint64)
-            )
-            dls_buf, dls_len = varbyte_encode_with_lengths(
-                dls.astype(np.uint64)
-            )
-            ids_off = _offsets(ids_len, bstarts, bends)
-            tfs_off = _offsets(tfs_len, bstarts, bends)
-            dls_off = _offsets(dls_len, bstarts, bends)
-        max_tfs = np.maximum.reduceat(tfs, bstarts)
+        positions = [None] * bstarts.size
         if store_positions:
             poss = [np.asarray(p, dtype=np.int64) for p in poss_in]
             counts = np.array([p.size for p in poss], dtype=np.int64)
@@ -870,55 +843,23 @@ def _make_segment_kernel(
                 deltas[1:] = flat_pos[1:] - flat_pos[:-1]
                 doc_starts = np.cumsum(counts) - counts
                 deltas[doc_starts] = flat_pos[doc_starts]
-            pos_cum = np.concatenate(
-                ([0], np.cumsum(counts))
-            )  # doc idx -> first position idx
-            if not bitpack:
-                pos_buf, pos_len = varbyte_encode_with_lengths(
-                    deltas.astype(np.uint64)
-                )
-                # position byte ranges per block: doc -> position
-                # index boundaries -> byte boundaries
-                pos_byte_cum = np.concatenate(([0], np.cumsum(pos_len)))
-                pos_off = [
-                    (
-                        int(pos_byte_cum[pos_cum[s]]),
-                        int(pos_byte_cum[pos_cum[e]]),
-                    )
-                    for s, e in zip(bstarts, bends)
-                ]
-        for b in range(bstarts.size):
-            s, e = int(bstarts[b]), int(bends[b])
-            out["shard"].append(shard)
-            out["term"].append(term)
-            out["block_id"].append(b)
-            out["doc_id_base"].append(int(ids[s]))
-            out["doc_id_max"].append(int(ids[e - 1]))
-            out["n_docs"].append(e - s)
-            if bitpack:
-                out["ids_delta"].append(bitpack_encode(gaps[s:e]))
-                out["tfs"].append(
-                    bitpack_encode(tfs[s:e].astype(np.uint64))
-                )
-                out["dls"].append(
-                    bitpack_encode(dls[s:e].astype(np.uint64))
-                )
-            else:
-                out["ids_delta"].append(ids_buf[slice(*ids_off[b])])
-                out["tfs"].append(tfs_buf[slice(*tfs_off[b])])
-                out["dls"].append(dls_buf[slice(*dls_off[b])])
-            if store_positions and bitpack:
-                out["positions"].append(
-                    bitpack_encode(
-                        deltas[pos_cum[s] : pos_cum[e]].astype(np.uint64)
-                    )
-                )
-            elif store_positions:
-                out["positions"].append(pos_buf[slice(*pos_off[b])])
-            else:
-                out["positions"].append(None)
-            out["max_tf"].append(int(max_tfs[b]))
-        return pd.DataFrame(out)
+            # doc idx -> first position idx: a block holds the
+            # positions of its docs
+            pos_cum = np.concatenate(([0], np.cumsum(counts)))
+            positions = _block_slices(deltas, pos_cum[bstarts], pos_cum[bends])
+        return pd.DataFrame({
+            "shard": shard,
+            "term": term,
+            "block_id": np.arange(bstarts.size),
+            "doc_id_base": ids[bstarts],
+            "doc_id_max": ids[bends - 1],
+            "n_docs": bends - bstarts,
+            "ids_delta": _block_slices(gaps, bstarts, bends),
+            "tfs": _block_slices(tfs, bstarts, bends),
+            "dls": _block_slices(dls, bstarts, bends),
+            "positions": positions,
+            "max_tf": np.maximum.reduceat(tfs, bstarts),
+        })
 
     def kernel(batches):
         buf: list = []
@@ -948,7 +889,10 @@ def _make_segment_kernel(
     return kernel
 
 
-def _offsets(lengths: np.ndarray, bstarts: np.ndarray, bends: np.ndarray):
-    """Byte (start, end) pairs per block from per-value byte lengths."""
-    cum = np.concatenate(([0], np.cumsum(lengths)))
-    return [(int(cum[s]), int(cum[e])) for s, e in zip(bstarts, bends)]
+def _block_slices(values: np.ndarray, starts, ends) -> list:
+    """varbyte-encode `values` once, whole, and cut out the bytes of
+    each block's values [starts[b], ends[b]) by the per-value byte
+    lengths."""
+    buf, lengths = varbyte_encode_with_lengths(values)
+    cum = np.concatenate(([0], np.cumsum(lengths))).tolist()
+    return [buf[cum[s]:cum[e]] for s, e in zip(starts.tolist(), ends.tolist())]

@@ -21,6 +21,8 @@ Checks (each a small Spark aggregation; the decode check samples):
      [term_min, term_max] brackets the file's actual term range.
 
 Returns {"ok": bool, "errors": [...], "checks": {name: detail}}.
+Raises ValueError, like SparkIndex, when stats.json names another
+on-disk format or posting-block codec (reader.check_layout).
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from lucille_spark.index import fsio
+from lucille_spark.index.reader import check_layout
 
 
 def check_index(
@@ -43,6 +46,7 @@ def check_index(
     stats = json.loads(
         fsio.read_text(os.path.join(index_dir, "stats.json"), spark)
     )
+    check_layout(stats, index_dir)
     dl = spark.read.parquet(os.path.join(index_dir, "doclens"))
     flat = spark.read.parquet(os.path.join(index_dir, "postings_flat"))
     terms = spark.read.parquet(os.path.join(index_dir, "terms"))
@@ -109,9 +113,8 @@ def check_index(
     import numpy as np
     from pyspark.sql import Window
 
-    from lucille_spark.exec_wand import DECODERS
+    from lucille_spark.codec import varbyte_decode
 
-    decode = DECODERS[stats.get("codec", "varbyte")]
     total_blocks = segs.count()
     step = max(1, total_blocks // max(sample_blocks, 1))
     sample = (
@@ -128,7 +131,7 @@ def check_index(
     bad_blocks = 0
     for r in sample:
         ids = r["doc_id_base"] + np.cumsum(
-            decode(bytes(r["ids_delta"]))
+            varbyte_decode(bytes(r["ids_delta"]))
         )
         ok = (
             len(ids) == r["n_docs"]

@@ -112,7 +112,6 @@ def purge_deletes(
     cfg = config or BuildConfig(
         num_shards=int(stats["num_shards"]),
         block_size=int(stats["block_size"]),
-        codec=stats.get("codec", "varbyte"),
         analyzer=stats.get("analyzer", "standard"),
     )
     meta_cols = list(stats.get("meta_cols", []))
@@ -366,7 +365,6 @@ def split_index(
     cfg = BuildConfig(
         num_shards=num_shards,
         block_size=int(stats["block_size"]),
-        codec=stats.get("codec", "varbyte"),
         analyzer=stats.get("analyzer", "standard"),
     )
     meta_cols = list(stats.get("meta_cols", []))
@@ -398,7 +396,7 @@ def reindex(
     **build_kwargs,
 ) -> dict:
     """ES `_reindex`: rebuild an index from its SOURCE docs table
-    into `out_dir`, optionally under a new analyzer/codec/sharding
+    into `out_dir`, optionally under a new analyzer/sharding
     (`config`) and optionally restricted to the docs matching a
     Lucene-syntax `query` against the SOURCE index (ES reindex with
     a query section). Tombstoned docs are dropped — reindex copies
@@ -412,7 +410,7 @@ def reindex(
     hashes from the source index select source rows with a broadcast
     semi-join (match sets are query-sized, the corpus is not).
 
-    `config` defaults to the SOURCE index's analyzer/codec/sharding,
+    `config` defaults to the SOURCE index's analyzer/sharding,
     so a bare reindex == purge + fresh build. Returns new stats."""
     spark = docs.sparkSession
     if os.path.abspath(out_dir) == os.path.abspath(src_index_dir):
@@ -424,7 +422,6 @@ def reindex(
     cfg = config or BuildConfig(
         num_shards=int(stats["num_shards"]),
         block_size=int(stats["block_size"]),
-        codec=stats.get("codec", "varbyte"),
         analyzer=stats.get("analyzer", "standard"),
     )
     keep = None

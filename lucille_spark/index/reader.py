@@ -476,6 +476,26 @@ class FileTermIndex:
         return out
 
 
+def check_layout(stats: dict, index_dir: str) -> None:
+    """Raise ValueError unless `stats` (an index's stats.json) names
+    the on-disk format and posting-block codec this reader decodes."""
+    from lucille_spark.index.builder import BLOCK_CODEC, INDEX_FORMAT
+
+    fmt = int(stats.get("format", 0))
+    if fmt != INDEX_FORMAT:
+        raise ValueError(
+            f"index at {index_dir} has on-disk format {fmt}; this "
+            f"reader requires format {INDEX_FORMAT} — rebuild the "
+            "index (or purge/compact it with the current builder)"
+        )
+    codec = stats.get("codec", BLOCK_CODEC)
+    if codec != BLOCK_CODEC:
+        raise ValueError(
+            f"index at {index_dir} has posting-block codec {codec!r}; "
+            f"this reader decodes only {BLOCK_CODEC!r} — rebuild the index"
+        )
+
+
 class SparkIndex:
     def __init__(
         self,
@@ -498,15 +518,7 @@ class SparkIndex:
         self.stats = json.loads(
             fsio.read_text(os.path.join(index_dir, "stats.json"), spark)
         )
-        from lucille_spark.index.builder import INDEX_FORMAT
-
-        fmt = int(self.stats.get("format", 0))
-        if fmt != INDEX_FORMAT:
-            raise ValueError(
-                f"index at {index_dir} has on-disk format {fmt}; this "
-                f"reader requires format {INDEX_FORMAT} — rebuild the "
-                "index (or purge/compact it with the current builder)"
-            )
+        check_layout(self.stats, index_dir)
         self.terms_df = spark.read.parquet(os.path.join(index_dir, "terms"))
         self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
         self.flat = spark.read.parquet(

@@ -90,9 +90,8 @@ class LocalSearcher:
         self.prune = prune
         self.avgdl = float(self.ix.stats["avg_dl"])
         self.meta_cols = list(self.ix.stats.get("meta_cols", []))
-        from lucille_spark.exec_wand import DECODERS, BlockTable
+        from lucille_spark.exec_wand import BlockTable
 
-        self.decode = DECODERS[self.ix.stats.get("codec", "varbyte")]
         # ---- the one-time loads (the ONLY Spark jobs) ----
         self.seg_pdf = self.ix.uncached("segments").toPandas()
         self.dl_pdf = (
@@ -129,8 +128,7 @@ class LocalSearcher:
         # resident positions from millions of tiny arrays to one
         # array + bounds per term
         sd.postings = decode_postings(
-            BlockTable.from_frame(self.seg_pdf), bool(full), self.decode,
-            self.deleted,
+            BlockTable.from_frame(self.seg_pdf), bool(full), self.deleted,
         )
         if not full:
             sd.pos_loader = partial(self._load_positions, sd, self.deleted)
@@ -146,7 +144,7 @@ class LocalSearcher:
 
         rows = self.seg_pdf[self.seg_pdf["term"] == term]
         p = decode_postings(
-            BlockTable.from_frame(rows), True, self.decode, deleted
+            BlockTable.from_frame(rows), True, deleted
         ).get(str(term))
         if p is None:
             return None
@@ -260,7 +258,7 @@ class LocalSearcher:
         deleted = self.deleted
         kernel = _make_kernel(
             {"q0": node}, self.avgdl, {"q0": int(k)}, self.prune,
-            self.meta_cols, self.decode, deleted,
+            self.meta_cols, deleted,
         )
         # slice the block table with the SAME bounds the distributed
         # path pushes to parquet (exact terms + string intervals from

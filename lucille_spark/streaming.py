@@ -688,7 +688,7 @@ def tombstone_ratio(
 
 def _config_from_delta(spark: SparkSession, delta_dir: str) -> BuildConfig:
     """BuildConfig matching how a delta was actually built (analyzer /
-    codec / block_size / num_shards from its stats.json) so a
+    block_size / num_shards from its stats.json) so a
     config-less compaction can't silently stamp defaults that diverge
     from the index-time analysis (e.g. analyzer='standard' over
     deltas built with 'code')."""
@@ -698,7 +698,6 @@ def _config_from_delta(spark: SparkSession, delta_dir: str) -> BuildConfig:
     return BuildConfig(
         num_shards=int(stats.get("num_shards", BuildConfig.num_shards)),
         block_size=int(stats.get("block_size", BuildConfig.block_size)),
-        codec=stats.get("codec", "varbyte"),
         analyzer=stats.get("analyzer", "standard"),
     )
 

@@ -47,8 +47,6 @@ def main():
         help="comma list of extra text columns to index as "
         "Lucene-style fields (per-field norms)",
     )
-    ap.add_argument("--codec", default="varbyte",
-                    help="varbyte | bitpack posting block codec")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument(
         "--format",
@@ -111,7 +109,6 @@ def main():
         block_size=args.block_size,
         salt_buckets=args.salt_buckets,
         analyzer=args.analyzer,
-        codec=args.codec,
     ).build(
         docs,
         args.output,

@@ -6,8 +6,8 @@
 2. check_index passes on a purged index (sparse, non-dense doc_ids).
 3. span_first / bm25f_topk / term_vector exclude tombstoned docs,
    same as search/match_count.
-4. config-less compact() inherits analyzer/codec from the deltas'
-   stats.json instead of stamping BuildConfig defaults.
+4. config-less compact() inherits analyzer, block size and shard count
+   from the deltas' stats.json instead of stamping BuildConfig defaults.
 5. opening a wrong-format index raises a clear 'rebuild required'
    error, not a missing-column AnalysisException.
 """

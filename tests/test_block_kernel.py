@@ -138,24 +138,18 @@ def test_prune_counters_exact_under_threads(lazy):
     )
 
 
-@pytest.fixture(scope="module", params=["plain", "tombstones", "bitpack"])
-def served(request, spark, unit_index, unit_corpus, tmp_path_factory):
+@pytest.fixture(scope="module", params=["plain", "tombstones"])
+def served(request, spark, unit_index, tmp_path_factory):
     """-> (index dir, deleted ids) for each index variant."""
-    from lucille_spark.index import IndexBuilder
     from lucille_spark.index.maintenance import delete_docs
 
     ix, _, _ = unit_index
     if request.param == "plain":
         return ix.dir, []
     out = str(tmp_path_factory.mktemp("served") / request.param)
-    if request.param == "tombstones":
-        shutil.copytree(ix.dir, out)
-        delete_docs(spark, out, DELETED)
-        return out, DELETED
-    IndexBuilder(num_shards=4, block_size=32, codec="bitpack").build(
-        spark.createDataFrame(unit_corpus), out
-    )
-    return out, []
+    shutil.copytree(ix.dir, out)
+    delete_docs(spark, out, DELETED)
+    return out, DELETED
 
 
 def test_serving_paths_rank_identical(spark, unit_index, served):

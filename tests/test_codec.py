@@ -1,9 +1,12 @@
 """Varbyte/delta codec property tests (FIXTURES.md §2)."""
 
+from unittest.mock import patch
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from lucille_spark import codec
 from lucille_spark.codec import (
     decode_ids,
     decode_u32s,
@@ -67,20 +70,30 @@ def test_varbyte_lengths_slicing():
         )
 
 
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
-@settings(max_examples=200, deadline=None)
-def test_bitpack_roundtrip(xs):
-    from lucille_spark.codec import bitpack_decode, bitpack_encode
-
-    arr = np.array(xs, dtype=np.uint64)
-    assert (bitpack_decode(bitpack_encode(arr)) == arr).all()
-
-
-def test_bitpack_smaller_on_small_gaps():
-    """The point of the codec: dense-term gap blocks beat varbyte's
-    8-bit-per-value floor."""
-    from lucille_spark.codec import bitpack_encode, varbyte_encode
-
-    rng = np.random.default_rng(3)
-    gaps = rng.integers(0, 8, 128).astype(np.uint64)
-    assert len(bitpack_encode(gaps)) < len(varbyte_encode(gaps)) / 2
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=40),
+        max_size=12,
+    ),
+    # >= 10 bytes, the longest varbyte value: a chunk boundary always
+    # has a value end to walk back to
+    st.integers(min_value=10, max_value=40),
+)
+@settings(max_examples=300, deadline=None)
+def test_chunked_decode_matches_whole(blocks, chunk):
+    """A buffer larger than _DECODE_CHUNK is decoded in chunks split
+    at value boundaries. Chunked and whole decodes agree, and decoding
+    the concatenation of per-block buffers equals concatenating the
+    per-block decodes (what exec_wand.decode_postings relies on)."""
+    values = np.array([v for b in blocks for v in b], dtype=np.uint64)
+    bufs = [varbyte_encode(np.array(b, dtype=np.uint64)) for b in blocks]
+    joined = b"".join(bufs)
+    whole = varbyte_decode(joined)
+    with patch.object(codec, "_DECODE_CHUNK", chunk):
+        chunked = varbyte_decode(joined)
+        per_block = [varbyte_decode(b) for b in bufs]
+    assert np.array_equal(whole, values)
+    assert np.array_equal(chunked, values)
+    assert np.array_equal(
+        np.concatenate([np.empty(0, np.uint64)] + per_block), values
+    )

@@ -193,42 +193,6 @@ def test_search_many_matches_individual(unit_index):
         assert got.get(qid, []) == solo, qid
 
 
-def test_bitpack_index_rank_identical(spark, unit_corpus, tmp_path_factory):
-    """An index built with codec='bitpack' serves every query shape
-    rank-identically to the oracle (and hence to the varbyte index)
-    through the WAND executor, including positional queries."""
-    from lucille_spark.index import IndexBuilder
-    from lucille_spark.index.reader import SparkIndex
-    from lucille_spark.exec_wand import WandExecutor
-
-    out = str(tmp_path_factory.mktemp("ix") / "bitpack")
-    docs = spark.createDataFrame(unit_corpus)
-    IndexBuilder(num_shards=4, block_size=32, codec="bitpack").build(
-        docs, out
-    )
-    ix = SparkIndex(spark, out)
-    assert ix.stats["codec"] == "bitpack"
-    from tests.oracle import OracleIndex
-
-    pdf = unit_corpus.sort_values(["repo", "path", "commit"]).reset_index(
-        drop=True
-    )
-    oracle = OracleIndex(
-        [
-            {"doc_id": i, "repo": r.repo, "path": r.path,
-             "commit": r.commit, "lang": r.lang, "content": r.content}
-            for i, r in enumerate(pdf.itertuples())
-        ]
-    )
-    ex = WandExecutor(ix)
-    for q in ["import", "import AND cats", "import cats dogs",
-              '"import os"', "import AND NOT cats", "imp*"]:
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in ex.search(q, k=10).collect()]
-        exp = [(d, round(s, 9)) for d, s in oracle.search(q, k=10)]
-        assert got == exp, q
-
-
 def test_mine_hard_negatives(wand):
     """Hard-negative mining rides search_many: per-query ranks are
     1..k in (rounded score desc, doc_id) order, rank 1 is the only

@@ -1,8 +1,8 @@
 """Segment blocks store a doc's positions but not its position count:
 the count is the doc's tf. Every serving path decodes phrases from
-that layout rank-identically to the oracle, on plain, tombstoned,
-bitpack and position-less indexes, and a reader refuses an index of
-the previous on-disk format."""
+that layout rank-identically to the oracle, on plain, tombstoned
+and position-less indexes, and a reader refuses an index of the
+previous on-disk format or of another posting-block codec."""
 
 import copy
 import json
@@ -54,6 +54,25 @@ def test_previous_format_asks_for_rebuild(spark, unit_index, tmp_path):
         SparkIndex(spark, old)
 
 
+def test_other_codec_refused(spark, unit_index, tmp_path):
+    """stats.json naming a posting-block codec other than varbyte is
+    refused at open instead of decoding varbyte bytes as that codec."""
+    from lucille_spark.index.check import check_index
+    from lucille_spark.index.reader import SparkIndex
+
+    ix, _, _ = unit_index
+    other = str(tmp_path / "bitpack")
+    shutil.copytree(ix.dir, other)
+    path = os.path.join(other, "stats.json")
+    stats = json.loads(open(path).read())
+    assert stats["codec"] == "varbyte"
+    stats["codec"] = "bitpack"
+    open(path, "w").write(json.dumps(stats))
+    for open_index in (SparkIndex, LocalSearcher, check_index):
+        with pytest.raises(ValueError, match="codec 'bitpack'.*rebuild"):
+            open_index(spark, other)
+
+
 def _without_positions(oracle):
     """The oracle as an index built with store_positions=False sees
     it: same postings, no positions (phrases match nothing)."""
@@ -67,7 +86,7 @@ def _without_positions(oracle):
 
 
 @pytest.fixture(
-    scope="module", params=["plain", "tombstones", "bitpack", "no_positions"]
+    scope="module", params=["plain", "tombstones", "no_positions"]
 )
 def variant(request, spark, unit_index, unit_corpus, tmp_path_factory):
     """-> (index dir, deleted ids, oracle, stores positions) for each
@@ -83,15 +102,9 @@ def variant(request, spark, unit_index, unit_corpus, tmp_path_factory):
         shutil.copytree(ix.dir, out)
         delete_docs(spark, out, DELETED)
         return out, DELETED, oracle, True
-    kw = (
-        {"codec": "bitpack"} if request.param == "bitpack"
-        else {"store_positions": False}
-    )
-    IndexBuilder(num_shards=4, block_size=32, **kw).build(
+    IndexBuilder(num_shards=4, block_size=32, store_positions=False).build(
         spark.createDataFrame(unit_corpus), out
     )
-    if request.param == "bitpack":
-        return out, [], oracle, True
     return out, [], _without_positions(oracle), False
 
 
