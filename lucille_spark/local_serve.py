@@ -13,11 +13,17 @@ for both `search` and `search_many` (`exec_wand._make_kernel`, called
 here with a batch of one query) — one code path, so embedded results
 are bit-identical to cluster results by construction, and every
 kernel feature rides along (block-max pruning, positions, tombstones,
-meta filters, per-field similarity). Without predecode the segment
-table is held as one term-sorted `exec_wand.BlockTable`: a request
-slices its terms' row runs with np.searchsorted and hands them to the
-kernel, which decodes them on numpy columns and returns the top-k as
-arrays.
+meta filters, per-field similarity). The segment table is held as
+one term-sorted `exec_wand.BlockTable` in both modes: predecode
+decodes it once at open and reads single terms' positions from it
+later; without predecode a request slices its terms' row runs with
+np.searchsorted and hands them to the kernel, which decodes them on
+numpy columns and returns the top-k as arrays.
+
+A request's result is a pandas frame built straight from those two
+top-k arrays (`_hits_frame`): an int64 `doc_id` block and a float64
+`score` block under a RangeIndex, no copy. pandas' dict constructor
+costs about as much as the search itself at embedded latency.
 
 At 100 TB this is not a replacement for the shard-parallel path:
 it is the per-executor sidecar / edge-cache shape — pin a hot
@@ -36,11 +42,39 @@ from __future__ import annotations
 import threading
 from dataclasses import replace
 from functools import partial
-from typing import Optional
+from typing import Optional, Tuple
 
+import numpy as np
 import pandas as pd
+from pandas._libs.internals import BlockPlacement
+from pandas.core.internals import BlockManager
+from pandas.core.internals.blocks import new_block
 
 from lucille_spark import plans as P
+
+_HIT_COLS = np.array(["doc_id", "score"], dtype=object)
+_HIT_COLS.flags.writeable = False
+_DOC_ID_AT, _SCORE_AT = BlockPlacement(slice(0, 1)), BlockPlacement(slice(1, 2))
+
+
+def _hits_frame(ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    """-> pandas (doc_id, score) over int64 `ids` and float64 `scores`
+    without copying either: the frame's two blocks are handed to
+    pandas directly (the route pyarrow's to_pandas takes), equal to
+    `pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)` at a
+    fraction of its fixed cost. Each frame gets its own column Index
+    (over one shared read-only array), so renaming one frame's
+    columns never reaches another."""
+    n = ids.size
+    mgr = BlockManager(
+        (
+            new_block(ids.reshape(1, n), _DOC_ID_AT, ndim=2),
+            new_block(scores.reshape(1, n), _SCORE_AT, ndim=2),
+        ),
+        [pd.Index._simple_new(_HIT_COLS), pd.RangeIndex(n)],
+        verify_integrity=False,
+    )
+    return pd.DataFrame._from_mgr(mgr, mgr.axes)
 
 
 class LocalSearcher:
@@ -93,7 +127,12 @@ class LocalSearcher:
         from lucille_spark.exec_wand import BlockTable
 
         # ---- the one-time loads (the ONLY Spark jobs) ----
-        self.seg_pdf = self.ix.uncached("segments").toPandas()
+        # the blocks as term-sorted numpy columns, for both modes: the
+        # per-query decode slices them, predecode decodes them once and
+        # reads single terms' positions from them later
+        self._blocks = BlockTable.from_frame(
+            self.ix.uncached("segments").toPandas()
+        )
         self.dl_pdf = (
             self.ix.uncached("doclens").drop("shard")
             .toPandas()
@@ -111,13 +150,9 @@ class LocalSearcher:
             if predecode
             else None
         )
-        # per-query decode: the blocks as term-sorted numpy columns
-        self._blocks = None if predecode else BlockTable.from_frame(self.seg_pdf)
 
     def _predecode(self, full: bool = False):
-        from lucille_spark.exec_wand import (
-            BlockTable, _shard_universe, decode_postings,
-        )
+        from lucille_spark.exec_wand import _shard_universe, decode_postings
 
         meta = [c for c in self.dl_pdf.columns if c not in ("doc_id", "doc_len")]
         sd, _ = _shard_universe(self.avgdl, self.dl_pdf, meta, self.deleted)
@@ -127,9 +162,7 @@ class LocalSearcher:
         # whole-array numpy (lazy positions; ~35 s "full") and cut
         # resident positions from millions of tiny arrays to one
         # array + bounds per term
-        sd.postings = decode_postings(
-            BlockTable.from_frame(self.seg_pdf), bool(full), self.deleted,
-        )
+        sd.postings = decode_postings(self._blocks, bool(full), self.deleted)
         if not full:
             sd.pos_loader = partial(self._load_positions, sd, self.deleted)
         return sd
@@ -140,14 +173,12 @@ class LocalSearcher:
         positions on first phrase use with that same mask (so the
         ids match the resident posting's and its score memo) and
         swap the enriched Posting into `sd` (memoized there)."""
-        from lucille_spark.exec_wand import BlockTable, decode_postings
+        from lucille_spark.exec_wand import decode_postings
 
-        rows = self.seg_pdf[self.seg_pdf["term"] == term]
-        p = decode_postings(
-            BlockTable.from_frame(rows), True, deleted
-        ).get(str(term))
-        if p is None:
+        rows = self._blocks.run(term)
+        if rows is None:
             return None
+        p = decode_postings(self._blocks, True, deleted, rows=rows)[term]
         old = sd.postings.get(term)
         if old is not None:
             p.score_memo = old.score_memo
@@ -240,6 +271,16 @@ class LocalSearcher:
         """-> pandas (doc_id, score) sorted by score desc, doc_id
         asc — the embedded twin of WandExecutor.search (same plan,
         same kernel, no Spark job)."""
+        return _hits_frame(*self._top(query, k, synonyms))
+
+    def _top(
+        self, query, k: int, synonyms
+    ) -> Tuple[np.ndarray, np.ndarray]:
+        """-> (doc_ids int64, scores float64) of `query`'s top `k`, in
+        (score desc, doc_id asc) order. The evaluator, kernel and
+        bounds functions are looked up on their modules at each call,
+        so a wrapper patched onto them (perfbench's tracer) sees every
+        request."""
         from lucille_spark.exec_wand import _make_kernel
 
         if self._deletes_version != self.ix.plan_version:
@@ -253,8 +294,7 @@ class LocalSearcher:
             from lucille_spark.eval_local import evaluate, top_k
 
             ids, scores = evaluate(node, sd)
-            ids, scores = top_k(ids, scores, int(k))
-            return pd.DataFrame({"doc_id": ids, "score": scores}, copy=False)
+            return top_k(ids, scores, int(k))
         deleted = self.deleted
         kernel = _make_kernel(
             {"q0": node}, self.avgdl, {"q0": int(k)}, self.prune,
@@ -270,23 +310,27 @@ class LocalSearcher:
         segs = self._blocks.select(*file_prune_bounds(node))
         need_uni = P.needs_universe(node) or deleted is not None
         out = kernel(segs, self.dl_pdf if need_uni else None)
-        return pd.DataFrame(
-            {"doc_id": out["doc_id"], "score": out["score"]}, copy=False
-        )
+        return out["doc_id"], out["score"]
 
     def search_many(
         self, queries, k: int = 10, synonyms=None
     ) -> pd.DataFrame:
-        """N queries in-process -> pandas (query_id, doc_id, score);
-        at embedded latency a plain loop IS the batch path."""
-        frames = []
+        """N queries in-process -> pandas (query_id, doc_id, score),
+        each query's rows in its search order, queries in input order;
+        at embedded latency a plain loop IS the batch path. query_id
+        takes the dtype pandas infers from the ids (object for the
+        default "q0", "q1", ...)."""
         qmap = (
             queries
             if isinstance(queries, dict)
             else {f"q{i}": q for i, q in enumerate(queries)}
         )
-        for qid, q in qmap.items():
-            r = self.search(q, k=k, synonyms=synonyms)
-            r.insert(0, "query_id", qid)
-            frames.append(r)
-        return pd.concat(frames, ignore_index=True)
+        tops = [self._top(q, k, synonyms) for q in qmap.values()]
+        # the empty heads give an empty batch its dtypes
+        out = _hits_frame(
+            np.concatenate([np.empty(0, np.int64), *(i for i, _ in tops)]),
+            np.concatenate([np.empty(0), *(s for _, s in tops)]),
+        )
+        qids = pd.Index(list(qmap)).repeat([i.size for i, _ in tops])
+        out.insert(0, "query_id", qids.to_numpy())
+        return out
